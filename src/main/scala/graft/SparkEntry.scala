@@ -2483,9 +2483,11 @@ object SparkEntry {
 
   /** [[pagerankCtes]] with the per-round dangling-mass term (gr5):
     * each round first folds the total rank parked on nodes with NO
-    * out-edges to dt = S/N, then adds it inside the damped sum —
-    * mirrors `Graph.pageRank(redistributeDangling = true)`'s driver
-    * double round for round. Generated, so query and oracle share one
+    * out-edges to dt = S/N, then adds it inside the damped sum — the
+    * recurrence of `Graph.pageRank(redistributeDangling = true)`. Spark
+    * observes S as a fixed-point (decimal(38,30)) sum, DuckDB sums it in
+    * double; the two differ in the last bits only, far below the 9dp
+    * rounding both sides apply. Generated, so query and oracle share one
     * recursion. */
   private val pagerankDanglingCtes: String = {
     // every r_k is MATERIALIZED: unlike the leak-variant chain (one

@@ -101,8 +101,11 @@ case class TopKLong(valueExpr: Expression, idExpr: Expression, k: Int,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[mutable.TreeSet[(Long, Long)]] {
 
-  private val ord: Ordering[(Long, Long)] =
-    Ordering.by { case (v, id) => (-v, id) }
+  // value desc, id asc — compared, not negated: -Long.MinValue overflows
+  private val ord: Ordering[(Long, Long)] = (a, b) => {
+    val byValue = java.lang.Long.compare(b._1, a._1)
+    if (byValue != 0) byValue else java.lang.Long.compare(a._2, b._2)
+  }
 
   override def createAggregationBuffer(): mutable.TreeSet[(Long, Long)] =
     mutable.TreeSet.empty(ord)

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DecimalType}
 
 /** Graph analytics over id-pair edge frames — the companion of the
   * connected-components propagation in [[Dedup.clustersFromPairs]], for
@@ -21,84 +22,105 @@ object Graph {
     * dangling-sum term (each round's rank gains d·S/N where S is the
     * total rank parked on dangling nodes), restoring true stochastic
     * normalization (ranks sum to 1) for consumers that need calibrated
-    * mass — one extra bounded aggregation per round (an anti-join of
-    * the ≤N-row rank frame against the out-degree keys reduced to ONE
-    * driver double), hash-gated by gr5's oracle.
+    * mass; hash-gated by gr5's oracle.
     *
-    * Scale notes: the node and degree frames are `localCheckpoint`ed once
-    * (same discipline as clustersFromPairs — the ContextCleaner frees
-    * them with the query); each iteration is ONE join keyed on src plus
-    * ONE aggregation shuffle keyed on dst, and the rank frame is
-    * checkpointed per round so the plan stays one iteration deep instead
-    * of nesting. At cluster scale, pre-partition `edges` by src once and
-    * every iteration's join reuses that partitioning.
+    * Cost: the node frame (id, dsts) is ONE aggregation over
+    * edges ∪ (dst, null), checkpointed once; an [[Observation]] on that
+    * job yields N and the dangling count, so no separate count job runs.
+    * Each round is then ONE shuffle: every rank row explodes into its own
+    * zero-contribution row (which carries its adjacency list) plus one
+    * rank/deg message per out-neighbour, and a single groupBy(id) yields
+    * in_sum and the adjacency for the next round. Trade-off: the
+    * adjacency rides the round shuffle (every round re-ships each
+    * node's dst list) instead of being re-joined from a static degree
+    * frame — a join's build side plus a second exchange per round cost
+    * more jobs than those bytes at the scales this pipeline runs.
     *
-    * RETURN CONTRACT (since the optimization rounds): for the default
-    * non-dangling path with iters not a multiple of 8 the returned frame
-    * is a NESTED, unmaterialized plan — a caller that fans the result
-    * into more than one action (or references it in more than one branch
-    * of one plan — Catalyst does not dedup common subplans) re-executes
-    * the remaining iterations per consumer and should `localCheckpoint()`
-    * the result itself. Single-action consumers (the gr1/gr3 queries,
-    * any write) pay the iterations exactly once either way; keeping the
-    * final checkpoint out of this op is what collapsed iters+1 jobs into
-    * one. */
+    * Dangling sum: the redistributing variant checkpoints every round but
+    * the last, and the NEXT round's S is an [[Observation]] on that same
+    * checkpoint job — no anti-join, no extra action. S is summed in fixed
+    * point (decimal(38,30), exact for ranks in [0, 1]) and converted back
+    * to a double, so it cannot depend on task or partition order; round
+    * 1's S (N uniform ranks) is the same fixed-point sum taken on the
+    * driver. A graph with no dangling node skips all of this (S = 0).
+    * Jobs: ≤ 1 per round (the shuffle map stage) for the default path,
+    * ≤ 2 per round (map stage + checkpoint) for the dangling path, plus
+    * a constant for the node frame and the caller's action.
+    *
+    * RETURN CONTRACT: the returned frame is unmaterialized above the
+    * last checkpoint — the last round for the dangling variant, and up to
+    * 7 nested rounds for the default path (which checkpoints every 8th
+    * round to bound the plan depth; with iters a multiple of 8 the result
+    * is itself a checkpoint). A caller that fans the result into more
+    * than one action (or references it in more than one branch of one
+    * plan — Catalyst does not dedup common subplans) re-executes those
+    * rounds per consumer and should `localCheckpoint()` the result
+    * itself. Single-action consumers (the gr queries, any write) pay each
+    * round exactly once. */
   def pageRank(edges: DataFrame, iters: Int = 5, d: Double = 0.85,
       redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 1, "iters >= 1")
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint()
-    val n = nodes.count().toDouble
-    val withDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).cast("double").as("deg")),
-        "src")
-      .localCheckpoint() // (src, dst, deg) — static across iterations
-    val outNodes =
-      if (redistributeDangling)
-        e.select(col("src").as("id")).distinct().localCheckpoint()
-      else null
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+    val dstsType = ArrayType(edges.schema("dst").dataType)
+    val shape = Observation()
+    // one scan of `edges`: each edge yields its source's adjacency entry
+    // and a (dst, null) row so sink-only nodes exist; collect_list skips
+    // the null, so a dangling node gets dsts = []
+    val nodes = edges
+      .select(explode(array(
+        struct(col("src").as("id"), col("dst")),
+        struct(col("dst").as("id"), lit(null).cast(dstsType.elementType)
+          .as("dst")))).as("e"))
+      .groupBy(col("e.id").as("id"))
+      .agg(collect_list(col("e.dst")).as("dsts"))
+      .observe(shape, count(lit(1)).as("n"),
+        count_if(size(col("dsts")) === 0).as("dangling"))
+      .localCheckpoint()
+    val n = shape.get("n").asInstanceOf[Long].toDouble
+    val dangling = shape.get("dangling").asInstanceOf[Long]
+    val redistribute = redistributeDangling && dangling > 0
+    // round 1's dangling sum: `dangling` uniform ranks, summed in the same
+    // fixed point as the observed rounds (Spark casts a double through its
+    // shortest decimal string, as BigDecimal(Double) does)
+    var dt =
+      if (!redistribute) 0.0
+      else (BigDecimal(1.0 / n).setScale(30, BigDecimal.RoundingMode.HALF_UP)
+        * dangling).toDouble / n
+    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"), col("dsts"))
     var it = 0
     while (it < iters) {
-      // total rank parked on dangling nodes this round: one bounded agg
-      // (<= N rank rows anti-joined against the out-degree keys) folded
-      // to a single driver double — the same bounded-collect posture as
-      // the Lloyd centroids. The .head is an ACTION, so the dangling
-      // variant materializes ranks every round regardless (see the
-      // checkpoint note below).
-      val dangTerm =
-        if (!redistributeDangling) 0.0
-        else {
-          val r = ranks.join(outNodes, Seq("id"), "left_anti")
-            .agg(sum(col("rank"))).head
-          (if (r.isNullAt(0)) 0.0 else r.getDouble(0)) / n
-        }
-      val in = withDeg
-        .join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum(col("c")).as("in_sum"))
-      ranks = nodes.join(in, Seq("id"), "left")
-        .select(col("id"), (lit((1 - d) / n) +
-          lit(d) * (coalesce(col("in_sum"), lit(0.0)) + lit(dangTerm)))
-          .as("rank"))
-      // CHECKPOINT POLICY (optimization round, guide §2.4): each round's
-      // rank frame feeds the next round exactly ONCE, so nesting the
-      // iterations into one lineage re-computes nothing — the old
-      // per-round localCheckpoint bought only a shorter plan at the
-      // price of one materialization JOB per round (iters+1 jobs where
-      // one suffices). Nesting is bounded every 8 rounds (plan depth /
-      // re-optimization cost grows with the chain — §3.3's "very large
-      // plans" note), and the dangling variant still checkpoints every
-      // round: its per-round .head action would otherwise re-run the
-      // whole prefix chain once per round (quadratic re-execution).
-      // Same arithmetic either way — results are bit-identical
-      // (oracle-gated gr1/gr3/gr5).
+      val deg = size(col("dsts"))
+      ranks = ranks
+        .select(explode(concat(
+          array(struct(col("id"), lit(0.0).as("c"), col("dsts"))),
+          transform(col("dsts"), v => struct(v.as("id"),
+            (col("rank") / deg).as("c"), lit(null).cast(dstsType)
+              .as("dsts"))))).as("m"))
+        .groupBy(col("m.id").as("id"))
+        .agg(sum(col("m.c")).as("in_sum"),
+          // only the node's own row carries dsts (collect_list skips the
+          // messages' nulls); unlike first(), this keeps a hash aggregate
+          flatten(collect_list(col("m.dsts"))).as("dsts"))
+        .select(col("id"),
+          (lit((1 - d) / n) + lit(d) * (col("in_sum") + lit(dt))).as("rank"),
+          col("dsts"))
       it += 1
-      if (redistributeDangling || it % 8 == 0) ranks = ranks.localCheckpoint()
+      // CHECKPOINT POLICY: each round's rank frame feeds the next round
+      // exactly ONCE, so nesting rounds into one lineage re-computes
+      // nothing; the default path checkpoints every 8 rounds only to
+      // bound plan depth. The dangling path checkpoints every round but
+      // the last, because that job is where the next round's S is
+      // observed.
+      if (redistribute && it < iters) {
+        val mass = Observation()
+        ranks = ranks
+          .observe(mass, sum(when(deg === 0,
+            col("rank").cast(DecimalType(38, 30)))).as("s"))
+          .localCheckpoint()
+        dt = mass.get("s").asInstanceOf[java.math.BigDecimal].doubleValue / n
+      } else if (!redistribute && it % 8 == 0)
+        ranks = ranks.localCheckpoint()
     }
-    ranks
+    ranks.select(col("id"), col("rank"))
   }
 
   /** Per-node triangle counts and local clustering coefficient over a

@@ -33,6 +33,7 @@ object Similarity {
     blockedCache.synchronized(blockedCache.clear())
     edgeCache.clear(Memo.unpersist)
     residCache.clear()
+    sigFrameCache.clear()
   }
 
   /** Session memo for the PORTABLE kNN edge substrate (optimization
@@ -72,7 +73,7 @@ object Similarity {
   private val sigFrameCache = new SessionMemo[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int)]()
 
-  private def portableSigs(embeddings: DataFrame, bits: Int,
+  private[graft] def portableSigs(embeddings: DataFrame, bits: Int,
       dims: Int): DataFrame = {
     def compute = embeddings
       .select(col("vec_id"), portableSigCol(bits, dims).as("sig"))

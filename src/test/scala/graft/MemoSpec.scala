@@ -7,7 +7,8 @@ import graft.ops.{Memo, Pipeline, SessionMemo, Similarity}
 /** Round-19 optimization invariants: the shared SessionMemo discipline
   * (single-flight, staleness replace, bounded retention), the survivor
   * memo's no-text bound (VERDICT #2), the TopKLong exact-int64 ranking
-  * (the rankAdc rewrite), the shared portable-kNN edge substrate
+  * (the rankAdc rewrite) and its int64 extremes, the signature memo's
+  * clear path, the shared portable-kNN edge substrate
   * (VERDICT #4), and the emb3 mean-denominator null-element semantics
   * (ADVICE). */
 class MemoSpec extends GraftSuite {
@@ -128,6 +129,37 @@ class MemoSpec extends GraftSuite {
     assert(out.toSeq == Seq(
       (0L, 0, 9L, big + 1L), (0L, 1, 10L, big + 1L), (0L, 2, 11L, big),
       (1L, 0, 21L, -big), (1L, 1, 20L, -big - 1L)))
+  }
+
+  test("TopKLong orders the int64 extremes: Long.MaxValue ranks first, " +
+      "Long.MinValue last (no negation overflow)") {
+    def top(k: Int) = Seq(
+      (0L, Long.MinValue, 1L), (0L, 0L, 2L), (0L, Long.MaxValue, 3L),
+      (0L, Long.MinValue, 0L), (0L, -1L, 4L))
+      .toDF("qid", "adc", "nid")
+      .groupBy(col("qid"))
+      .agg(graft.functions.TopKAgg.topKLong(col("adc"), col("nid"), k)
+        .as("tk"))
+      .select(explode(col("tk")).as("e"))
+      .select(col("e.id"), col("e.value"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(top(5) == Seq((3L, Long.MaxValue), (2L, 0L), (4L, -1L),
+      (0L, Long.MinValue), (1L, Long.MinValue)))
+    assert(top(2) == Seq((3L, Long.MaxValue), (2L, 0L)))
+  }
+
+  test("clearGraphCache drops the portable signature memo: a post-clear " +
+      "call rebuilds the frame") {
+    val emb = Tables.load(spark, sf, "embeddings")
+    Similarity.clearGraphCache()
+    val a = Similarity.portableSigs(emb, 6, 64)
+    assert(Similarity.portableSigs(emb, 6, 64) eq a,
+      "repeat call must return the memoized frame")
+    Similarity.clearGraphCache()
+    val b = Similarity.portableSigs(emb, 6, 64)
+    assert(!(b eq a), "clearGraphCache must drop the signature memo")
+    assert(b.collect().toSet == a.collect().toSet)
+    Similarity.clearGraphCache()
   }
 
   test("topPrincipalComponent counts element PRESENCE in the mean " +

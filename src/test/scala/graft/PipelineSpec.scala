@@ -2669,6 +2669,79 @@ class PipelineSpec extends GraftSuite {
     assert(ranks(7) == ranks(3))
   }
 
+  test("pagerank determinism: the observed dangling sum is fixed-point, " +
+      "so ranks are bit-identical across input partitionings") {
+    import spark.implicits._
+    // binary tree 1..31 -> 2i, 2i+1: the 32 leaves are dangling; 3 -> 1
+    // and 5 -> 1 close cycles. In-degree <= 2 keeps every per-node in-sum
+    // exact, so only the dangling sum could depend on task order
+    val es = (1L to 31L).flatMap(i => Seq((i, 2 * i), (i, 2 * i + 1))) ++
+      Seq((3L, 1L), (5L, 1L))
+    val edges = es.toDF("src", "dst")
+    def ranks(parts: Int): Map[Long, Double] =
+      Graph.pageRank(edges.repartition(parts), 5,
+        redistributeDangling = true).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // driver reference: the same double arithmetic per round, with the
+    // dangling sum taken exactly in decimal
+    val ids = es.flatMap(e => Seq(e._1, e._2)).distinct
+    val n = ids.size.toDouble
+    val out = es.groupBy(_._1).map { case (v, vs) => v -> vs.size }
+    var ref = ids.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to 5) {
+      val s = ids.filterNot(out.contains)
+        .map(v => BigDecimal(ref(v)).setScale(30,
+          BigDecimal.RoundingMode.HALF_UP)).sum.toDouble
+      val in = es.groupBy(_._2).map { case (v, vs) =>
+        v -> vs.map(e => ref(e._1) / out(e._1)).foldLeft(0.0)(_ + _) }
+      ref = ids.map(v => v -> ((1 - 0.85) / n +
+        0.85 * (in.getOrElse(v, 0.0) + s / n))).toMap
+    }
+    val a = ranks(3)
+    assert(a == ranks(7))
+    assert(a == ref)
+    assert(math.abs(a.values.sum - 1.0) < 1e-9)
+  }
+
+  /** Spark jobs started by `body`. Listener delivery is asynchronous, so
+    * the bus is drained before and after (`listenerBus` is Spark-private
+    * in Scala, public in bytecode). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { body; drain(); started.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("pagerank job budget: one job per round, two with dangling " +
+      "redistribution, plus a constant") {
+    import spark.implicits._
+    // 4 and 5 are dangling
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (3L, 5L))
+      .toDF("src", "dst")
+    val rounds = 5
+    // node frame (map stage + checkpoint) and the caller's collect
+    val constant = 3
+    val plain = jobsOf(Graph.pageRank(edges, rounds).collect())
+    val dangling = jobsOf(Graph.pageRank(edges, rounds,
+      redistributeDangling = true).collect())
+    info(s"jobs at $rounds rounds: plain $plain, dangling $dangling")
+    assert(plain <= rounds + constant, s"plain pagerank ran $plain jobs")
+    assert(dangling <= 2 * rounds + constant,
+      s"dangling pagerank ran $dangling jobs")
+  }
+
   test("r18: signature substrates memoize per session, match the uncached " +
       "compute, and clear with clearMedia") {
     Multimodal.clearMedia()
