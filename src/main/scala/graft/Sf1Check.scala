@@ -134,7 +134,7 @@ object Sf1Check {
           maxHamming = 5, audioMaxHamming = 3, bands = 7)),
       // round-14's d27: the pure-count pre-filter (m >= t·min(na, nb))
       // is an exact bound — prefiltered == brute force. Brute runs the
-      // four-way distinct rollup over the FULL Σ df² join, so this
+      // alignment rollup over the FULL Σ df² join, so this
       // check rides the same rotating quarter stratum as simhash
       ("aligned_containment_prefilter",
         () => ops.Dedup.alignedContainmentPairs(simhashDocs, 3, 0.8),

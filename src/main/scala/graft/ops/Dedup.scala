@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for training-data pipelines: exact, n-gram Jaccard,
@@ -296,42 +296,56 @@ object Dedup {
     * Ref behavior anchor: same role as the reference's keyword-overlap
     * dedup (gmall-realtime-dws/.../split analytics), generalized. */
   /** The SHIFT-CONSISTENT containment rollup shared by d24 (video
-    * frames) and d27 (text shingle positions): given matched POSITION
-    * pairs `cross(doc1 < doc2, k1, k2)` and per-doc position counts
-    * `nf(doc_id, n)`, emit (doc1, doc2, containment, containment_any,
-    * shift) where `shift` is the pair's dominant offset (most frequent
-    * k2−k1, ties to the smallest), `containment` counts only matches
-    * within ±`tol` of it (a true sub-sequence aligns at ONE shift; a
-    * reordered bag scatters), and `containment_any` keeps the any-order
-    * fraction as the diagnostic. Cost: one groupBy + one window + one
-    * four-way distinct aggregate, all over the matched-pair frame —
-    * pair-output-proportional, never corpus-proportional. */
+    * frames), d27 (text shingle positions) and d28 (quote probe): given
+    * matched POSITION pairs `cross(doc1, doc2, k1, k2)` and per-doc
+    * position counts `nf(doc_id, n)`, emit (doc1, doc2, containment,
+    * containment_any, shift) where `shift` is the pair's dominant offset
+    * (most frequent k2−k1, ties to the smallest), `containment` counts
+    * only DISTINCT positions matched within ±`tol` of it (a true
+    * sub-sequence aligns at ONE shift; a reordered bag scatters), and
+    * `containment_any` keeps the any-order fraction as the diagnostic.
+    *
+    * Cost: two shuffles over the matched-pair frame, both aggregations —
+    * pair-output-proportional, never corpus-proportional. The first
+    * groups by (doc1, doc2, shift) into a count and the distinct k1 and
+    * k2 sets; the second groups by pair, takes the dominant shift as
+    * `min(struct(-cnt, shift))` and keeps the per-shift sets, whose
+    * flattened distinct sizes are the four match counts. No window, no
+    * re-join of `cross`, no multi-distinct Expand.
+    *
+    * `countBound` drops, before any set is flattened, every pair whose
+    * total match count m = Σcnt is below t·min(na, nb) (less 1e-9 of fp
+    * slack). Distinct matches never exceed m, so the bound is exact: it
+    * only saves work, and the output is the same either way. */
   private[graft] def shiftConsistentRollup(cross: DataFrame, nf: DataFrame,
-      threshold: Double, tol: Int): DataFrame = {
+      threshold: Double, tol: Int, countBound: Boolean = false): DataFrame = {
     require(tol >= 0, "tol must be non-negative")
-    val shifts = cross
+    val pairs = cross
       .groupBy(col("doc1"), col("doc2"),
         (col("k2") - col("k1")).as("shift"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc1"), col("doc2"))
-          .orderBy(col("cnt").desc, col("shift"))))
-      .where(col("rn") === 1)
-      .select(col("doc1"), col("doc2"), col("shift"))
-    val atShift = abs(col("k2") - col("k1") - col("shift")) <= tol
-    cross.join(shifts, Seq("doc1", "doc2"))
-      .groupBy(col("doc1"), col("doc2"), col("shift"))
-      .agg(countDistinct(when(atShift, col("k1"))).as("ma"),
-        countDistinct(when(atShift, col("k2"))).as("mb"),
-        countDistinct(col("k1")).as("ma_any"),
-        countDistinct(col("k2")).as("mb_any"))
+      .agg(count(lit(1)).as("cnt"), collect_set(col("k1")).as("s1"),
+        collect_set(col("k2")).as("s2"))
+      .groupBy(col("doc1"), col("doc2"))
+      .agg(min(struct((-col("cnt")).as("neg_cnt"), col("shift")))
+          .getField("shift").as("shift"),
+        sum(col("cnt")).as("m"),
+        collect_list(struct(col("shift"), col("s1"), col("s2"))).as("by"))
       .join(nf.select(col("doc_id").as("doc1"), col("n").as("na")), "doc1")
       .join(nf.select(col("doc_id").as("doc2"), col("n").as("nb")), "doc2")
+    val bounded = if (!countBound) pairs else pairs.where(col("m") >=
+      lit(threshold) * least(col("na"), col("nb")) - lit(1e-9))
+    // distinct positions of one side over a list of per-shift sets
+    def matched(side: String, by: Column) =
+      size(array_distinct(flatten(transform(by, _.getField(side)))))
+    val aligned = filter(col("by"),
+      b => abs(b.getField("shift") - col("shift")) <= tol)
+    bounded
       .withColumn("containment",
-        greatest(col("ma") / col("na"), col("mb") / col("nb")))
+        greatest(matched("s1", aligned) / col("na"),
+          matched("s2", aligned) / col("nb")))
       .withColumn("containment_any",
-        greatest(col("ma_any") / col("na"), col("mb_any") / col("nb")))
+        greatest(matched("s1", col("by")) / col("na"),
+          matched("s2", col("by")) / col("nb")))
       .where(col("containment") >= threshold)
       .select(col("doc1"), col("doc2"), col("containment"),
         col("containment_any"), col("shift"))
@@ -355,12 +369,11 @@ object Dedup {
     * (distinct-matched ≤ m, so the bound is exact — no qualifying pair
     * is lost). The count aggregate is map-side combinable with no
     * Expand and no distinct, so the big join never feeds the expensive
-    * stages; the dominant-shift window and four-way distinct rollup
-    * ([[shiftConsistentRollup]]) run on a pair-bounded frame rebuilt
-    * for the (tiny) survivor set only. At web scale, compose: pass the
-    * survivor-generation corpus through LSH first and run this operator
-    * per candidate block (the documented d2/d3 composition); the
-    * operator itself stays exact.
+    * stages; the two-shuffle alignment rollup ([[shiftConsistentRollup]])
+    * runs on a pair-bounded frame rebuilt for the (tiny) survivor set
+    * only. At web scale, compose: pass the survivor-generation corpus
+    * through LSH first and run this operator per candidate block (the
+    * documented d2/d3 composition); the operator itself stays exact.
     *
     * Output (doc1 < doc2, containment, containment_any, shift).
     * `prefilter = false` disables the count bound (brute force) — the
@@ -420,7 +433,7 @@ object Dedup {
     * shingle soup). Bipartite by the d25 discipline: the benchmark side
     * is BROADCAST (eval sets are small by definition), the training
     * positions stream through the shingle probe, and the same
-    * pure-count bound pre-filters before the alignment rollup — output
+    * pure-count bound filters pairs inside the alignment rollup — output
     * contamination-mass-proportional, never corpus-proportional.
     * Output (doc_id [train], bench_id, containment, containment_any,
     * shift). */
@@ -453,28 +466,19 @@ object Dedup {
     * ONLINE probe [[quoteContaminationProbe]]: bipartite aligned
     * containment of train positions (doc1, k1, shingle) against a
     * BROADCAST benchmark position frame (doc2, k2, shingle). `nf` must
-    * carry (doc_id, n) for every id on either side. `prefilter = false`
-    * drops the exact count bound (brute force) — the Sf1Check identity,
-    * same contract as alignedContainmentPairs. */
+    * carry (doc_id, n) for every id on either side.
+    *
+    * The broadcast probe's matches feed [[shiftConsistentRollup]]
+    * directly, with the exact count bound applied inside the rollup, so
+    * the corpus-sized train frame is scanned once and never shuffled by
+    * doc. `prefilter = false` drops that bound (brute force) — the
+    * Sf1Check identity, same contract as alignedContainmentPairs. */
   private def quoteProbeCore(train: DataFrame, bench: DataFrame,
       nf: DataFrame, threshold: Double, tol: Int,
       prefilter: Boolean): DataFrame = {
-    val cross = (if (prefilter) {
-      val surv = train.join(broadcast(bench), "shingle")
-        .groupBy(col("doc1"), col("doc2"))
-        .agg(count(lit(1)).as("m"))
-        .join(nf.select(col("doc_id").as("doc1"), col("n").as("na")),
-          "doc1")
-        .join(nf.select(col("doc_id").as("doc2"), col("n").as("nb")),
-          "doc2")
-        .where(col("m") >=
-          lit(threshold) * least(col("na"), col("nb")) - lit(1e-9))
-        .select(col("doc1"), col("doc2"))
-      surv.join(train, "doc1")
-        .join(broadcast(bench), Seq("doc2", "shingle"))
-    } else train.join(broadcast(bench), "shingle"))
+    val cross = train.join(broadcast(bench), "shingle")
       .select(col("doc1"), col("doc2"), col("k1"), col("k2"))
-    shiftConsistentRollup(cross, nf, threshold, tol)
+    shiftConsistentRollup(cross, nf, threshold, tol, countBound = prefilter)
       .select(col("doc1").as("doc_id"), col("doc2").as("bench_id"),
         col("containment"), col("containment_any"), col("shift"))
   }

@@ -27,8 +27,20 @@ import org.apache.spark.sql.DataFrame
   * (the `requireBenchUnderCap` rule — see [[Memo.filesHashOf]]).
   */
 private[graft] final class SessionMemo[K] {
+  /** One entry. `df` is written under both the holder lock and the map
+    * monitor, `evicted` under the map monitor: an entry dropped from the
+    * map (stale replace, stopped session, clear) is marked evicted there,
+    * and a build that completes afterwards releases its own frame instead
+    * of parking it on a holder nobody can reach. */
   private final class Holder(val filesHash: Int) {
     var df: DataFrame = _
+    var evicted = false
+  }
+  /** Drop `h` from service, releasing its frame if it has one (call
+    * under the map monitor). */
+  private def evict(h: Holder, release: DataFrame => Unit): Unit = {
+    h.evicted = true
+    if (h.df != null) release(h.df)
   }
   private val m = scala.collection.mutable.Map[
     (org.apache.spark.sql.SparkSession, K), Holder]()
@@ -37,28 +49,29 @@ private[graft] final class SessionMemo[K] {
     * runs outside the map monitor (single-flight per key via the holder
     * lock); a stale entry (hash mismatch) is replaced and its frame
     * passed to `release`. A build that THROWS leaves no entry behind
-    * (the next caller retries). */
+    * (the next caller retries). A build whose entry was replaced while
+    * it ran returns its frame to its caller already released. */
   def getOrBuild(session: org.apache.spark.sql.SparkSession, key: K,
       filesHash: Int, build: => DataFrame,
       release: DataFrame => Unit = _ => ()): DataFrame = {
     val holder = m.synchronized {
       m.filterInPlace { case ((s, _), h) =>
         val live = !s.sparkContext.isStopped
-        if (!live && h.df != null) release(h.df)
+        if (!live) evict(h, release)
         live
       }
       m.get((session, key)) match {
         case Some(h) if h.filesHash == filesHash => h
         case stale =>
-          stale.foreach(h => if (h.df != null) release(h.df))
+          stale.foreach(evict(_, release))
           val h = new Holder(filesHash)
           m((session, key)) = h
           h
       }
     }
     holder.synchronized {
-      if (holder.df == null) {
-        try holder.df = build
+      if (holder.df != null) holder.df else {
+        val df = try build
         catch {
           case t: Throwable =>
             m.synchronized {
@@ -67,15 +80,18 @@ private[graft] final class SessionMemo[K] {
             }
             throw t
         }
+        m.synchronized {
+          if (holder.evicted) release(df) else holder.df = df
+        }
+        df
       }
-      holder.df
     }
   }
 
   /** Drop every entry, releasing each live frame (test hygiene — the
     * clearSubstrates contract). */
   def clear(release: DataFrame => Unit = _ => ()): Unit = m.synchronized {
-    m.values.foreach(h => if (h.df != null) release(h.df))
+    m.values.foreach(evict(_, release))
     m.clear()
   }
 

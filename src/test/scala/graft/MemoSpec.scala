@@ -51,6 +51,38 @@ class MemoSpec extends GraftSuite {
     assert(ok.count() == 1)
   }
 
+  test("SessionMemo: a build overtaken by a stale replace releases its " +
+      "own frame, so no frame is orphaned") {
+    val memo = new SessionMemo[String]()
+    val released = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def tag(df: org.apache.spark.sql.DataFrame) = df.collect().head.getString(0)
+    val release = (df: org.apache.spark.sql.DataFrame) => {
+      released.add(tag(df)); ()
+    }
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val proceed = new java.util.concurrent.CountDownLatch(1)
+    @volatile var slow: org.apache.spark.sql.DataFrame = null
+    val builder = new Thread(() => {
+      slow = memo.getOrBuild(spark, "k", 1, {
+        entered.countDown()
+        proceed.await()
+        Seq("old").toDF("v")
+      }, release)
+    })
+    builder.start()
+    entered.await()
+    // the files changed while the first build ran: replace the entry
+    val fresh = memo.getOrBuild(spark, "k", 2, Seq("new").toDF("v"), release)
+    proceed.countDown()
+    builder.join()
+    assert(tag(slow) == "old", "the overtaken caller still gets its frame")
+    assert(released.toArray.toSeq == Seq("old"),
+      "the overtaken build must release its own frame")
+    assert(memo.frames.map(tag) == Seq("new") && (memo.frames.head eq fresh))
+    memo.clear(release)
+    assert(released.toArray.toSeq == Seq("old", "new"))
+  }
+
   test("Memo.filesHashOf: file-backed, data-in-plan, and checkpoint " +
       "leaves memoize; the hash sees file sources through a persisted " +
       "subtree") {

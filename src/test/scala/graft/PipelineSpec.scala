@@ -1794,6 +1794,51 @@ class PipelineSpec extends GraftSuite {
     Dedup.clearSubstrates()
   }
 
+  /** The d28 hand fixture: one benchmark item, a training doc that
+    * quotes it verbatim, one that carries its halves swapped, and an
+    * unrelated one. */
+  private def quoteHand = {
+    import spark.implicits._
+    val q = "alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima"
+    Seq((3L, q), (27L, s"intro words here $q closing words"),
+      (28L, "golf hotel india juliet kilo lima alpha bravo charlie " +
+        "delta echo foxtrot"),
+      (30L, "completely unrelated training words sharing no trigram"))
+      .toDF("doc_id", "text")
+  }
+
+  test("d28 job budget: the quote flags build in a bounded number of " +
+      "Spark jobs") {
+    import graft.ops.Dedup
+    Dedup.clearSubstrates()
+    // measured 13 jobs (the positional substrate, its count and
+    // broadcast stages, the two rollup shuffles, the persisted flags);
+    // the window + self-join rollup behind a separate count prefilter
+    // ran 38
+    val jobs = jobsOf(Dedup.quoteContaminationSplitCheck(quoteHand, 25L)
+      .collect())
+    info(s"d28 cold flags: $jobs jobs")
+    assert(jobs <= 16, s"d28 flags ran $jobs jobs")
+    Dedup.clearSubstrates()
+  }
+
+  test("d28 count bound is exact: prefilter on and off flag the same " +
+      "rows") {
+    import graft.ops.Dedup
+    // at 0.9 the bound drops the swapped-halves doc (8 matches < 9)
+    // before its alignment is computed; brute force computes it and
+    // rejects it on containment
+    def flags(prefilter: Boolean) = Dedup.quoteContaminationSplitCheck(
+        quoteHand, 25L, threshold = 0.9, prefilter = prefilter).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        r.getDouble(3), r.getInt(4))).toSet
+    val on = flags(prefilter = true)
+    assert(on.nonEmpty, "fixture must flag something")
+    assert(on == flags(prefilter = false))
+    Dedup.clearSubstrates()
+  }
+
   test("d29 burn rollup: two quoting docs roll up to one bench row; " +
       "clean items never appear") {
     import spark.implicits._
@@ -2701,27 +2746,6 @@ class PipelineSpec extends GraftSuite {
     assert(a == ranks(7))
     assert(a == ref)
     assert(math.abs(a.values.sum - 1.0) < 1e-9)
-  }
-
-  /** Spark jobs started by `body`. Listener delivery is asynchronous, so
-    * the bus is drained before and after (`listenerBus` is Spark-private
-    * in Scala, public in bytecode). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.incrementAndGet()
-    }
-    drain()
-    sc.addSparkListener(listener)
-    try { body; drain(); started.get }
-    finally sc.removeSparkListener(listener)
   }
 
   test("pagerank job budget: one job per round, two with dangling " +

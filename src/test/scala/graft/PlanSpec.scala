@@ -148,11 +148,20 @@ class PlanSpec extends GraftSuite {
     val p = plan("d27_aligned_containment")
     assert(!p.contains("CartesianProduct"))
     // the Σ df² join must collapse through a two-phase COUNT aggregate
-    // (partial map-side) before any distinct/Expand stage sees it
-    assert("HashAggregate".r.findAllIn(p).size >= 2,
+    // per pair (partial map-side) before the alignment rollup sees it
+    val countAgg = ("""(?<!Object)HashAggregate\(keys=\[doc1#\d+L, """ +
+      """doc2#\d+L\], functions=\[(partial_)?count\(1\)\]""").r
+    val counts = countAgg.findAllMatchIn(p).map(_.start).toSeq
+    assert(counts.size >= 2,
       s"count pre-filter must partial-aggregate:\n${p.take(1200)}")
-    assert(p.contains("Expand"),
-      "the four-way distinct rollup should appear (post-filter)")
+    // the rollup's per-shift set aggregate sits ABOVE the count
+    // pre-filter in the plan tree (it consumes the survivors), and no
+    // multi-distinct Expand is left anywhere
+    val rollup = p.indexOf("collect_set(")
+    assert(rollup >= 0 && rollup < counts.min,
+      "the alignment rollup should appear (post-filter)")
+    assert(!p.contains("Expand"),
+      s"the rollup must not expand rows for distinct counts:\n$p")
     graft.ops.Dedup.clearSubstrates()
   }
 

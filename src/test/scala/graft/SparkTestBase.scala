@@ -17,4 +17,25 @@ object SparkTestBase {
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs started by `body`. Listener delivery is asynchronous, so
+    * the bus is drained before and after (`listenerBus` is Spark-private
+    * in Scala, public in bytecode). */
+  protected def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try { body; drain(); started.get }
+    finally sc.removeSparkListener(listener)
+  }
 }

@@ -109,4 +109,28 @@ class TablesSpec extends GraftSuite {
     }
     assert(problems.isEmpty, problems.mkString("; "))
   }
+
+  test("Tables.load reads every driver table without running a Spark job") {
+    val jobs = jobsOf(Tables.names.foreach(Tables.load(spark, sf, _)))
+    assert(jobs == 0, s"loading ${Tables.names.size} tables ran $jobs jobs")
+  }
+
+  test("footer schemas equal Spark's inferred schemas, for single files " +
+      "and part-file directories") {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    def same(path: String): Unit = assert(
+      Tables.footerSchema(spark, path) == spark.read.parquet(path).schema,
+      s"footer schema diverged from inference at $path")
+    Tables.names.foreach(t => same(s"$sf/$t.parquet"))
+    // a Spark-written directory: part files plus _SUCCESS and .crc files
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer-spec")
+      .resolve("documents.parquet").toString
+    Tables.load(spark, sf, "documents").repartition(3)
+      .write.parquet(dir)
+    val names = new java.io.File(dir).list().toSeq
+    assert(names.count(_.startsWith("part-")) > 1 &&
+      names.contains("_SUCCESS") && names.exists(_.startsWith(".")),
+      s"fixture must hold several part files and hidden files: $names")
+    same(dir)
+  }
 }
