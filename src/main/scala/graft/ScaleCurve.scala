@@ -135,12 +135,7 @@ object ScaleCurve {
         case scala.util.control.NonFatal(e) =>
           println(s"warm pass failed (timed run will show the op): $e")
       }
-      graft.ops.Clustering.clearAssignments()
-      graft.ops.Dedup.clearSubstrates()
-      graft.ops.TextAnalysis.clearScoreCache()
-      graft.ops.Corpus.clearBm25Cache()
-      graft.ops.Similarity.clearGraphCache()
-      graft.ops.Similarity.clearQuantizers()
+      graft.ops.Memo.clearAll()
     }
     val results = scala.collection.mutable.ArrayBuffer
       .empty[(String, Int, Double, Long)]

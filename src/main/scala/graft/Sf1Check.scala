@@ -342,11 +342,7 @@ object Sf1Check {
           val line = s"""{"name":"$name","ok":false,"error":"$msg"}"""
           println(line)
           (line, false)
-      } finally {
-        ops.Dedup.clearSubstrates()
-        ops.Clustering.clearAssignments()
-        ops.Multimodal.clearMedia()
-      }
+      } finally ops.Memo.clearAll()
     }
     val nOk = results.count(_._2)
     val artifact = s"""{"sf_dir":"$sfDir","simhash_stratum":"$stratum",""" +

@@ -43,66 +43,40 @@ object Clustering {
     }.toDF("cid", "i", "m")
   }
 
-  /** Memoized assignments, keyed by (canonicalized input plan, k, iters) —
-    * the Dedup-substrate pattern: ml1/d15/smp7 all consume the same
-    * clustering of the same corpus, so the Lloyd loop runs once per
-    * session per (corpus, k, iters). Values are localCheckpoint'ed
-    * (materialized, lineage-free); `clearAssignments()` drops them.
-    * Computation happens UNDER the cache lock (single-flight): a second
-    * concurrent caller for the same corpus blocks until the first
-    * finishes rather than running a duplicate Lloyd loop and leaking the
-    * loser's checkpointed frame. Staleness caveat (all session memos in
-    * this package share it): keys are canonicalized plans, so re-reading
-    * a path whose files were rewritten mid-session returns assignments
-    * computed from the old bytes — memos assume immutable inputs; call
-    * `clearAssignments()` after mutating a corpus in place. */
-  private val assignCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    DataFrame]()
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+  /** Memoized Lloyd runs, keyed by (canonicalized input plan, k, iters) —
+    * ml1/d15/smp7 all consume the same clustering of the same corpus, so
+    * the Lloyd loop runs once per session per (corpus, k, iters). The
+    * value is the localCheckpoint'ed assignment together with the
+    * final-round centroids it used, so coarse-quantizer consumers
+    * (`Similarity.portableIvfTopK`) rank query-to-cell distances against
+    * EXACTLY those centroids. */
+  private val assignCache =
+    new SessionMemo[(Plan, Int, Int), (DataFrame, Seq[(Int, Seq[Double])])](
+      v => Memo.release(v._1))
 
   /** Pair-frame memo for the SemDeDup family: d15 (pairs) and d16
     * (keepers) share the quadratic within-cluster dot-product stage —
     * the dominant cost — not just the Lloyd loop. */
-  private val pairCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int,
-      Long), DataFrame]()
+  private val pairCache =
+    new SessionMemo[(Plan, Int, Int, Long), DataFrame](Memo.release)
 
-  /** Drop every memoized frame (tests and long sessions clustering many
-    * corpora call this; the blocks are otherwise pinned for the session —
-    * same hygiene contract as `Dedup.clearSubstrates`). */
-  def clearAssignments(): Unit = {
-    assignCache.synchronized(assignCache.clear())
-    pairCache.synchronized(pairCache.clear())
-    centsCache.synchronized(centsCache.clear())
-    scalableCache.synchronized(scalableCache.clear())
-    scalablePairCache.synchronized(scalablePairCache.clear())
-    countCache.synchronized(countCache.clear())
+  private def lloydModel(embeddings: DataFrame, k: Int,
+      iters: Int): (DataFrame, Seq[(Int, Seq[Double])]) = {
+    require(k >= 1 && iters >= 0, "k must be >= 1 and iters >= 0")
+    assignCache.getOrBuild(
+      (embeddings.queryExecution.analyzed.canonicalized, k, iters),
+      embeddings) {
+      MemoLedger.timed("kmeans_assign")(lloydAssign(embeddings, k, iters))
+    }
   }
-
-  /** Final-round centroids memo, same key as `assignCache` — populated by
-    * the Lloyd loop so coarse-quantizer consumers (`Similarity.
-    * portableIvfTopK`) rank query-to-cell distances against EXACTLY the
-    * centroids the assignment used. */
-  private val centsCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    Seq[(Int, Seq[Double])]]()
 
   /** `iters` Lloyd rounds from the deterministic init, then the final
     * assignment against the last (rounded) centroids: (vec_id, cluster).
     */
   def kmeansAssign(embeddings: DataFrame, k: Int = 8,
-      iters: Int = 2): DataFrame = {
-    require(k >= 1 && iters >= 0, "k must be >= 1 and iters >= 0")
-    val cacheKey =
-      (embeddings.queryExecution.analyzed.canonicalized, k, iters)
-    assignCache.synchronized {
-      assignCache.getOrElseUpdate(cacheKey, MemoLedger.timed("kmeans_assign") {
-        val (df, cents) = lloydAssign(embeddings, k, iters)
-        centsCache.synchronized(centsCache(cacheKey) = cents)
-        df
-      })
-    }
-  }
+      iters: Int = 2): DataFrame = lloydModel(embeddings, k, iters)._1
 
   /** The final-round coarse-quantizer model as a (cid, i, m) frame — the
     * same (rounded) centroids `kmeansAssign`'s last assignment used, so a
@@ -111,13 +85,10 @@ object Clustering {
     * CTE). */
   def kmeansCentroids(embeddings: DataFrame, k: Int = 8,
       iters: Int = 2): DataFrame = {
-    val cacheKey =
-      (embeddings.queryExecution.analyzed.canonicalized, k, iters)
-    kmeansAssign(embeddings, k, iters) // ensure the Lloyd loop ran
     val emb = embeddings
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))
-    centroidFrame(emb, centsCache.synchronized(centsCache(cacheKey)))
+    centroidFrame(emb, lloydModel(embeddings, k, iters)._2)
   }
 
   // round(6) as BigDecimal.valueOf/HALF_UP — bit-identical to the SQL
@@ -202,11 +173,9 @@ object Clustering {
   // drops from O(k·dims) to O(√k·dims + (k/√k)·dims) = O(√k·dims).
   // ------------------------------------------------------------------
 
-  /** Memo for [[kmeansAssignScalable]] (single-flight, like
-    * `assignCache`). */
-  private val scalableCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int,
-      Long, Int, Int), DataFrame]()
+  /** Memo for [[kmeansAssignScalable]]'s sampled / two-level path. */
+  private val scalableCache = new SessionMemo[
+    (Plan, Int, Int, Long, Int, Int), DataFrame](Memo.release)
 
   /** Assignable-row-count memo, keyed by canonicalized plan — ONE counting
     * convention for the whole auto family (`scaledK`,
@@ -216,15 +185,12 @@ object Clustering {
     * one count JOB per corpus per session instead of one per call-site
     * per call (the auto path previously re-counted on every invocation,
     * even on memo hits, and again inside the scalable branch). */
-  private val countCache = scala.collection.mutable.Map[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long]()
+  private val countCache = new SessionMemo[Plan, Long]()
 
   private def assignableCount(embeddings: DataFrame): Long = {
     val embNN = embeddings.where(col("embedding").isNotNull)
-    val key = embNN.queryExecution.analyzed.canonicalized
-    countCache.synchronized {
-      countCache.getOrElseUpdate(key, embNN.select(col("vec_id")).count())
-    }
+    countCache.getOrBuild(embNN.queryExecution.analyzed.canonicalized,
+      embNN)(embNN.select(col("vec_id")).count())
   }
 
   /** Driver-side mini-Lloyd over the FINE centroid table (bounded by the
@@ -333,28 +299,24 @@ object Clustering {
       coarseCentroids: Int = 0): DataFrame = {
     require(k >= 1 && iters >= 0, "k must be >= 1 and iters >= 0")
     require(trainCap >= 1, "trainCap must be >= 1")
-    val cacheKey = (embeddings.queryExecution.analyzed.canonicalized, k,
-      iters, trainCap, maxModelCentroids, coarseCentroids)
-    scalableCache.synchronized {
-      scalableCache.getOrElseUpdate(cacheKey, {
-        val embNN = embeddings.where(col("embedding").isNotNull)
-        val n = assignableCount(embeddings)
-        if (n <= trainCap && k <= maxModelCentroids)
-          kmeansAssign(embeddings, k, iters) // memo-shared oracle path
-        else {
-          val sample =
-            if (n <= trainCap) embNN
-            else Sampling.deterministicSample(embNN, "vec_id",
-              trainCap.toDouble / n)
-          val cents = lloydTrain(sample, k, iters)
-          val asg =
-            if (cents.length <= maxModelCentroids) assignFlat(embNN, cents)
-            else twoLevelAssignFrame(embNN, cents,
-              if (coarseCentroids > 0) coarseCentroids
-              else math.ceil(math.sqrt(cents.length.toDouble)).toInt)
-          asg.localCheckpoint()
-        }
-      })
+    val n = assignableCount(embeddings)
+    if (n <= trainCap && k <= maxModelCentroids)
+      kmeansAssign(embeddings, k, iters) // memo-shared oracle path
+    else scalableCache.getOrBuild((embeddings.queryExecution.analyzed
+        .canonicalized, k, iters, trainCap, maxModelCentroids,
+        coarseCentroids), embeddings) {
+      val embNN = embeddings.where(col("embedding").isNotNull)
+      val sample =
+        if (n <= trainCap) embNN
+        else Sampling.deterministicSample(embNN, "vec_id",
+          trainCap.toDouble / n)
+      val cents = lloydTrain(sample, k, iters)
+      val asg =
+        if (cents.length <= maxModelCentroids) assignFlat(embNN, cents)
+        else twoLevelAssignFrame(embNN, cents,
+          if (coarseCentroids > 0) coarseCentroids
+          else math.ceil(math.sqrt(cents.length.toDouble)).toInt)
+      asg.localCheckpoint()
     }
   }
 
@@ -371,20 +333,12 @@ object Clustering {
     * codegen explode-join shape as the k-means distance pass — no
     * interpreted lambda per pair. */
   def semdedupPairs(embeddings: DataFrame, k: Int = 8, iters: Int = 2,
-      threshold: Double = 0.95): DataFrame = {
-    val cacheKey = (embeddings.queryExecution.analyzed.canonicalized, k,
-      iters, java.lang.Double.doubleToLongBits(threshold))
-    // single-flight like assignCache; lock order is always
-    // pairCache -> assignCache (via kmeansAssign below), never reversed
-    pairCache.synchronized {
-      pairCache.getOrElseUpdate(cacheKey,
-        pairsFor(embeddings, k, iters, threshold))
+      threshold: Double = 0.95): DataFrame =
+    pairCache.getOrBuild((embeddings.queryExecution.analyzed.canonicalized,
+      k, iters, java.lang.Double.doubleToLongBits(threshold)), embeddings) {
+      pairsForAssign(embeddings, kmeansAssign(embeddings, k, iters),
+        threshold)
     }
-  }
-
-  private def pairsFor(embeddings: DataFrame, k: Int, iters: Int,
-      threshold: Double): DataFrame =
-    pairsForAssign(embeddings, kmeansAssign(embeddings, k, iters), threshold)
 
   /** Within-cluster cosine pairs over a SUPPLIED assignment frame — the
     * shared pair engine of the fixed-k oracle form and the scalable
@@ -443,11 +397,9 @@ object Clustering {
     math.max(1L, (n + targetClusterSize - 1) / targetClusterSize).toInt
   }
 
-  /** Pair-frame memo for the scalable auto-k path (single-flight, like
-    * `pairCache`). */
-  private val scalablePairCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int,
-      Long, Long, Int), DataFrame]()
+  /** Pair-frame memo for the scalable auto-k path. */
+  private val scalablePairCache = new SessionMemo[
+    (Plan, Int, Int, Long, Long, Int), DataFrame](Memo.release)
 
   /** `semdedupPairs` at corpus-scaled k AND corpus-independent training —
     * the deployed form: cluster COUNT grows with n, cluster SIZE stays
@@ -470,16 +422,11 @@ object Clustering {
       (n + targetClusterSize - 1) / targetClusterSize).toInt
     if (n <= trainCap && k <= maxModelCentroids)
       semdedupPairs(embeddings, k, iters, threshold)
-    else {
-      val key = (embeddings.queryExecution.analyzed.canonicalized, k, iters,
-        java.lang.Double.doubleToLongBits(threshold), trainCap,
-        maxModelCentroids)
-      scalablePairCache.synchronized {
-        scalablePairCache.getOrElseUpdate(key,
-          pairsForAssign(embeddings,
-            kmeansAssignScalable(embeddings, k, iters, trainCap,
-              maxModelCentroids), threshold))
-      }
+    else scalablePairCache.getOrBuild((embeddings.queryExecution.analyzed
+        .canonicalized, k, iters, java.lang.Double.doubleToLongBits(threshold),
+        trainCap, maxModelCentroids), embeddings) {
+      pairsForAssign(embeddings, kmeansAssignScalable(embeddings, k, iters,
+        trainCap, maxModelCentroids), threshold)
     }
   }
 

@@ -185,35 +185,24 @@ object Corpus {
 
   /** Memoized (query_id, doc_id, score) BM25 frame — the shared substrate
     * of the whole retrieval family (r1 top-k, rrf1/r3/r5 fusion+eval, r6
-    * MMR), which previously rebuilt tf/df/dl from parquet per query. Same
-    * session-memo contract as `Dedup.shingleCache`/`TextAnalysis`'s score
-    * memo: canonicalized-plan key (+ the query set + exact k1/b bits),
-    * MEMORY_AND_DISK, immutable inputs assumed. The frame is
+    * MMR), which previously rebuilt tf/df/dl from parquet per query. A
+    * [[SessionMemo]] keyed by the canonicalized plan (+ the query set +
+    * exact k1/b bits), MEMORY_AND_DISK. The frame is
     * |matching docs|·|queries| rows — bounded by the query-term postings,
     * not the corpus. */
-  private val bm25Cache = scala.collection.mutable.Map[
+  private val bm25Cache = new SessionMemo[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[(String, Seq[String])], Long, Long), DataFrame]()
-
-  /** Drop every memoized BM25 frame (same hygiene contract as
-    * `Dedup.clearSubstrates`). */
-  def clearBm25Cache(): Unit = bm25Cache.synchronized {
-    bm25Cache.values.foreach(_.unpersist())
-    bm25Cache.clear()
-  }
+      Seq[(String, Seq[String])], Long, Long), DataFrame](Memo.release)
 
   private def bm25Scores(documents: DataFrame,
       queries: Seq[(String, Seq[String])], k1: Double,
-      b: Double): DataFrame = bm25Cache.synchronized {
-    bm25Cache.getOrElseUpdate(
-      (documents.queryExecution.analyzed.canonicalized, queries,
-        java.lang.Double.doubleToLongBits(k1),
-        java.lang.Double.doubleToLongBits(b)), {
-        val df = bm25ScoresUncached(documents, queries, k1, b)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df
-      })
-  }
+      b: Double): DataFrame =
+    bm25Cache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
+      queries, java.lang.Double.doubleToLongBits(k1),
+      java.lang.Double.doubleToLongBits(b)), documents) {
+      bm25ScoresUncached(documents, queries, k1, b)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   private def bm25ScoresUncached(documents: DataFrame,
       queries: Seq[(String, Seq[String])], k1: Double,

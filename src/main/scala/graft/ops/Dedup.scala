@@ -36,32 +36,10 @@ object Dedup {
     * (P[any] ≈ |shingles|²/2⁶⁵ — ~1e-7 even at 10⁹ distinct shingles,
     * standard for shingle-based dedup at scale). Safe to call repeatedly —
     * an already-cached plan is served from the existing entry. */
-  /** Registry of every frame this object has persisted, so a long-running
-    * session can reclaim the storage deterministically (persists are
-    * MEMORY_AND_DISK and evictable under pressure, so leaving them is
-    * safe — this is hygiene, not a correctness requirement). */
-  private val persistedFrames =
-    scala.collection.mutable.ArrayBuffer[DataFrame]()
-
-  private def registerPersist(df: DataFrame): Unit =
-    persistedFrames.synchronized { persistedFrames += df }
-
-  /** Unpersist every substrate/pair frame this object has cached (shingle
-    * substrates, shingle-set frames, verified pair frames — across all
-    * corpora and parameter combinations seen by this session). */
-  def clearSubstrates(): Unit = persistedFrames.synchronized {
-    persistedFrames.foreach(_.unpersist())
-    persistedFrames.clear()
-  }
-
   private[ops] def shingleCache(documents: DataFrame, n: Int): DataFrame = {
     val sh = shingles(documents, n)
       .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-    if (sh.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerPersist(sh)
-    }
-    sh
+    Memo.persist(sh)
   }
 
   /** Memoized token-array substrate: (doc_id, toks) under the standard
@@ -73,16 +51,12 @@ object Dedup {
   private[ops] def tokenCache(documents: DataFrame): DataFrame = {
     val tok = documents.select(col("doc_id"),
       graft.functions.Text.tokenizeUdf(col("text")).as("toks"))
-    if (tok.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      tok.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerPersist(tok)
-    }
-    tok
+    Memo.persist(tok)
   }
 
   /** Drop the persisted shingle substrate for a corpus (library users
     * running one-shot dedup jobs who want storage back immediately;
-    * `clearSubstrates()` drops everything at once). */
+    * `Memo.clearAll()` drops everything at once). */
   def unpersistShingles(documents: DataFrame, n: Int): Unit =
     shingles(documents, n)
       .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
@@ -157,12 +131,7 @@ object Dedup {
   private[ops] def cachedSets(documents: DataFrame, n: Int,
       threshold: Double): DataFrame = {
     val sets = shingleSets(shingleCache(documents, n), threshold)
-    if (sets.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerPersist(sets)
-      sets.count()
-    }
-    sets
+    Memo.persist(sets, materialize = true)
   }
 
   /** Materialize the dedup substrate (hashed shingles + per-doc shingle
@@ -233,12 +202,7 @@ object Dedup {
     // the verified pair set is tiny (near-dups only) and is re-consumed by
     // dedupedCorpus / dupClusters — persist it once, same barrier pattern.
     val out = pairsFromSets(sets, threshold)
-    if (out.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerPersist(out)
-      out.count()
-    }
-    out
+    Memo.persist(out, materialize = true)
   }
 
   /** PPJoin candidate generation + exact-Jaccard verification over a
@@ -455,11 +419,7 @@ object Dedup {
     // per corpus release, not once per downstream job. The frame is
     // contamination-mass-proportional — persisting it is config-scale
     // storage however large the corpus.
-    if (flags.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      flags.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerPersist(flags)
-    }
-    flags
+    Memo.persist(flags)
   }
 
   /** Shared alignment core of [[quoteContaminationSplitCheck]] and the
@@ -592,11 +552,7 @@ object Dedup {
     // per downstream artifact. The frame is flag-bounded (pairs x
     // shifts x islands) — persisting it is contamination-mass-scale
     // storage however large the corpus.
-    if (spans.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      spans.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerPersist(spans)
-    }
-    spans
+    Memo.persist(spans)
   }
 
   /** Shared span-rebuild core of [[quoteRedactionSpans]] and the
@@ -755,12 +711,7 @@ object Dedup {
       .select(col("doc_id"), col("i"),
         xxhash64(concat_ws(" ", slice(col("toks"), col("i"), lit(n))))
           .as("shingle"))
-    if (memo &&
-        pos.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      pos.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerPersist(pos)
-    }
-    pos
+    if (memo) Memo.persist(pos) else pos
   }
 
   def containmentPairs(documents: DataFrame, n: Int,

@@ -1,77 +1,80 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-/** Shared session-memo machinery for the substrate frames (optimization
-  * round 2): one implementation of the three disciplines every memo in
-  * this package had been re-growing by hand —
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
+
+/** A session memo: the one caching discipline of the engine. Every memo
+  * registers itself with [[Memo]] at construction, so
+  * [[Memo.clearAll]] reaches all of them. Values may be frames, trained
+  * models, codebooks or scalars; `release` frees one value when its
+  * entry is dropped (for frames, [[Memo.release]]).
   *
   *  1. SINGLE-FLIGHT WITHOUT A GLOBAL BUILD LOCK: the map monitor is held
-  *     only for map mutation; the Spark actions of a build run under a
-  *     per-key holder lock, so two sessions (or two different corpora)
-  *     never serialize behind one survivor/decode materialization
-  *     (ADVICE round-18: e3SurvivorsCompute ran inside
-  *     `survivorCache.synchronized`).
+  *     only for map mutation; a build runs under a per-key holder lock,
+  *     so two sessions (or two corpora) never serialize behind one
+  *     materialization.
   *  2. STALENESS-GUARDED, BOUNDED RETENTION: each entry carries the
-  *     sorted-inputFiles hash of its inputs; a lookup whose hash differs
-  *     (a re-read of a GROWN file-backed store canonicalizing equal —
-  *     the streamed-release shape) REPLACES the entry and releases the
-  *     stale frame, instead of either serving stale data (the plan-only
-  *     key trap) or accreting one pinned frame per batch (the
-  *     hash-in-key trap). Bounded: at most one live frame per
-  *     (session, plan, params) key.
-  *  3. STOPPED-SESSION EVICTION on every lookup (the survivorCache /
-  *     sigCache hygiene, applied uniformly).
+  *     [[Memo.filesHashOf]] of its inputs; a lookup whose hash differs
+  *     (a re-read of a GROWN file-backed store canonicalizes equal)
+  *     REPLACES the entry and releases the stale value. At most one live
+  *     value per (session, key).
+  *  3. STOPPED-SESSION EVICTION on every lookup.
   *
-  * Frames that are neither file-backed nor data-in-plan never memoize
-  * (the `requireBenchUnderCap` rule — see [[Memo.filesHashOf]]).
-  */
-private[graft] final class SessionMemo[K] {
-  /** One entry. `df` is written under both the holder lock and the map
-    * monitor, `evicted` under the map monitor: an entry dropped from the
-    * map (stale replace, stopped session, clear) is marked evicted there,
-    * and a build that completes afterwards releases its own frame instead
-    * of parking it on a holder nobody can reach. */
+  * Inputs that are neither file-backed, data-in-plan nor checkpoints
+  * never memoize: [[getOrBuild]] builds afresh for them. */
+private[graft] final class SessionMemo[K, V](
+    release: V => Unit = (_: V) => ()) extends Memo.Registered {
+  /** One entry. `value` is written under both the holder lock and the
+    * map monitor, `evicted` under the map monitor: an entry dropped from
+    * the map (stale replace, stopped session, clear) is marked evicted
+    * there, and a build that completes afterwards releases its own value
+    * instead of parking it on a holder nobody can reach. */
   private final class Holder(val filesHash: Int) {
-    var df: DataFrame = _
+    var value: Option[V] = None
     var evicted = false
   }
-  /** Drop `h` from service, releasing its frame if it has one (call
+  /** Drop `h` from service, releasing its value if it has one (call
     * under the map monitor). */
-  private def evict(h: Holder, release: DataFrame => Unit): Unit = {
+  private def evict(h: Holder): Unit = {
     h.evicted = true
-    if (h.df != null) release(h.df)
+    h.value.foreach(release)
   }
-  private val m = scala.collection.mutable.Map[
-    (org.apache.spark.sql.SparkSession, K), Holder]()
+  private val m = scala.collection.mutable.Map[(SparkSession, K), Holder]()
+  Memo.register(this)
 
-  /** Get-or-build for `key` at input-files state `filesHash`. `build`
-    * runs outside the map monitor (single-flight per key via the holder
-    * lock); a stale entry (hash mismatch) is replaced and its frame
-    * passed to `release`. A build that THROWS leaves no entry behind
-    * (the next caller retries). A build whose entry was replaced while
-    * it ran returns its frame to its caller already released. */
-  def getOrBuild(session: org.apache.spark.sql.SparkSession, key: K,
-      filesHash: Int, build: => DataFrame,
-      release: DataFrame => Unit = _ => ()): DataFrame = {
+  /** Get-or-build for `key` over `inputs` (at least one frame; the first
+    * one's session scopes the entry). A build that THROWS leaves no entry
+    * behind (the next caller retries). A build whose entry was replaced
+    * while it ran returns its value to its caller already released. */
+  def getOrBuild(key: K, inputs: DataFrame*)(build: => V): V =
+    Memo.filesHashOf(inputs: _*) match {
+      case Some(h) => memoized(inputs.head.sparkSession, key, h, build)
+      case None => build
+    }
+
+  private def memoized(session: SparkSession, key: K, filesHash: Int,
+      build: => V): V = {
     val holder = m.synchronized {
       m.filterInPlace { case ((s, _), h) =>
         val live = !s.sparkContext.isStopped
-        if (!live) evict(h, release)
+        if (!live) evict(h)
         live
       }
       m.get((session, key)) match {
         case Some(h) if h.filesHash == filesHash => h
         case stale =>
-          stale.foreach(evict(_, release))
+          stale.foreach(evict)
           val h = new Holder(filesHash)
           m((session, key)) = h
           h
       }
     }
     holder.synchronized {
-      if (holder.df != null) holder.df else {
-        val df = try build
+      holder.value.getOrElse {
+        val v = try build
         catch {
           case t: Throwable =>
             m.synchronized {
@@ -81,34 +84,29 @@ private[graft] final class SessionMemo[K] {
             throw t
         }
         m.synchronized {
-          if (holder.evicted) release(df) else holder.df = df
+          if (holder.evicted) release(v) else holder.value = Some(v)
         }
-        df
+        v
       }
     }
   }
 
-  /** Drop every entry, releasing each live frame (test hygiene — the
-    * clearSubstrates contract). */
-  def clear(release: DataFrame => Unit = _ => ()): Unit = m.synchronized {
-    m.values.foreach(evict(_, release))
+  def clear(): Unit = m.synchronized {
+    m.values.foreach(evict)
     m.clear()
   }
 
-  /** Number of live entries (spec probe). */
   def size: Int = m.synchronized(m.size)
 
-  /** The live frame for `key`, if any (spec probe — never builds). */
-  def peek(session: org.apache.spark.sql.SparkSession,
-      key: K): Option[DataFrame] =
-    m.synchronized(m.get((session, key)).flatMap(h => Option(h.df)))
-
-  /** Every live frame (spec probe — the retention-bound assertions). */
-  def frames: Seq[DataFrame] =
-    m.synchronized(m.values.flatMap(h => Option(h.df)).toSeq)
+  /** Every live value (spec probe). */
+  def values: Seq[V] = m.synchronized(m.values.flatMap(_.value).toSeq)
 }
 
-private[graft] object Memo {
+/** The process-level memo registry and its one clear path, plus the
+  * plan-equality persists: a shared substrate that Spark's CacheManager
+  * serves to every plan-equal query (and re-caches on in-session writes)
+  * is persisted through [[persist]], which records it here. */
+object Memo {
   /** The memoizability + staleness key of a set of input frames: the
     * combined sorted-inputFiles hash when EVERY frame is composed of
     *
@@ -130,11 +128,11 @@ private[graft] object Memo {
     * already substituted InMemoryRelation for any persisted subtree —
     * the persisted span/flag substrates would hide their file sources
     * and with them the staleness signal. */
-  def filesHashOf(dfs: DataFrame*): Option[Int] = {
+  private[graft] def filesHashOf(dfs: DataFrame*): Option[Int] = {
     var h = 1
     var ok = true
     dfs.foreach { df =>
-      val files = scala.collection.mutable.ArrayBuffer.empty[String]
+      val files = ArrayBuffer.empty[String]
       df.queryExecution.analyzed.collectLeaves().foreach {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
           => lr.relation match {
@@ -167,10 +165,87 @@ private[graft] object Memo {
     if (ok) Some(h) else None
   }
 
-  /** Unpersist release for persisted memo values (checkpointed values
-    * need no release — the ContextCleaner frees their blocks when the
-    * frame is garbage collected). */
-  val unpersist: DataFrame => Unit = df => df.unpersist(false)
+  /** What [[clearAll]] empties: every [[SessionMemo]] and the holdout
+    * cap-check LRU. */
+  private[graft] trait Registered {
+    def clear(): Unit
+    def size: Int
+  }
+
+  private val registry =
+    new java.util.concurrent.CopyOnWriteArrayList[Registered]()
+
+  private[graft] def register(r: Registered): Unit = registry.add(r)
+
+  private[graft] def registered: Seq[Registered] =
+    registry.asScala.toSeq
+
+  /** Frames [[persist]] pinned outside any [[scoped]] body. */
+  private val persisted = ArrayBuffer[DataFrame]()
+
+  /** The persist owner of the current thread's innermost [[scoped]]
+    * body, or null. */
+  private val scope = new ThreadLocal[ArrayBuffer[DataFrame]]
+
+  /** Persist `df` MEMORY_AND_DISK unless a plan-equal frame is already
+    * cached, and record it for [[clearAll]] (or for the enclosing
+    * [[scoped]] body). `materialize` runs a count as a barrier, so the
+    * scans inside one later action do not each compute the uncached
+    * plan. */
+  private[graft] def persist(df: DataFrame,
+      materialize: Boolean = false): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      val owner = Option(scope.get).getOrElse(persisted)
+      owner.synchronized(owner += df)
+      if (materialize) df.count()
+    }
+    df
+  }
+
+  /** Run `body` owning its persists: frames [[persist]] pins inside it on
+    * this thread, and frames it passes to the `own` argument (e.g. its
+    * checkpoints), are released when it exits and never reach the
+    * registry. For per-micro-batch work whose frames no later batch
+    * reads. */
+  private[graft] def scoped[T](body: (DataFrame => DataFrame) => T): T = {
+    val outer = scope.get
+    val owned = ArrayBuffer[DataFrame]()
+    scope.set(owned)
+    try body(df => owned.synchronized { owned += df; df })
+    finally {
+      scope.set(outer)
+      owned.foreach(release)
+    }
+  }
+
+  /** Free a frame's storage: its CacheManager entry and, for a
+    * checkpoint, the checkpointed RDD's blocks. A frame whose session
+    * has stopped is skipped (its storage went with the context). */
+  private[graft] def release(df: DataFrame): Unit =
+    if (!df.sparkSession.sparkContext.isStopped) {
+      df.unpersist(false)
+      df.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.unpersist(false)
+        case _ => ()
+      }
+    }
+
+  /** Empty every registered memo and release every registry persist —
+    * the one clear path (tests, scale sweeps, and long sessions that
+    * rewrite a corpus in place). Checkpointed memo values lose their
+    * blocks, so a frame derived from one before the clear must be
+    * materialized before it is used after it. */
+  def clearAll(): Unit = {
+    registry.forEach(_.clear())
+    val frames = persisted.synchronized {
+      val out = persisted.toList
+      persisted.clear()
+      out
+    }
+    frames.foreach(release)
+  }
 }
 
 /** Ledger of time spent BUILDING session-memoized substrates — the
@@ -180,16 +255,29 @@ private[graft] object Memo {
   * plan regressed" from "this query paid a substrate sibling queries then
   * reuse". Build sites wrap their compute in [[MemoLedger.timed]]; the
   * bench drains the ledger after each query and emits a
-  * `substrate_builds` map into bench_out.json. */
+  * `substrate_builds` map into bench_out.json. A nested build (e3's
+  * survivor chain builds its drop lists) bills its seconds to its own
+  * name only: each region records its EXCLUSIVE time, so the per-name
+  * totals never sum past the wall time spent building. */
 private[graft] object MemoLedger {
   private val acc = scala.collection.mutable.LinkedHashMap[String, Double]()
 
+  /** Per thread, the nanoseconds of finished child regions of each open
+    * region, innermost first. */
+  private val open = ThreadLocal.withInitial[List[Array[Long]]](() => Nil)
+
   def timed[T](name: String)(body: => T): T = {
+    val children = Array(0L)
+    open.set(children :: open.get)
     val t0 = System.nanoTime()
     try body
     finally {
-      val dt = (System.nanoTime() - t0) / 1e9
-      acc.synchronized(acc(name) = acc.getOrElse(name, 0.0) + dt)
+      val dt = System.nanoTime() - t0
+      val outer = open.get.tail
+      open.set(outer)
+      outer.headOption.foreach(_(0) += dt)
+      val own = (dt - children(0)) / 1e9
+      acc.synchronized(acc(name) = acc.getOrElse(name, 0.0) + own)
     }
   }
 

@@ -566,46 +566,26 @@ object Multimodal {
     * APNG frame count n_chars/64 + 1. The width/height metadata columns
     * mirror what the encoder wrote — `decode` never reads them
     * (spec-pinned: it re-derives both from the parsed payload). */
-  def toMediaTable(documents: DataFrame): DataFrame = {
-    // session-memoized under the substrate contract (the Clustering
-    // pattern — keyed on the CANONICALIZED input plan because the typed
-    // mapPartitions closure defeats CacheManager plan-equality): six
-    // suite queries (m1/m2/d21/d23/e8/e9) plus compositions all start
-    // from the same encoded media frame, and the encode (filter +
-    // deflate per doc) is the expensive part
-    // keyed on (session, plan), not plan alone: equal parquet reads
-    // canonicalize equal ACROSS SparkSessions, so a plan-only key would
-    // hand a restarted driver a DataFrame bound to the dead session
-    // (fails at action time) — and entries of stopped sessions are
-    // evicted on every call so a long-lived process doesn't pin
-    // MEMORY_AND_DISK storage for sessions that no longer exist
-    Memo.filesHashOf(documents) match {
-      case Some(h) => mediaCache.getOrBuild(documents.sparkSession,
-        documents.queryExecution.analyzed.canonicalized, h,
-        MemoLedger.timed("media_table") {
-          val df = buildMediaTable(documents)
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          df.count() // materialization barrier: one encode pass, not one
-                     // per concurrent scan inside a single action
-          df
-        }, releaseIfLive)
-      case None => buildMediaTable(documents)
+  def toMediaTable(documents: DataFrame): DataFrame =
+    // session-memoized ([[SessionMemo]], keyed on the CANONICALIZED input
+    // plan because the typed mapPartitions closure defeats CacheManager
+    // plan-equality): six suite queries (m1/m2/d21/d23/e8/e9) plus
+    // compositions all start from the same encoded media frame, and the
+    // encode (filter + deflate per doc) is the expensive part
+    mediaCache.getOrBuild(documents.queryExecution.analyzed.canonicalized,
+      documents) {
+      MemoLedger.timed("media_table") {
+        val df = buildMediaTable(documents)
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        df.count() // materialization barrier: one encode pass, not one
+                   // per concurrent scan inside a single action
+        df
+      }
     }
-  }
-
-  /** Unpersist a memo-evicted frame unless its session already died
-    * (unpersist on a stopped context throws). */
-  private val releaseIfLive: DataFrame => Unit = df =>
-    if (!df.sparkSession.sparkContext.isStopped) df.unpersist(false)
-
-  /** Unpersist every media/signature frame this object has memoized. */
-  def clearMedia(): Unit = {
-    mediaCache.clear(releaseIfLive)
-    sigCache.clear(releaseIfLive)
-  }
 
   private val mediaCache = new SessionMemo[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
+    Memo.release)
 
   /** The uncached per-call encode — the session memo above is for the
     * repeated-query batch suite; streaming foreachBatch bodies call this
@@ -808,30 +788,25 @@ object Multimodal {
     * so computing them once per session per corpus IS the deployed
     * shape. Keyed on (session, kind, canonicalized input plan) because
     * the typed mapPartitions closure defeats CacheManager
-    * plan-equality. [[SessionMemo]] discipline (optimization round 2,
-    * ADVICE fix): each entry carries the sorted-inputFiles hash, so a
-    * batch session re-deriving signatures over a GROWN file-backed
-    * store REPLACES the stale frame instead of being served old
-    * signatures silently (the survivorKeyOf rule, applied here);
-    * stopped-session eviction on every call; builds run single-flight
-    * per key outside the global monitor; `clearMedia()` drops these
-    * too. The count() is the materialization barrier: one decode pass,
-    * not one per concurrent scan inside a single action. */
+    * plan-equality. A [[SessionMemo]]: a batch session re-deriving
+    * signatures over a GROWN file-backed store replaces the stale frame
+    * instead of being served old signatures. The count() is the
+    * materialization barrier: one decode pass, not one per concurrent
+    * scan inside a single action. */
   private val sigCache = new SessionMemo[
-    (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]()
+    (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
+    DataFrame](Memo.release)
 
   private def memoSig(kind: String, input: DataFrame)(
       build: => DataFrame): DataFrame =
-    Memo.filesHashOf(input) match {
-      case Some(h) => sigCache.getOrBuild(input.sparkSession,
-        (kind, input.queryExecution.analyzed.canonicalized), h,
-        MemoLedger.timed(s"sig_$kind") {
-          val df = build
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          df.count()
-          df
-        }, releaseIfLive)
-      case None => build
+    sigCache.getOrBuild((kind, input.queryExecution.analyzed.canonicalized),
+      input) {
+      MemoLedger.timed(s"sig_$kind") {
+        val df = build
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        df.count()
+        df
+      }
     }
 
   /** Per-frame brightness profile of every VIDEO payload: (doc_id,

@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
   * prefix sum. Nothing collects to the driver.
   */
 object Pipeline {
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
   /** Returns the packed training corpus: one row per surviving document
     * with (doc_id, lang, n_tok, start_offset, chunk_id).
@@ -108,28 +109,15 @@ object Pipeline {
     * (replace-on-files-change — the streamed compositions re-derive
     * over GROWING landed stores whose re-reads canonicalize equal;
     * accreting hash-in-key entries would leak one pinned frame per
-    * batch). Frames that are neither file-backed nor data-in-plan never
-    * memoize ([[Memo.filesHashOf]]). */
+    * batch). */
   private val survivorIdCache = new SessionMemo[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long, Int,
-      Long,
-      Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])]()
+    (Plan, Long, Int, Long, Option[Plan]), DataFrame](Memo.release)
 
   /** The live survivor-memo frames (spec probe: the VERDICT #2
     * retention bound — memoized survivor frames carry ONLY doc_id,
     * never text). */
   private[graft] def survivorMemoFrames: Seq[DataFrame] =
-    survivorIdCache.frames
-
-  /** Drop the memoized survivor/islands/manifest/delta/drop-list
-    * frames. */
-  def clearSurvivors(): Unit = {
-    survivorIdCache.clear()
-    islandsCache.clear(Memo.unpersist)
-    manifestCache.clear(Memo.unpersist)
-    deltaCache.clear(Memo.unpersist)
-    dropListCache.clear(Memo.unpersist)
-  }
+    survivorIdCache.values
 
   /** Drop-list normalization applied ONCE, here, for every survivor
     * caller: callers pass their RAW flag frame and the chain reduces it
@@ -144,28 +132,21 @@ object Pipeline {
       benchmarkMaxId: Long, minChars: Int, sampleFrac: Double,
       extraDropsRaw: Option[DataFrame]): DataFrame = {
     val extraDrops = extraDropsRaw.map(normDrops)
-    val fh = Memo.filesHashOf((documents +: extraDrops.toSeq): _*)
-    fh match {
-      case Some(h) =>
-        val ids = survivorIdCache.getOrBuild(documents.sparkSession,
-          (documents.queryExecution.analyzed.canonicalized,
-            benchmarkMaxId, minChars,
-            java.lang.Double.doubleToLongBits(sampleFrac),
-            extraDrops.map(_.queryExecution.analyzed.canonicalized)), h,
-          MemoLedger.timed("e3_survivor_ids") {
-            e3SurvivorChain(documents, benchmarkMaxId, minChars,
-              sampleFrac, extraDrops)
-              .select(col("doc_id")).localCheckpoint()
-          })
-        // payload re-attach: all of `documents`' columns, survivor rows
-        // only (doc_id is the corpus key, so the semi-join is a filter)
-        documents.join(ids, Seq("doc_id"), "left_semi")
-      case None =>
-        // unmemoizable inputs: the old contract — full chain, one
-        // materialization, callers fan out of the checkpoint
-        e3SurvivorChain(documents, benchmarkMaxId, minChars, sampleFrac,
-          extraDrops).localCheckpoint()
+    val ids = survivorIdCache.getOrBuild(
+      (documents.queryExecution.analyzed.canonicalized,
+        benchmarkMaxId, minChars,
+        java.lang.Double.doubleToLongBits(sampleFrac),
+        extraDrops.map(_.queryExecution.analyzed.canonicalized)),
+      (documents +: extraDrops.toSeq): _*) {
+      MemoLedger.timed("e3_survivor_ids") {
+        e3SurvivorChain(documents, benchmarkMaxId, minChars,
+          sampleFrac, extraDrops)
+          .select(col("doc_id")).localCheckpoint()
+      }
     }
+    // payload re-attach: all of `documents`' columns, survivor rows
+    // only (doc_id is the corpus key, so the semi-join is a filter)
+    documents.join(ids, Seq("doc_id"), "left_semi")
   }
 
   /** The three CORE drop lists of the e3 curation chain, memoized
@@ -365,34 +346,26 @@ object Pipeline {
     * (the streamed compositions re-read growing flag stores — a files
     * change replaces the entry instead of serving stale islands or
     * accreting one per batch). */
-  private val islandsCache = new SessionMemo[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+  private val islandsCache = new SessionMemo[Plan, DataFrame](
+    // a files change invalidates every manifest/delta derived from the
+    // old islands checkpoint — their keys carry its RDD identity and
+    // would never be looked up again, so drop them rather than pinning
+    // orphans for the session
+    df => { Memo.release(df); manifestCache.clear(); deltaCache.clear() })
 
-  /** [[unionTokenSpans]] through the islands memo. `checkpointFallback`
-    * preserves the e16/e19 seams' materialization barrier when the span
-    * plan is unmemoizable (neither file-backed nor data-in-plan): those
-    * seams fan the islands into manifest AND splice, and Catalyst does
-    * not dedup common subplans. */
-  private[graft] def sharedIslands(spanPlan: DataFrame,
-      checkpointFallback: Boolean = false): DataFrame =
-    Memo.filesHashOf(spanPlan) match {
-      case Some(h) => islandsCache.getOrBuild(spanPlan.sparkSession,
-        spanPlan.queryExecution.analyzed.canonicalized, h,
-        // checkpoint, not persist: consumers (and the manifest/delta
-        // memo keys) see a three-line ExistingRDD scan instead of the
-        // full span-derivation body re-printed and re-canonicalized at
-        // every leg (the audit5 plan-size pathology, guide §3.3)
-        MemoLedger.timed("span_islands") {
-          unionTokenSpans(spanPlan).localCheckpoint()
-        },
-        // a files change invalidates every manifest/delta derived from
-        // the old islands checkpoint — their keys carry its RDD
-        // identity and would never be looked up again, so drop them
-        // rather than pinning orphans for the session
-        _ => { manifestCache.clear(); deltaCache.clear() })
-      case None =>
-        val raw = unionTokenSpans(spanPlan)
-        if (checkpointFallback) raw.localCheckpoint() else raw
+  /** [[unionTokenSpans]] through the islands memo. */
+  private[graft] def sharedIslands(spanPlan: DataFrame): DataFrame =
+    islandsCache.getOrBuild(spanPlan.queryExecution.analyzed.canonicalized,
+      spanPlan) {
+      // checkpoint, not persist: consumers (and the manifest/delta memo
+      // keys) see a three-line ExistingRDD scan instead of the full
+      // span-derivation body re-printed and re-canonicalized at every
+      // leg (the audit5 plan-size pathology, guide §3.3); the e16/e19
+      // seams fan the islands into manifest AND splice, and Catalyst
+      // does not dedup common subplans
+      MemoLedger.timed("span_islands") {
+        unionTokenSpans(spanPlan).localCheckpoint()
+      }
     }
 
   /** Session memo for the PACKED RELEASE MANIFESTS (optimization round
@@ -405,10 +378,7 @@ object Pipeline {
     * drop publishes. Key: (docs plan, islands plan, drops plan, params);
     * staleness/bound via [[SessionMemo]] like every memo here. */
   private val manifestCache = new SessionMemo[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
-      Long, Int, Long, Int)]()
+    (Plan, Plan, Option[Plan], Long, Int, Long, Int), DataFrame](Memo.release)
 
   private def packedManifestCompute(documents: DataFrame,
       islands: DataFrame, extraDrops: Option[DataFrame],
@@ -430,27 +400,22 @@ object Pipeline {
       islands: DataFrame, extraDrops: Option[DataFrame],
       benchmarkMaxId: Long, minChars: Int, sampleFrac: Double,
       seqLen: Int): DataFrame = {
-    val fh = Memo.filesHashOf(
-      (documents +: islands +: extraDrops.toSeq): _*)
-    fh match {
-      case Some(h) => manifestCache.getOrBuild(documents.sparkSession,
-        (documents.queryExecution.analyzed.canonicalized,
-          islands.queryExecution.analyzed.canonicalized,
-          extraDrops.map(_.queryExecution.analyzed.canonicalized),
-          benchmarkMaxId, minChars,
-          java.lang.Double.doubleToLongBits(sampleFrac), seqLen), h,
-        // localCheckpoint, NOT persist: a persisted manifest prints its
-        // whole cached-plan body at EVERY consuming join leg (the
-        // audit5 8.8k-line-dump pathology, guide §3.3's plan-size note)
-        // and Catalyst re-canonicalizes that body per reference; the
-        // checkpoint is the same one eager materialization but enters
-        // consumer plans as a three-line ExistingRDD scan
-        MemoLedger.timed("release_manifest") {
-          packedManifestCompute(documents, islands, extraDrops,
-            benchmarkMaxId, minChars, sampleFrac, seqLen).localCheckpoint()
-        })
-      case None => packedManifestCompute(documents, islands, extraDrops,
-        benchmarkMaxId, minChars, sampleFrac, seqLen)
+    manifestCache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
+      islands.queryExecution.analyzed.canonicalized,
+      extraDrops.map(_.queryExecution.analyzed.canonicalized),
+      benchmarkMaxId, minChars,
+      java.lang.Double.doubleToLongBits(sampleFrac), seqLen),
+      (documents +: islands +: extraDrops.toSeq): _*) {
+      // localCheckpoint, NOT persist: a persisted manifest prints its
+      // whole cached-plan body at EVERY consuming join leg (the audit5
+      // 8.8k-line-dump pathology, guide §3.3's plan-size note) and
+      // Catalyst re-canonicalizes that body per reference; the
+      // checkpoint is the same one eager materialization but enters
+      // consumer plans as a three-line ExistingRDD scan
+      MemoLedger.timed("release_manifest") {
+        packedManifestCompute(documents, islands, extraDrops,
+          benchmarkMaxId, minChars, sampleFrac, seqLen).localCheckpoint()
+      }
     }
   }
 
@@ -460,19 +425,15 @@ object Pipeline {
     * signatures to re-derive identical pair-mass-bounded id lists.
     * Tiny frames; same staleness/bound discipline as every memo here. */
   private val dropListCache = new SessionMemo[
-    (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Int, Long)]()
+    (String, Plan, Int, Int, Long), DataFrame](Memo.release)
 
   private def memoDropList(tag: String, documents: DataFrame, a: Int,
       b: Int, benchMaxId: Long)(build: => DataFrame): DataFrame =
-    Memo.filesHashOf(documents) match {
-      case Some(h) => dropListCache.getOrBuild(documents.sparkSession,
-        (tag, documents.queryExecution.analyzed.canonicalized, a, b,
-          benchMaxId), h,
-        // checkpoint, not persist — the plan-print/canonicalization
-        // argument on the manifest memo applies to every funnel leg
-        MemoLedger.timed(tag)(build.localCheckpoint()))
-      case None => build
+    dropListCache.getOrBuild((tag, documents.queryExecution.analyzed
+      .canonicalized, a, b, benchMaxId), documents) {
+      // checkpoint, not persist — the plan-print/canonicalization
+      // argument on the manifest memo applies to every funnel leg
+      MemoLedger.timed(tag)(build.localCheckpoint())
     }
 
   /** E15 — the REDACTED TEXT itself: the surgical family finally
@@ -548,24 +509,19 @@ object Pipeline {
     * re-running the offsets semi-join + interval lift + interpreted
     * fold. Tiny (flagged docs only); same staleness/bound discipline
     * as every memo here. */
-  private val deltaCache = new SessionMemo[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]()
+  private val deltaCache =
+    new SessionMemo[(Plan, Plan), DataFrame](Memo.release)
 
   /** [[redactedTextFromSpans]] from PRECOMPUTED merged islands — the
     * island-sharing twin of [[redactPackFromIslands]] (see there),
     * memo-backed per (documents, islands). */
   private[graft] def redactedTextFromIslands(documents: DataFrame,
       merged: DataFrame): DataFrame =
-    Memo.filesHashOf(documents, merged) match {
-      case Some(h) => deltaCache.getOrBuild(documents.sparkSession,
-        (documents.queryExecution.analyzed.canonicalized,
-          merged.queryExecution.analyzed.canonicalized), h,
-        MemoLedger.timed("redaction_delta") {
-          redactedTextFromIslandsCompute(documents, merged)
-            .localCheckpoint()
-        })
-      case None => redactedTextFromIslandsCompute(documents, merged)
+    deltaCache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
+      merged.queryExecution.analyzed.canonicalized), documents, merged) {
+      MemoLedger.timed("redaction_delta") {
+        redactedTextFromIslandsCompute(documents, merged).localCheckpoint()
+      }
     }
 
   private def redactedTextFromIslandsCompute(documents: DataFrame,
@@ -917,7 +873,7 @@ object Pipeline {
     // ONE island derivation shared by manifest and splice — now the
     // session-memoized islands frame (persisted; the checkpoint fallback
     // keeps the barrier when the span plan is unmemoizable)
-    val islands = sharedIslands(spanPlan, checkpointFallback = true)
+    val islands = sharedIslands(spanPlan)
     splicedText(documents, islands,
       surgicalCorpusFromIslands(documents, islands, benchmarkMaxId,
           minChars, sampleFrac)
@@ -989,7 +945,7 @@ object Pipeline {
       sampleFrac: Double = 0.5): DataFrame = {
     // ONE island derivation shared by manifest and splice — the e16
     // discipline (see surgicalCorpusTextWithSpans)
-    val islands = sharedIslands(spanPlan, checkpointFallback = true)
+    val islands = sharedIslands(spanPlan)
     splicedText(documents, islands,
       fullReleaseFromIslandsAndDrops(documents, islands, drops,
           benchmarkMaxId, minChars, sampleFrac)
@@ -1012,32 +968,21 @@ object Pipeline {
     * Thresholds compare the same 6dp-rounded values both engines already
     * hash-match per-operator, so the composed filter is oracle-exact.
     *
-    * Session-memoized (plan-equality keyed, single-flight, the Dedup-
-    * substrate pattern): FOUR queries consume this keep-set (e5 itself,
+    * Session-memoized ([[SessionMemo]]): FOUR queries consume this keep-set (e5 itself,
     * e6 packing, e7 bucketing, e8 media curation) — at scale a curation
     * run materializes its keep-set once per corpus release, not once per
     * downstream job, and the frame is keep-set-sized (4 narrow columns),
-    * cheap to pin. `clearCurated()` drops the memos. */
+    * cheap to pin. */
   def curatedCorpus(documents: DataFrame, minScore: Double = 0.45,
-      maxDupFrac: Double = 0.5): DataFrame = {
-    val key = (documents.queryExecution.analyzed.canonicalized,
+      maxDupFrac: Double = 0.5): DataFrame =
+    curatedCache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
       java.lang.Double.doubleToLongBits(minScore),
-      java.lang.Double.doubleToLongBits(maxDupFrac))
-    curatedCache.synchronized {
-      curatedCache.getOrElseUpdate(key,
-        curatedCompute(documents, minScore, maxDupFrac).localCheckpoint())
+      java.lang.Double.doubleToLongBits(maxDupFrac)), documents) {
+      curatedCompute(documents, minScore, maxDupFrac).localCheckpoint()
     }
-  }
 
-  private val curatedCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long, Long),
-    DataFrame]()
-
-  /** Drop the memoized keep-set frames (test hygiene; long sessions
-    * curating many corpora — the same contract as
-    * `Dedup.clearSubstrates`). */
-  def clearCurated(): Unit =
-    curatedCache.synchronized(curatedCache.clear())
+  private val curatedCache =
+    new SessionMemo[(Plan, Long, Long), DataFrame](Memo.release)
 
   private def curatedCompute(documents: DataFrame, minScore: Double,
       maxDupFrac: Double): DataFrame = {

@@ -21,20 +21,7 @@ import graft.functions.Vectors
   * after. */
 object Similarity {
 
-  /** Registry of persisted kNN-graph frames (same hygiene contract as
-    * `Dedup.clearSubstrates` — persists are evictable, this is for
-    * deterministic reclaim). */
-  private val persistedGraphs =
-    scala.collection.mutable.ArrayBuffer[DataFrame]()
-
-  def clearGraphCache(): Unit = persistedGraphs.synchronized {
-    persistedGraphs.foreach(_.unpersist())
-    persistedGraphs.clear()
-    blockedCache.synchronized(blockedCache.clear())
-    edgeCache.clear(Memo.unpersist)
-    residCache.clear()
-    sigFrameCache.clear()
-  }
+  private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
   /** Session memo for the PORTABLE kNN edge substrate (optimization
     * round 2, VERDICT #4): gr3 (PageRank, k=1) and gr4 (triangle census,
@@ -45,8 +32,8 @@ object Similarity {
     * (cos desc, nid asc) order makes the top-1 of a top-3 THE top-1 by
     * construction). Staleness-guarded and bounded via [[SessionMemo]];
     * k > [[edgeCacheK]] computes directly (no memo). */
-  private val edgeCache = new SessionMemo[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int)]()
+  private val edgeCache =
+    new SessionMemo[(Plan, Int, Int), DataFrame](Memo.release)
   private val edgeCacheK = 3
 
   /** Session memo for the IVFADC RESIDUAL frame (optimization round 2,
@@ -59,8 +46,8 @@ object Similarity {
     * and stable downstream assign/centroid memo keys. At 100 TB this IS
     * the persisted residual frame a real IVFADC deployment encodes from
     * (the scaladoc note on [[portableIvfAdcTopK]]). */
-  private val residCache = new SessionMemo[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int)]()
+  private val residCache =
+    new SessionMemo[(Plan, Int, Int), DataFrame](Memo.release)
 
   /** Session memo for the PORTABLE sign-LSH signature frame
     * (optimization round 2): `portableSigCol` is an interpreted
@@ -70,61 +57,42 @@ object Similarity {
     * on BOTH sides of a self-join, per query. One (vec_id, sig)
     * checkpoint per (corpus, bits, dims) per session; a few bytes per
     * vector. */
-  private val sigFrameCache = new SessionMemo[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int)]()
+  private val sigFrameCache =
+    new SessionMemo[(Plan, Int, Int), DataFrame](Memo.release)
 
   private[graft] def portableSigs(embeddings: DataFrame, bits: Int,
-      dims: Int): DataFrame = {
-    def compute = embeddings
-      .select(col("vec_id"), portableSigCol(bits, dims).as("sig"))
-    Memo.filesHashOf(embeddings) match {
-      case Some(h) => sigFrameCache.getOrBuild(embeddings.sparkSession,
-        (embeddings.queryExecution.analyzed.canonicalized, bits, dims), h,
-        MemoLedger.timed("portable_sigs")(compute.localCheckpoint()))
-      case None => compute
+      dims: Int): DataFrame =
+    sigFrameCache.getOrBuild(
+      (embeddings.queryExecution.analyzed.canonicalized, bits, dims),
+      embeddings) {
+      MemoLedger.timed("portable_sigs") {
+        embeddings.select(col("vec_id"), portableSigCol(bits, dims).as("sig"))
+          .localCheckpoint()
+      }
     }
-  }
 
   /** Session memo for the BLOCKED kNN graph, keyed by (canonicalized
     * corpus plan, k, bits, tables, dims). knnGraph's plan-equality
     * persist cannot work here — the signature localCheckpoint mints a
-    * fresh plan per call — so sim7/gr2 share through an explicit memo
-    * (single-flight under the lock, same staleness caveat as
-    * `quantCache`). */
-  private val blockedCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int,
-      Int, Int), DataFrame]()
+    * fresh plan per call — so sim7/gr2 share through an explicit memo. */
+  private val blockedCache =
+    new SessionMemo[(Plan, Int, Int, Int, Int), DataFrame](Memo.release)
 
   /** Session memo for the IVF coarse quantizer, keyed by (canonicalized
     * corpus plan, nCells) — the `Clustering.assignCache` pattern: sim3
     * and sim5 search the same corpus with the same cell count, so MLlib
     * KMeans trains once per session per (corpus, nCells) instead of per
-    * call. Training runs UNDER the lock (single-flight: a concurrent
-    * caller for the same key waits instead of training a duplicate).
-    * Staleness caveat, shared by every session memo in this package:
-    * the key is the canonicalized logical plan, so re-reading a path
-    * whose FILES were rewritten mid-session returns the model trained
-    * on the old bytes — session memos assume immutable inputs (true of
-    * the bench/verify corpus; call `clearQuantizers` otherwise). */
-  private val quantCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
+    * call. */
+  private val quantCache = new SessionMemo[(Plan, Int),
     org.apache.spark.ml.clustering.KMeansModel]()
 
   /** Session memo for PQ codebooks, keyed by (canonicalized corpus plan,
     * m, k, dims, sampleN) — the `quantCache` discipline applied to the
     * OTHER trained artifact: sim4 and sim5 encode the same corpus with
     * the same PQ geometry, so the sample + driver Lloyd loop runs once
-    * per session per key instead of per call (single-flight under the
-    * lock; same immutable-input staleness caveat as every session memo
-    * here). */
-  private val pqCbCache = scala.collection.mutable.Map[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int,
-      Int, Int), Array[Array[Array[Float]]]]()
-
-  def clearQuantizers(): Unit = {
-    quantCache.synchronized(quantCache.clear())
-    pqCbCache.synchronized(pqCbCache.clear())
-  }
+    * per session per key instead of per call. */
+  private val pqCbCache = new SessionMemo[(Plan, Int, Int, Int, Int),
+    Array[Array[Array[Float]]]]()
 
   private val toVecUdf = udf((a: Seq[Float]) =>
     org.apache.spark.ml.linalg.Vectors.dense(a.map(_.toDouble).toArray))
@@ -136,15 +104,16 @@ object Similarity {
 
   private def coarseQuantizer(embeddings: DataFrame,
       nCells: Int): org.apache.spark.ml.clustering.KMeansModel =
-    quantCache.synchronized {
-      val key = (embeddings.queryExecution.analyzed.canonicalized, nCells)
-      quantCache.getOrElseUpdate(key, MemoLedger.timed("ivf_quantizer") {
+    quantCache.getOrBuild(
+      (embeddings.queryExecution.analyzed.canonicalized, nCells),
+      embeddings) {
+      MemoLedger.timed("ivf_quantizer") {
         new org.apache.spark.ml.clustering.KMeans()
           .setK(nCells).setSeed(42L)
           .setMaxIter(8).setInitMode("random") // coarse cells only — full
           .setFeaturesCol("fv").setPredictionCol("cell") // convergence buys
           .fit(withFeatureVec(embeddings)) // no recall at nprobe<<nCells
-      })
+      }
     }
 
   private def withNorm(df: DataFrame): DataFrame =
@@ -348,11 +317,7 @@ object Similarity {
     // drop, e17/e18/e19/e20 compositions, audit4/audit5 funnels, r7),
     // and at scale the flags are computed once per corpus release. The
     // frame is contamination-mass-proportional — config-scale storage.
-    if (flags.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      flags.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persistedGraphs.synchronized(persistedGraphs += flags)
-    }
-    flags
+    Memo.persist(flags)
   }
 
   /** Bounded over-cap check: counts AT MOST cap+1 rows (a limit-count,
@@ -368,8 +333,8 @@ object Similarity {
     * lands inside Bench's timed region. Only PASSING checks memoize (a
     * failure throws before the put), and pass results are immutable for
     * a given plan: the canonicalized plan pins the exact source, and a
-    * grown holdout is a different plan. `clearCapChecks()` drops the
-    * memo (test hygiene, the `Pipeline.clearCurated` contract). */
+    * grown holdout is a different plan. `Memo.clearAll()` drops the
+    * memo. */
   private[graft] def requireBenchUnderCap(bench: DataFrame,
       maxBenchRows: Long): Unit = {
     // the key carries the sorted input-file list alongside the
@@ -437,13 +402,13 @@ object Similarity {
         size() > 64
     }
 
+  Memo.register(new Memo.Registered {
+    def clear(): Unit = capCheckCache.synchronized(capCheckCache.clear())
+    def size: Int = capCheckCache.synchronized(capCheckCache.size)
+  })
+
   private val capCheckInFlight =
     new java.util.concurrent.ConcurrentHashMap[CapKey, Object]()
-
-  /** Drop the memoized cap-check passes (test hygiene; a long session
-    * re-registering a holdout source whose data changed in place). */
-  def clearCapChecks(): Unit =
-    capCheckCache.synchronized(capCheckCache.clear())
 
   /** The probe core of [[embeddingContaminationSplitCheck]] and the
     * ONLINE leg (`Streams.embeddingContaminationSink`): bipartite cosine
@@ -840,11 +805,7 @@ object Similarity {
     // sim6 (the graph itself) and gr1 (PageRank over it) — the O(N^2)
     // cosine pass runs once per session per (corpus, k)
     val g = rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"))
-    if (g.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persistedGraphs.synchronized(persistedGraphs += g)
-    }
-    g
+    Memo.persist(g)
   }
 
   /** The blocked family's "knob grows with the corpus" rule as code —
@@ -896,12 +857,10 @@ object Similarity {
     * consume the same blocked graph from one bucket-join + cosine pass. */
   def knnGraphBlocked(embeddings: DataFrame, k: Int = 1, bits: Int = 4,
       tables: Int = 16, dims: Int = 64): DataFrame =
-    blockedCache.synchronized {
-      val key = (embeddings.queryExecution.analyzed.canonicalized, k, bits,
-        tables, dims)
-      blockedCache.getOrElseUpdate(key,
-        knnGraphBlockedCompute(embeddings, k, bits, tables, dims)
-          .localCheckpoint())
+    blockedCache.getOrBuild((embeddings.queryExecution.analyzed.canonicalized,
+      k, bits, tables, dims), embeddings) {
+      knnGraphBlockedCompute(embeddings, k, bits, tables, dims)
+        .localCheckpoint()
     }
 
   private def knnGraphBlockedCompute(embeddings: DataFrame, k: Int,
@@ -1047,22 +1006,19 @@ object Similarity {
       dims: Int = 64, k: Int = 1): DataFrame = {
     // gr3/gr4 share one substrate: serve any k <= edgeCacheK by
     // filtering the memoized ranked top-edgeCacheK frame (see edgeCache)
-    val fh = if (k <= edgeCacheK) Memo.filesHashOf(embeddings) else None
-    fh match {
-      case Some(h) =>
-        val ranked = edgeCache.getOrBuild(embeddings.sparkSession,
-          (embeddings.queryExecution.analyzed.canonicalized, bits, dims), h,
-          MemoLedger.timed("portable_knn_edges") {
-            // checkpoint: enters gr3/gr4 plans as a 3-line scan instead
-            // of an InMemoryRelation body per consumer leg
-            portableKnnEdgesRanked(embeddings, bits, dims, edgeCacheK)
-              .localCheckpoint()
-          })
-        ranked.where(col("rn") <= k).select(col("qid"), col("nid"))
-      case None =>
-        portableKnnEdgesRanked(embeddings, bits, dims, k)
-          .select(col("qid"), col("nid"))
-    }
+    if (k > edgeCacheK)
+      portableKnnEdgesRanked(embeddings, bits, dims, k)
+        .select(col("qid"), col("nid"))
+    else edgeCache.getOrBuild(
+      (embeddings.queryExecution.analyzed.canonicalized, bits, dims),
+      embeddings) {
+      MemoLedger.timed("portable_knn_edges") {
+        // checkpoint: enters gr3/gr4 plans as a 3-line scan instead
+        // of an InMemoryRelation body per consumer leg
+        portableKnnEdgesRanked(embeddings, bits, dims, edgeCacheK)
+          .localCheckpoint()
+      }
+    }.where(col("rn") <= k).select(col("qid"), col("nid"))
   }
 
   /** The ranked (qid, rn, nid) form of [[portableKnnEdges]] — the frame
@@ -1515,12 +1471,9 @@ object Similarity {
               .cast("double") / S).as("embedding"))
         .localCheckpoint()
     }
-    val resid = Memo.filesHashOf(embeddings) match {
-      case Some(h) => residCache.getOrBuild(embeddings.sparkSession,
-        (embeddings.queryExecution.analyzed.canonicalized, cells, iters), h,
-        residCompute)
-      case None => residCompute
-    }
+    val resid = residCache.getOrBuild(
+      (embeddings.queryExecution.analyzed.canonicalized, cells, iters),
+      embeddings)(residCompute)
     val cand = portableIvfCandidates(embeddings, queryIds, cells, iters,
       nprobe)
     // the per-(query, probed cell) offset: Σ qi·ci over the full vector,
@@ -1641,12 +1594,11 @@ object Similarity {
     * vec_id. Returns [m][k][subDim] centroids. */
   def pqCodebooks(embeddings: DataFrame, m: Int = 8, k: Int = 16,
       dims: Int = 64, sampleN: Int = 2048): Array[Array[Array[Float]]] =
-    pqCbCache.synchronized {
-      val key = (embeddings.queryExecution.analyzed.canonicalized, m, k,
-        dims, sampleN)
-      pqCbCache.getOrElseUpdate(key, MemoLedger.timed("pq_codebooks") {
+    pqCbCache.getOrBuild((embeddings.queryExecution.analyzed.canonicalized,
+      m, k, dims, sampleN), embeddings) {
+      MemoLedger.timed("pq_codebooks") {
         trainPqCodebooks(embeddings, m, k, dims, sampleN)
-      })
+      }
     }
 
   private def trainPqCodebooks(embeddings: DataFrame, m: Int, k: Int,

@@ -270,11 +270,7 @@ object TextAnalysis {
       .select(col("doc_id"), cnt(col("text")).as("tc"))
       .select(col("doc_id"), col("tc._1").as("ts"), col("tc._2").as("cs"))
       .where(size(col("ts")) > 0)
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-    }
-    df
+    Memo.persist(df, materialize = true)
   }
 
   /** Shared scoring pass of the trigram-LM family: mean add-one-smoothed
@@ -547,33 +543,21 @@ object TextAnalysis {
     * noise ahead of the single double division + sigmoid, which makes the
     * 6dp-rounded score bit-stable across engines and partitionings. */
   def modelQualityScore(documents: DataFrame, vocabSize: Int = 1000,
-      bias: Double = -0.1): DataFrame = scoreCache.synchronized {
+      bias: Double = -0.1): DataFrame =
     // Memoized like Dedup's shingle substrate: the q1 score frame is the
     // shared input of the whole curation family (q1/q2/cal1/cal2/cur1/
     // cur3/boot1/e5/e6/audit1), and it is |docs|·3 narrow columns — the
     // first caller pays the explode+vocab build, everyone after reads the
-    // persisted frame. Keys are canonicalized plans (+ vocabSize + the
-    // exact bias bits); memos assume immutable inputs, the standing
-    // session-memo contract.
-    scoreCache.getOrElseUpdate(
-      (documents.queryExecution.analyzed.canonicalized, vocabSize,
-        java.lang.Double.doubleToLongBits(bias)), {
-        val df = modelQualityScoreUncached(documents, vocabSize, bias)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df
-      })
-  }
+    // persisted frame.
+    scoreCache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
+      vocabSize, java.lang.Double.doubleToLongBits(bias)), documents) {
+      modelQualityScoreUncached(documents, vocabSize, bias)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
-  private val scoreCache = scala.collection.mutable.Map[
+  private val scoreCache = new SessionMemo[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Long),
-    DataFrame]()
-
-  /** Drop every memoized score frame (ScaleCurve and corpus-mutating
-    * sessions — same hygiene contract as `Dedup.clearSubstrates`). */
-  def clearScoreCache(): Unit = scoreCache.synchronized {
-    scoreCache.values.foreach(_.unpersist())
-    scoreCache.clear()
-  }
+    DataFrame](Memo.release)
 
   private def modelQualityScoreUncached(documents: DataFrame,
       vocabSize: Int, bias: Double): DataFrame = {

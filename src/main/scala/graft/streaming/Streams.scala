@@ -802,7 +802,10 @@ object Streams {
     }
     val docCols = Seq("doc_id", "text")
     val batchDocs = batch.select(docCols.map(col): _*)
-    try {
+    // the batch owns its substrates and checkpoints: released when it
+    // ends, so nothing of one batch stays pinned, and no other memo or
+    // concurrent session's substrate is touched
+    graft.ops.Memo.scoped { own =>
       // index slices at the COMMITTED frontier: orphan partitions from a
       // crash after the index write carry bid > lastBid and are pruned
       // away here (bid is a hive partition column of the index layout)
@@ -819,17 +822,17 @@ object Streams {
             spark.read.parquet(shDir)
               .where(col("bid").cast("long") <= lastBid)
               .select(col("doc_id"), col("shingle")))
-      val decisions = graft.ops.Dedup
+      val decisions = own(graft.ops.Dedup
         .incrementalDedupAgainst(corpusFp, corpusSh, batchDocs, n,
           threshold)
-        .localCheckpoint() // one computation feeds audit + accept + index
+        .localCheckpoint()) // one computation feeds audit + accept + index
       // every write below owns the batch's bid=N partition and overwrites
       // it — deterministic classification makes the replay bit-identical
       decisions.write.mode("overwrite").parquet(s"$outDir/bid=$batchId")
-      val accepted = batchDocs
+      val accepted = own(batchDocs
         .join(decisions.where(col("decision") === "keep")
           .select(col("doc_id")), "doc_id")
-        .localCheckpoint() // reused by two index writes + the corpus
+        .localCheckpoint()) // reused by two index writes + the corpus
       graft.ops.Dedup.appendDedupIndex(accepted, fpDir, shDir, batchId, n)
       accepted.write.mode("overwrite").parquet(s"$corpusDir/bid=$batchId")
       // COMMIT: the frontier marker makes everything above visible
@@ -839,7 +842,7 @@ object Streams {
       // so compaction sees the full row set and replays stay no-ops
       if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
         compactDedupIngestState(spark, stateDir)
-    } finally graft.ops.Dedup.clearSubstrates()
+    }
   }
 
   /** Streaming MEDIA ingestion with incremental perceptual dedup — the

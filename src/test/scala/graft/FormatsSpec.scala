@@ -91,7 +91,7 @@ class FormatsSpec extends GraftSuite {
     }
     exec("CREATE TABLE cap_probe (vec_id BIGINT)",
       "INSERT INTO cap_probe VALUES (1), (2), (3)")
-    Similarity.clearCapChecks()
+    graft.ops.Memo.clearAll()
     val bench = spark.read.jdbc(url, "cap_probe", props)
     Similarity.requireBenchUnderCap(bench, 4) // 3 rows under cap: passes
     exec("INSERT INTO cap_probe VALUES (4), (5), (6)")
@@ -100,7 +100,7 @@ class FormatsSpec extends GraftSuite {
     val e = intercept[IllegalArgumentException](
       Similarity.requireBenchUnderCap(grown, 4))
     assert(e.getMessage.contains("broadcast cap"))
-    Similarity.clearCapChecks()
+    graft.ops.Memo.clearAll()
   }
 
   test("OLAP sink tolerates schema evolution across day partitions") {

@@ -1,85 +1,98 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Memo, Pipeline, SessionMemo, Similarity}
 
-/** Round-19 optimization invariants: the shared SessionMemo discipline
-  * (single-flight, staleness replace, bounded retention), the survivor
-  * memo's no-text bound (VERDICT #2), the TopKLong exact-int64 ranking
-  * (the rankAdc rewrite) and its int64 extremes, the signature memo's
-  * clear path, the shared portable-kNN edge substrate
-  * (VERDICT #4), and the emb3 mean-denominator null-element semantics
-  * (ADVICE). */
+/** The memo registry and its invariants: the SessionMemo discipline
+  * (single-flight, staleness replace, bounded retention), grown-store
+  * freshness of the converted memos, the one clear path
+  * (`Memo.clearAll`), the streaming sink's batch-owned persists, the
+  * ledger's exclusive billing of nested builds, the survivor memo's
+  * no-text bound (VERDICT #2), the TopKLong exact-int64 ranking (the
+  * rankAdc rewrite) and its int64 extremes, the shared portable-kNN edge
+  * substrate (VERDICT #4), and the emb3 mean-denominator null-element
+  * semantics (ADVICE). */
 class MemoSpec extends GraftSuite {
   import spark.implicits._
 
+  /** Two reads of one parquet directory, before and after a part file is
+    * appended: equal canonicalized plans over different input files. */
+  private def grownReads(): (DataFrame, DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo")
+      .resolve("t").toString
+    Seq(1L).toDF("v").write.parquet(dir)
+    val before = spark.read.parquet(dir)
+    Seq(2L).toDF("v").write.mode("append").parquet(dir)
+    (before, spark.read.parquet(dir))
+  }
+
+  private def tag(df: DataFrame) = df.collect().head.getString(0)
+
   test("SessionMemo: plan-equal lookups hit; a files change replaces " +
       "and releases the stale frame; clear releases everything") {
-    val memo = new SessionMemo[String]()
     val released = scala.collection.mutable.ArrayBuffer.empty[String]
+    val memo = new SessionMemo[String, DataFrame](df => released += tag(df))
     var builds = 0
     def build(tag: String) = {
       builds += 1
       Seq(tag).toDF("v")
     }
-    val a1 = memo.getOrBuild(spark, "k", 1, build("a"),
-      df => released += df.collect().head.getString(0))
-    val a2 = memo.getOrBuild(spark, "k", 1, build("never"),
-      df => released += df.collect().head.getString(0))
+    val (v1, v2) = grownReads()
+    val a1 = memo.getOrBuild("k", v1)(build("a"))
+    val a2 = memo.getOrBuild("k", v1)(build("never"))
     assert(a2 eq a1) // same filesHash: memo hit, no rebuild
     assert(builds == 1 && released.isEmpty)
-    val b = memo.getOrBuild(spark, "k", 2, build("b"),
-      df => released += df.collect().head.getString(0))
-    assert(b.collect().head.getString(0) == "b")
+    val b = memo.getOrBuild("k", v2)(build("b"))
+    assert(tag(b) == "b")
     assert(builds == 2)
     assert(released == Seq("a")) // stale frame replaced AND released
     assert(memo.size == 1) // bounded: one live entry per key
-    memo.clear(df => released += df.collect().head.getString(0))
+    memo.clear()
     assert(released == Seq("a", "b") && memo.size == 0)
   }
 
   test("SessionMemo: a build that throws leaves no entry (next caller " +
       "retries)") {
-    val memo = new SessionMemo[String]()
+    val memo = new SessionMemo[String, DataFrame]()
+    val in = Seq(1).toDF("v")
     intercept[RuntimeException] {
-      memo.getOrBuild(spark, "k", 1,
-        throw new RuntimeException("boom"))
+      memo.getOrBuild("k", in)(throw new RuntimeException("boom"))
     }
     assert(memo.size == 0)
-    val ok = memo.getOrBuild(spark, "k", 1, Seq(1).toDF("v"))
+    val ok = memo.getOrBuild("k", in)(Seq(1).toDF("v"))
     assert(ok.count() == 1)
   }
 
   test("SessionMemo: a build overtaken by a stale replace releases its " +
       "own frame, so no frame is orphaned") {
-    val memo = new SessionMemo[String]()
     val released = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def tag(df: org.apache.spark.sql.DataFrame) = df.collect().head.getString(0)
-    val release = (df: org.apache.spark.sql.DataFrame) => {
+    val memo = new SessionMemo[String, DataFrame](df => {
       released.add(tag(df)); ()
-    }
+    })
+    val (v1, v2) = grownReads()
     val entered = new java.util.concurrent.CountDownLatch(1)
     val proceed = new java.util.concurrent.CountDownLatch(1)
-    @volatile var slow: org.apache.spark.sql.DataFrame = null
+    @volatile var slow: DataFrame = null
     val builder = new Thread(() => {
-      slow = memo.getOrBuild(spark, "k", 1, {
+      slow = memo.getOrBuild("k", v1) {
         entered.countDown()
         proceed.await()
         Seq("old").toDF("v")
-      }, release)
+      }
     })
     builder.start()
     entered.await()
     // the files changed while the first build ran: replace the entry
-    val fresh = memo.getOrBuild(spark, "k", 2, Seq("new").toDF("v"), release)
+    val fresh = memo.getOrBuild("k", v2)(Seq("new").toDF("v"))
     proceed.countDown()
     builder.join()
     assert(tag(slow) == "old", "the overtaken caller still gets its frame")
     assert(released.toArray.toSeq == Seq("old"),
       "the overtaken build must release its own frame")
-    assert(memo.frames.map(tag) == Seq("new") && (memo.frames.head eq fresh))
-    memo.clear(release)
+    assert(memo.values.map(tag) == Seq("new") && (memo.values.head eq fresh))
+    memo.clear()
     assert(released.toArray.toSeq == Seq("old", "new"))
   }
 
@@ -102,7 +115,7 @@ class MemoSpec extends GraftSuite {
 
   test("survivor memo retention bound: memoized frames carry only " +
       "doc_id — never text (VERDICT #2)") {
-    Pipeline.clearSurvivors()
+    Memo.clearAll()
     val docs = Tables.load(spark, sf, "documents")
     // touch two survivor keys (no-drops and semantic)
     Pipeline.surgicalCorpus(docs).collect()
@@ -111,17 +124,17 @@ class MemoSpec extends GraftSuite {
       assert(f.columns.toSeq == Seq("doc_id"),
         s"survivor memo must be ids-only, got ${f.columns.toSeq}")
     }
-    Pipeline.clearSurvivors()
+    Memo.clearAll()
   }
 
   test("release manifest memo: a memo-served manifest is row-identical " +
       "to a cold rebuild") {
     val docs = Tables.load(spark, sf, "documents")
-    Pipeline.clearSurvivors()
+    Memo.clearAll()
     val cold = Pipeline.surgicalCorpus(docs).collect().sortBy(_.getLong(0))
     val warm = Pipeline.surgicalCorpus(docs).collect().sortBy(_.getLong(0))
     assert(warm.toSeq == cold.toSeq)
-    Pipeline.clearSurvivors()
+    Memo.clearAll()
     val recold = Pipeline.surgicalCorpus(docs).collect().sortBy(_.getLong(0))
     assert(recold.toSeq == cold.toSeq)
   }
@@ -129,17 +142,17 @@ class MemoSpec extends GraftSuite {
   test("portable kNN edge substrate: k=1 edges are the rn=1 filter of " +
       "the shared top-3 frame — identical to a direct k=1 derivation") {
     val emb = Tables.load(spark, sf, "embeddings")
-    Similarity.clearGraphCache()
+    Memo.clearAll()
     val viaMemo = Similarity.portableKnnEdges(emb, k = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val k3 = Similarity.portableKnnEdges(emb, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaMemo.forall(k3.contains)) // top-1 ⊆ top-3
-    Similarity.clearGraphCache()
+    Memo.clearAll()
     val direct = Similarity.portableKnnEdges(emb, k = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(viaMemo.toSeq == direct.toSeq)
-    Similarity.clearGraphCache()
+    Memo.clearAll()
   }
 
   test("TopKLong ranks exact int64 — values adjacent beyond 2^53 stay " +
@@ -180,20 +193,6 @@ class MemoSpec extends GraftSuite {
     assert(top(2) == Seq((3L, Long.MaxValue), (2L, 0L)))
   }
 
-  test("clearGraphCache drops the portable signature memo: a post-clear " +
-      "call rebuilds the frame") {
-    val emb = Tables.load(spark, sf, "embeddings")
-    Similarity.clearGraphCache()
-    val a = Similarity.portableSigs(emb, 6, 64)
-    assert(Similarity.portableSigs(emb, 6, 64) eq a,
-      "repeat call must return the memoized frame")
-    Similarity.clearGraphCache()
-    val b = Similarity.portableSigs(emb, 6, 64)
-    assert(!(b eq a), "clearGraphCache must drop the signature memo")
-    assert(b.collect().toSet == a.collect().toSet)
-    Similarity.clearGraphCache()
-  }
-
   test("topPrincipalComponent counts element PRESENCE in the mean " +
       "denominator — a null element shifts mu like the exploded form " +
       "did (ADVICE round-18)") {
@@ -209,5 +208,131 @@ class MemoSpec extends GraftSuite {
     // non-null-count denominator would give mu0 = 1e6, pc = (0, 1).
     assert(out.map(_._2).toSeq == Seq(0.447214, 0.894427))
     assert(out.map(_._3).distinct.toSeq == Seq(0.999939))
+  }
+
+  test("MemoLedger bills nested builds their exclusive time: the " +
+      "per-name totals never exceed the outer wall time") {
+    ops.MemoLedger.drain()
+    val t0 = System.nanoTime()
+    ops.MemoLedger.timed("outer") {
+      Thread.sleep(30)
+      ops.MemoLedger.timed("inner") {
+        Thread.sleep(30)
+        ops.MemoLedger.timed("innermost")(Thread.sleep(30))
+      }
+      ops.MemoLedger.timed("inner")(Thread.sleep(10))
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val billed = ops.MemoLedger.drain().toMap
+    assert(billed.keySet == Set("outer", "inner", "innermost"),
+      "every nested name must still be recorded")
+    assert(billed.values.sum <= wall,
+      s"nested totals $billed exceed the wall time $wall")
+    assert(billed("outer") >= 0.025 && billed("inner") >= 0.035)
+  }
+
+  test("grown store: curatedCorpus, modelQualityScore and kmeansAssign " +
+      "serve the rows of a freshly planned read after a part file is " +
+      "appended") {
+    Memo.clearAll()
+    val root = java.nio.file.Files.createTempDirectory("graft_grown")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val checks = Seq[(String, String, DataFrame => DataFrame)](
+      ("curatedCorpus", "documents", d => ops.Pipeline.curatedCorpus(d)),
+      ("modelQualityScore", "documents",
+        d => ops.TextAnalysis.modelQualityScore(d)),
+      ("kmeansAssign", "embeddings", d => ops.Clustering.kmeansAssign(d)))
+    val dirs = Seq("documents", "embeddings").map { t =>
+      val dir = root.resolve(t).toString
+      Tables.load(spark, sf, t).write.parquet(dir)
+      t -> dir
+    }.toMap
+    // memoized over the original files
+    val old = checks.map { case (_, t, f) =>
+      rows(f(spark.read.parquet(dirs(t)))) }
+    Seq("documents" -> "doc_id", "embeddings" -> "vec_id").foreach {
+      case (t, id) =>
+        Tables.load(spark, sf, t).withColumn(id, col(id) + 1000000L)
+          .write.mode("append").parquet(dirs(t))
+    }
+    checks.zip(old).foreach { case ((name, t, f), before) =>
+      val grown = spark.read.parquet(dirs(t))
+      // a no-op filter changes the plan key, so this read can only be
+      // served by a build over the grown files
+      val want = rows(f(grown.where(lit(true))))
+      assert(want != before, s"$name: the append must change the output")
+      val got = rows(f(grown))
+      assert(got == want, s"$name served stale rows: ${got.length} rows " +
+        s"(${before.length} before the append), fresh read ${want.length}")
+    }
+    Memo.clearAll()
+  }
+
+  test("streaming dedup sink releases only its own batch's frames: a " +
+      "static substrate stays persisted, and persisted RDDs do not grow") {
+    Memo.clearAll()
+    val docs = Tables.load(spark, sf, "documents")
+    val static = ops.Dedup.jaccardPairs(docs, 3, 0.5)
+    assert(static.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val batches = docs.select(col("doc_id"), col("text"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).grouped(20).toSeq
+    val sc = spark.sparkContext
+    val pinned0 = sc.getPersistentRDDs.size
+    val pinned = batches.take(3).zipWithIndex.map { case (b, bid) =>
+      streaming.Streams.mergeDedupIngest(b.toSeq.toDF("doc_id", "text"),
+        bid.toLong, s"$dir/state", s"$dir/out", 3, 0.5)
+      assert(static.storageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE,
+        s"batch $bid unpersisted a frame it did not persist")
+      sc.getPersistentRDDs.size
+    }
+    assert(pinned.forall(_ <= pinned0),
+      s"persisted RDDs grew across batches: $pinned0 -> $pinned")
+    assert(spark.read.parquet(s"$dir/out").count() == 60)
+    Memo.clearAll()
+  }
+
+  test("Memo.clearAll empties every memo and releases its frames; a cold " +
+      "rerun rebuilds identical rows") {
+    val qs = Seq("e11_quote_decontaminated", "d2_jaccard_pairs",
+      "d15_semdedup_pairs", "sim3_ivf_topk", "sim4_pq_topk",
+      "sim7_blocked_knn", "r1_bm25_topk", "e5_curated_corpus",
+      "gr3_portable_pagerank", "m1_media_features")
+    def run() = qs.map { q =>
+      q -> SparkEntry.queries(q)(spark, sf).collect().map(_.toString)
+        .sorted.toSeq
+    }.toMap
+    val sc = spark.sparkContext
+    Memo.clearAll()
+    val pinned0 = sc.getPersistentRDDs.keySet
+    val cold = run()
+    assert(Memo.registered.exists(_.size > 0))
+    // the checkpoints the memos hold, and every cache built by the run
+    // (cache buffers are the named persisted RDDs; all belong to a memo
+    // or to the persist registry)
+    val checkpoints = Memo.registered.flatMap {
+      case m: SessionMemo[_, _] => m.values
+      case _ => Nil
+    }.flatMap {
+      case df: DataFrame => Some(df)
+      case (df: DataFrame, _) => Some(df)
+      case _ => None
+    }.flatMap(_.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd.id)
+      case _ => None
+    })
+    val caches = sc.getPersistentRDDs.filter { case (id, r) =>
+      !pinned0(id) && r.name != null
+    }.keySet
+    assert(checkpoints.nonEmpty && caches.nonEmpty)
+    Memo.clearAll()
+    assert(Memo.registered.forall(_.size == 0), "a memo kept entries")
+    val left = sc.getPersistentRDDs.keySet
+    assert((checkpoints.toSet ++ caches).intersect(left).isEmpty,
+      "memo frames still pinned after clearAll")
+    val recold = run()
+    qs.foreach(q => assert(recold(q) == cold(q), s"$q changed after clear"))
+    Memo.clearAll()
   }
 }

@@ -343,7 +343,7 @@ class PipelineSpec extends GraftSuite {
       .collect().map(_.toSeq.toList).toSet
     assert(viaIndexed == builtIn,
       "indexed flags through the drops hook must equal the flat e14")
-    ops.Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d31z auto knobs: == fixed probe at the resolved (cells, nprobe); " +
@@ -569,7 +569,7 @@ class PipelineSpec extends GraftSuite {
     assert(got == expected,
       s"zero-residual IVFADC must equal exact integer dot:\n got=$got\n " +
         s"want=$expected")
-    graft.ops.Clustering.clearAssignments()
+    Memo.clearAll()
   }
 
   test("gr4 triangle stats: hand-computed census, canonicalization") {
@@ -1507,10 +1507,7 @@ class PipelineSpec extends GraftSuite {
       .toDF("user_id", "event_type", "ts")
     assert(ops.Aggs.funnelStages(noEvents).collect()
       .map(r => r.getLong(1)).toSeq == Seq(0L, 0L, 0L))
-    Dedup.clearSubstrates() // don't leak the weird-corpus caches
-    graft.ops.Multimodal.clearMedia() // nor the tiny media memos
-    Clustering.clearAssignments() // nor the tiny-frame kmeans memos
-    Pipeline.clearCurated() // nor the weird-corpus keep-set memo
+    Memo.clearAll() // don't leak the weird-corpus caches
   }
 
   test("e8 composition: mediaCuratedCorpus == curatedCorpus minus phash drops") {
@@ -1636,7 +1633,7 @@ class PipelineSpec extends GraftSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(stages.get("media_contaminated").contains(1L),
       s"funnel must attribute the leak to media_contaminated: $stages")
-    Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("d21 phash: planted near-dup images pair up, audio never does") {
@@ -1715,7 +1712,7 @@ class PipelineSpec extends GraftSuite {
     val alt = toMap(
       Multimodal.videoContainmentPairs(hand, 3, 0.8, bands = 6).collect())
     assert(alt == got, "band layouts must produce identical containment")
-    Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("d27 aligned containment: a quote pairs at its offset; swapped " +
@@ -1754,7 +1751,7 @@ class PipelineSpec extends GraftSuite {
     assert(d17.contains((1L, 2L)),
       s"fixture must actually fool set containment: $d17")
     assert(!got.keys.exists(p => p._1 == 4L || p._2 == 4L))
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d28 quote contamination: a verbatim quote flags; the topical " +
@@ -1791,7 +1788,7 @@ class PipelineSpec extends GraftSuite {
       .map(_.getLong(0)).toSet
     assert(d9.contains(28L),
       s"fixture must actually fire the set-overlap test: $d9")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   /** The d28 hand fixture: one benchmark item, a training doc that
@@ -1811,7 +1808,7 @@ class PipelineSpec extends GraftSuite {
   test("d28 job budget: the quote flags build in a bounded number of " +
       "Spark jobs") {
     import graft.ops.Dedup
-    Dedup.clearSubstrates()
+    Memo.clearAll()
     // measured 13 jobs (the positional substrate, its count and
     // broadcast stages, the two rollup shuffles, the persisted flags);
     // the window + self-join rollup behind a separate count prefilter
@@ -1820,7 +1817,7 @@ class PipelineSpec extends GraftSuite {
       .collect())
     info(s"d28 cold flags: $jobs jobs")
     assert(jobs <= 16, s"d28 flags ran $jobs jobs")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d28 count bound is exact: prefilter on and off flag the same " +
@@ -1836,7 +1833,7 @@ class PipelineSpec extends GraftSuite {
     val on = flags(prefilter = true)
     assert(on.nonEmpty, "fixture must flag something")
     assert(on == flags(prefilter = false))
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d29 burn rollup: two quoting docs roll up to one bench row; " +
@@ -1859,7 +1856,7 @@ class PipelineSpec extends GraftSuite {
     // first_train is the smaller id
     assert(got == Map(3L -> ((2L, 1.0, 27L))),
       s"double burn must roll up to (3 -> n_train=2, 1.0, 27): $got")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d30 redaction span covers exactly the planted quote — cut the " +
@@ -1888,7 +1885,7 @@ class PipelineSpec extends GraftSuite {
     val toks = s"$pre $q closing words".split(" ")
     assert(toks.slice(5, 17).mkString(" ") == q,
       "excised slice must reproduce the benchmark item exactly")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d30 surgical: two disjoint runs at the SAME alignment yield two " +
@@ -1923,7 +1920,7 @@ class PipelineSpec extends GraftSuite {
     assert(got.forall { case (_, s, e, _) =>
       !toks.slice(s - 1, e).exists(Set("xx", "yy")) },
       "the innocent replacement prose must not be covered by any span")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d30 surgical: a flagged SHORT quote below the mass floor still " +
@@ -1951,7 +1948,7 @@ class PipelineSpec extends GraftSuite {
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(e12(27L) == 4L && e12(30L) == 0L,
       s"e12 must cut exactly the short quote: $e12")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d30 surgical: the same item quoted twice at TWO offsets gets " +
@@ -1976,7 +1973,7 @@ class PipelineSpec extends GraftSuite {
       assert(toks.slice(s - 1, e).mkString(" ") == q,
         s"excised slice [$s,$e] must reproduce the benchmark item")
     }
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("e12 applies the redaction plan: spans cut, token mass conserved, " +
@@ -2016,7 +2013,7 @@ class PipelineSpec extends GraftSuite {
       s"clean docs must pass through unredacted: $got")
     assert(off27 == 0L && off30 == tok27,
       s"offsets must repack over post-redaction counts: $got")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("e13 surgical release: flagged docs survive REDACTED where e11 " +
@@ -2059,7 +2056,7 @@ class PipelineSpec extends GraftSuite {
     val toks = s"$pad $q trailing remark".split(" ")
     assert(toks.slice(15, 21).mkString(" ") == q,
       "excised slice must reproduce the benchmark item")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("e11 closes the short-quote gap: a fully-quoted 4-shingle bench " +
@@ -2101,7 +2098,7 @@ class PipelineSpec extends GraftSuite {
     // the survivor starts at 0, not at the dropped doc's token mass
     assert(e11.head._3 == 0L,
       s"e11 offsets must repack contiguously: $e11")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d27 restriction law: a candidate frame restricts the output to " +
@@ -2126,7 +2123,7 @@ class PipelineSpec extends GraftSuite {
     assert(got == keep.map(p => p -> full(p)).toMap,
       "restricted run must equal full ∩ candidates " +
         s"(got ${got.keySet} want ${keep.toSet})")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d26 burn report: per-eval-item rollup equals the brute-force " +
@@ -2155,7 +2152,7 @@ class PipelineSpec extends GraftSuite {
         .contains((brute.size.toLong, 0, brute.min)),
       s"burn rollup must match the brute flag set $brute: $got")
     assert(got.size == 1, s"clean bench items must not appear: $got")
-    Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("d24 temporal consistency: a shuffled bag of the same frames " +
@@ -2319,7 +2316,7 @@ class PipelineSpec extends GraftSuite {
     } yield (t, b, "visual") -> java.lang.Long.bitCount(ts ^ bs)
     assert(got.view.filterKeys(_._3 == "visual").toMap == bruteVis.toMap,
       "banded visual leg must equal brute force")
-    Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("scalable assign: two-level at coarse=k equals flat exactly") {
@@ -2336,7 +2333,7 @@ class PipelineSpec extends GraftSuite {
       trainCap = Long.MaxValue, maxModelCentroids = 0,
       coarseCentroids = 16))
     assert(two == flat, "coarse=k two-level must equal the flat argmin")
-    Clustering.clearAssignments()
+    Memo.clearAll()
   }
 
   test("scalable assign: auto-coarse two-level agrees on separated clusters") {
@@ -2357,7 +2354,7 @@ class PipelineSpec extends GraftSuite {
       trainCap = Long.MaxValue, maxModelCentroids = 0)) // auto g = 2
     assert(two == flat,
       "auto-coarse two-level must match flat on separated clusters")
-    Clustering.clearAssignments()
+    Memo.clearAll()
   }
 
   test("scalable assign: capped training sample still assigns every vector") {
@@ -2370,12 +2367,12 @@ class PipelineSpec extends GraftSuite {
     val a1 = Clustering.kmeansAssignScalable(emb, 8, 2, trainCap = 64L)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(a1.size == n, "every vector must receive an assignment")
-    Clustering.clearAssignments()
+    Memo.clearAll()
     // content-stable sampling: a fresh run reproduces the assignment
     val a2 = Clustering.kmeansAssignScalable(emb, 8, 2, trainCap = 64L)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(a2 == a1, "sample-trained assignment must be deterministic")
-    Clustering.clearAssignments()
+    Memo.clearAll()
   }
 
   test("scalable assign: an emptied coarse cell can never drop rows") {
@@ -2401,18 +2398,18 @@ class PipelineSpec extends GraftSuite {
     assert(asg.length == 7,
       s"all 7 vectors must be assigned, got ${asg.length}")
     assert(asg.map(_.getLong(0)).toSet == (0L to 6L).toSet)
-    Clustering.clearAssignments()
+    Memo.clearAll()
   }
 
-  test("dedup substrate registry: clearSubstrates reclaims persisted frames") {
+  test("dedup substrate registry: Memo.clearAll reclaims persisted frames") {
     val before = Dedup.jaccardPairs(docs, 3, 0.5)
     val pairsBefore = pairSet(before)
     assert(before.storageLevel.useMemory || before.storageLevel.useDisk,
       "pair frame should be persisted")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
     assert(before.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE,
-      "clearSubstrates must unpersist the pair frame")
+      "Memo.clearAll must unpersist the pair frame")
     // rebuild works and matches (registry refills on the way)
     assert(pairSet(Dedup.jaccardPairs(docs, 3, 0.5)) == pairsBefore)
   }
@@ -2432,7 +2429,7 @@ class PipelineSpec extends GraftSuite {
     val p = again.queryExecution.executedPlan.toString
     assert(p.contains("InMemoryTableScan"),
       s"the second consumer must hit the memo:\n${p.take(800)}")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("d11 segment-level dedup detects planted cross-doc boilerplate") {
@@ -2767,8 +2764,8 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("r18: signature substrates memoize per session, match the uncached " +
-      "compute, and clear with clearMedia") {
-    Multimodal.clearMedia()
+      "compute, and clear with Memo.clearAll") {
+    Memo.clearAll()
     val m = Multimodal.toMediaTable(docs)
     val a = Multimodal.phash(m)
     assert(Multimodal.phash(m) eq a,
@@ -2781,9 +2778,9 @@ class PipelineSpec extends GraftSuite {
       "memoized signatures must equal the uncached compute")
     assert(sigSet(Multimodal.audioHash(m)) ==
       sigSet(Multimodal.audioHashCompute(m)))
-    Multimodal.clearMedia()
+    Memo.clearAll()
     assert(!(Multimodal.phash(Multimodal.toMediaTable(docs)) eq a),
-      "clearMedia must drop the memo")
+      "Memo.clearAll must drop the memo")
   }
 
   test("d14 span merge stays linear on a 50k-word document") {
@@ -2950,7 +2947,7 @@ class PipelineSpec extends GraftSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto == fixed,
       "auto and fixed must resolve to the same k on a null-bearing corpus")
-    Clustering.clearAssignments()
+    Memo.clearAll()
   }
 
   test("blocked auto-bits: scaledBits = clamp(ceil(log2(n/target))); " +
@@ -3064,10 +3061,10 @@ class PipelineSpec extends GraftSuite {
     // FIXED POINT: the post-splice corpus re-probes clean
     val spliced = hand.where(col("doc_id") =!= 27L)
       .unionByName(Seq((27L, rt)).toDF("doc_id", "text"))
-    Dedup.clearSubstrates()
+    Memo.clearAll()
     assert(Dedup.quoteContaminationSplitCheck(spliced, 25L).count() == 0,
       "re-running d28 over the redacted text must yield zero flags")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("e17 full release: the semantic drop and surgical redaction " +
@@ -3089,7 +3086,7 @@ class PipelineSpec extends GraftSuite {
         e17ids -- (e13ids -- flags)} missing=${(e13ids -- flags) -- e17ids}")
     assert((e13ids & flags).nonEmpty,
       "the law is non-vacuous: some e13 survivor is semantically flagged")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
     // fixture: one release, both defenses firing differently
     val q = "alpha bravo charlie delta echo foxtrot" // 4 shingles < d9's 5
     val pad = "every training document needs enough completely distinct " +
@@ -3114,7 +3111,7 @@ class PipelineSpec extends GraftSuite {
       s"paraphraser leaves wholesale, quoter and control ship: $got")
     assert(got(27L) > 0, "the quoter ships REDACTED")
     assert(got(29L) == 0, "the control ships uncut")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("e18 multimodal release: the media drops compose (e18 == e17 " +
@@ -3140,7 +3137,7 @@ class PipelineSpec extends GraftSuite {
         (e17ids -- mediaIds) -- e18ids}")
     assert((e17ids & mediaIds).nonEmpty,
       "the law is non-vacuous: some e17 survivor is media-flagged")
-    Dedup.clearSubstrates(); Multimodal.clearMedia()
+    Memo.clearAll()
 
     // the mixed-modality fixture: ONE doc per stage of the e18 family,
     // including a redacted survivor — every drop reason fires on its
@@ -3235,7 +3232,7 @@ class PipelineSpec extends GraftSuite {
       s"e18 ships the redacted quoter and the two keepers: $got")
     assert(got(27L) > 0 && got(29L) == 0 && got(32L) == 0,
       s"only the quoter ships redacted: $got")
-    Dedup.clearSubstrates(); Multimodal.clearMedia()
+    Memo.clearAll()
     // audit5 on the same fixture: one doc per stage, conservation, and
     // the cross-op laws (kept+redacted == e18; n_tok_cut reconciles)
     val funnel = Pipeline.surgicalFilterFunnel(hand, vecs)
@@ -3260,7 +3257,7 @@ class PipelineSpec extends GraftSuite {
       "the fully-redacted doc carries its cut mass")
     assert(funnel("kept")._2 == 0L && funnel("benchmark")._2 == 0L,
       "n_tok_cut rides only the redaction stages")
-    Dedup.clearSubstrates(); Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("e16 spliced corpus IS the e13 manifest's token stream: per doc " +
@@ -3281,7 +3278,7 @@ class PipelineSpec extends GraftSuite {
     val bad = shipped.filter { case (id, n) => manifest(id)._2 != n }
     assert(bad.isEmpty,
       s"shipped text must re-tokenize to the manifest's n_tok: $bad")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
     // the sf0.01 corpus' one flagged doc does not survive e3's sampling,
     // so the splice leg above is exercised only through the coalesce —
     // pin the REDACTED-survivor case on a fixture (27 passes the
@@ -3308,7 +3305,7 @@ class PipelineSpec extends GraftSuite {
     assert(s2.keySet == m2.keySet && s2.forall { case (id, n) =>
       m2(id)._2 == n },
       s"redacted survivor's text must re-tokenize to n_tok: $s2 vs $m2")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("audit5 'empty' stage: a zero-token doc past every probe is " +
@@ -3347,7 +3344,7 @@ class PipelineSpec extends GraftSuite {
     assert(funnel.getOrElse("kept", 0L) +
       funnel.getOrElse("redacted", 0L) == e18ids.size.toLong,
       s"kept + redacted must equal the release: $funnel vs $e18ids")
-    Dedup.clearSubstrates(); Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("MultimodalFlags seam: release and funnel built from ONE flags " +
@@ -3375,7 +3372,7 @@ class PipelineSpec extends GraftSuite {
     assert(funnel.getOrElse("kept", 0L) +
       funnel.getOrElse("redacted", 0L) == rel.size.toLong,
       s"kept + redacted == release doc set: $funnel vs ${rel.size}")
-    Dedup.clearSubstrates(); Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("e19 spliced multimodal text: ships exactly e18's doc set, " +
@@ -3412,7 +3409,7 @@ class PipelineSpec extends GraftSuite {
       "e19 must be e16 minus the drops, text included")
     assert(e16rows.exists(r => dropIds(r._1)),
       "the law is non-vacuous: some e16 row is dropped by e18's stages")
-    Dedup.clearSubstrates(); Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("e20 release fingerprint: order-independent, single-row " +
@@ -3448,8 +3445,7 @@ class PipelineSpec extends GraftSuite {
     val f2 = fp(Pipeline.fullMultimodalRelease(docs01, emb01)
       .repartition(13))
     assert(f1 == f2 && f1._1 > 0)
-    graft.ops.Dedup.clearSubstrates()
-    graft.ops.Multimodal.clearMedia()
+    Memo.clearAll()
   }
 
   test("e16 CJK butt joints closed: the token-stream law holds through " +
@@ -3481,7 +3477,7 @@ class PipelineSpec extends GraftSuite {
       s"the joint separator must keep abc/def apart: '${s1(27L)._1}'")
     assert(s1.forall { case (id, (_, n)) => m1(id)._2 == n },
       s"token-stream law through the butt joint: $s1 vs $m1")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
     // 2) a quote covering a PREFIX of a longer CJK run: the island's
     //    right edge falls strictly inside the run, so the lift must
     //    SHRINK by the shared straddler char — the uncovered bigram the
@@ -3506,7 +3502,7 @@ class PipelineSpec extends GraftSuite {
       s"the straddler char 四 must survive the shrink: '${s2(27L)._1}'")
     assert(s2.forall { case (id, (_, n)) => m2(id)._2 == n },
       s"token-stream law through the run edge: $s2 vs $m2")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
     // 3) direct unit cases on the splice core (hand span plans):
     //    a BOTH-interior island and a ZERO-WIDTH island mid-run
     val doc = Seq((27L, "abc一二三四五def")).toDF("doc_id", "text")
@@ -3542,13 +3538,16 @@ class PipelineSpec extends GraftSuite {
     assert(before > 0, "the corpus has quote flags to redact")
     val red = Pipeline.redactedText(docs01)
       .select(col("doc_id"), col("redacted_text").as("text"))
+    // materialized first: clearAll releases the memo checkpoints that
+    // `red` is derived from
     val spliced = docs01
       .join(red.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .unionByName(red)
-    Dedup.clearSubstrates()
+      .localCheckpoint()
+    Memo.clearAll()
     assert(Dedup.quoteContaminationSplitCheck(spliced, 25L).count() == 0,
       "post-splice corpus must re-probe clean")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("audit3 health report joins an item burned in two modalities " +
@@ -3586,7 +3585,7 @@ class PipelineSpec extends GraftSuite {
     assert(r4.getAs[Long]("first_train") == 27L,
       "earliest flagging id across legs")
     assert(!got.contains(5L), "clean items emit no row")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("audit6 retires a double-burned item; the pruned MRR/nDCG evals " +
@@ -3654,7 +3653,7 @@ class PipelineSpec extends GraftSuite {
       .collect().map(_.getLong(0)).toSet
     assert(ndcgCut == Set(5L, 7L),
       s"retired item gone from nDCG: $ndcgCut")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("e14 drops a semantic paraphrase that every other probe passes; " +
@@ -3705,7 +3704,7 @@ class PipelineSpec extends GraftSuite {
     assert(funnel.values.sum == hand.count(), "Σ n_docs = |documents|")
     assert(funnel.getOrElse("kept", 0L) == e14.size.toLong,
       "kept == the e14 survivor set")
-    Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 
   test("audit4 conserves document mass on the corpus and its kept " +
@@ -3726,6 +3725,6 @@ class PipelineSpec extends GraftSuite {
       assert(a1.getOrElse(s, 0L) == funnel.getOrElse(s, 0L),
         s"stage $s precedes semantic and must not move")
     }
-    ops.Dedup.clearSubstrates()
+    Memo.clearAll()
   }
 }

@@ -104,7 +104,7 @@ class PlanSpec extends GraftSuite {
     assert(p.contains("BroadcastHashJoin"),
       "per-query ADC tables / centroid frames must broadcast")
     assert(!p.contains("CartesianProduct"))
-    graft.ops.Clustering.clearAssignments()
+    graft.ops.Memo.clearAll()
   }
 
   test("audit2 funnel: flag frames left-join the corpus, one stage " +
@@ -115,8 +115,7 @@ class PlanSpec extends GraftSuite {
     // stage-keyed exchange (the same law as a5)
     assert("HashAggregate".r.findAllIn(p).size >= 2,
       s"stage rollup must be two-phase:\n${p.take(1200)}")
-    graft.ops.Multimodal.clearMedia()
-    graft.ops.Dedup.clearSubstrates()
+    graft.ops.Memo.clearAll()
   }
 
   test("audit6/r7 action loop: no cartesian beyond the d31 broadcast " +
@@ -139,8 +138,7 @@ class PlanSpec extends GraftSuite {
       assert(bad.isEmpty,
         s"$q must never run an unpartitioned window:\n$bad")
     }
-    graft.ops.Multimodal.clearMedia()
-    graft.ops.Dedup.clearSubstrates()
+    graft.ops.Memo.clearAll()
   }
 
   test("d27 aligned containment: count pre-filter aggregates map-side, " +
@@ -162,7 +160,7 @@ class PlanSpec extends GraftSuite {
       "the alignment rollup should appear (post-filter)")
     assert(!p.contains("Expand"),
       s"the rollup must not expand rows for distinct counts:\n$p")
-    graft.ops.Dedup.clearSubstrates()
+    graft.ops.Memo.clearAll()
   }
 
   test("r6 MMR rerank is distributed: no driver-side materialization") {

@@ -520,7 +520,7 @@ class PropertySpec extends GraftSuite {
         .map { case (p, i) => i.toLong -> nearest(cents, p) }.toMap
       assert(got == want, s"round $round: $got vs $want")
     }
-    ops.Clustering.clearAssignments() // drop the random-frame memos
+    graft.ops.Memo.clearAll() // drop the random-frame memos
   }
 
   test("PNG law: encode -> inflate -> unfilter recovers the exact bitmap") {
@@ -870,7 +870,7 @@ class PropertySpec extends GraftSuite {
         coarseCentroids = k))
       assert(two == flat, s"sample $i (k=$k): two-level != flat")
     }
-    ops.Clustering.clearAssignments()
+    graft.ops.Memo.clearAll()
   }
 
   test("PPJoin law: prefix-filtered jaccard == direct join on skewed random corpora") {

@@ -111,6 +111,6 @@ class ScaleSpec extends GraftSuite {
     assert(clusters.forall(c => c >= 0 && c < 8))
     assert(clusters.length > 1, "degenerate single-cluster outcome")
     assert(sec < 120.0)
-    ops.Clustering.clearAssignments()
+    graft.ops.Memo.clearAll()
   }
 }

@@ -1578,8 +1578,7 @@ class StreamingSpec extends GraftSuite {
         .select("vec_id", "bench_id", "cos"))
       == rows(Similarity.embeddingContaminationSplitCheck(embFull, 25L)),
       "committed flags must equal the batch probe at holdout 25")
-    graft.ops.Dedup.clearSubstrates()
-    graft.ops.Multimodal.clearMedia()
+    graft.ops.Memo.clearAll()
   }
 
   test("from-ingest sel4: the DSIR select-then-pack over the committed " +
@@ -2014,8 +2013,7 @@ class StreamingSpec extends GraftSuite {
       "e20 digest must be stable across republish off one frontier")
     assert(wantFp.head.head.asInstanceOf[Long] > 0L,
       s"vacuous fingerprint (empty release): $wantFp")
-    graft.ops.Dedup.clearSubstrates()
-    graft.ops.Multimodal.clearMedia()
+    graft.ops.Memo.clearAll()
   }
 
   test("streaming d25: the per-batch contamination probe equals the " +
@@ -2171,7 +2169,7 @@ class StreamingSpec extends GraftSuite {
     assert(rows(
       Streams.committedQuoteContamination(spark, state, out).get) == got,
       "replay must not re-probe or append")
-    Dedup.clearSubstrates()
+    graft.ops.Memo.clearAll()
   }
 
   test("streaming d31: the per-batch embedding probe equals the batch " +
