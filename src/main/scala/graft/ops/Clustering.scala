@@ -54,13 +54,13 @@ object Clustering {
     * EXACTLY those centroids. */
   private val assignCache =
     new SessionMemo[(Plan, Int, Int), (DataFrame, Seq[(Int, Seq[Double])])](
-      v => Memo.release(v._1))
+      v => Seq(v._1))
 
   /** Pair-frame memo for the SemDeDup family: d15 (pairs) and d16
     * (keepers) share the quadratic within-cluster dot-product stage —
     * the dominant cost — not just the Lloyd loop. */
   private val pairCache =
-    new SessionMemo[(Plan, Int, Int, Long), DataFrame](Memo.release)
+    new SessionMemo[(Plan, Int, Int, Long), DataFrame](Seq(_))
 
   private def lloydModel(embeddings: DataFrame, k: Int,
       iters: Int): (DataFrame, Seq[(Int, Seq[Double])]) = {
@@ -175,7 +175,7 @@ object Clustering {
 
   /** Memo for [[kmeansAssignScalable]]'s sampled / two-level path. */
   private val scalableCache = new SessionMemo[
-    (Plan, Int, Int, Long, Int, Int), DataFrame](Memo.release)
+    (Plan, Int, Int, Long, Int, Int), DataFrame](Seq(_))
 
   /** Assignable-row-count memo, keyed by canonicalized plan — ONE counting
     * convention for the whole auto family (`scaledK`,
@@ -399,7 +399,7 @@ object Clustering {
 
   /** Pair-frame memo for the scalable auto-k path. */
   private val scalablePairCache = new SessionMemo[
-    (Plan, Int, Int, Long, Long, Int), DataFrame](Memo.release)
+    (Plan, Int, Int, Long, Long, Int), DataFrame](Seq(_))
 
   /** `semdedupPairs` at corpus-scaled k AND corpus-independent training —
     * the deployed form: cluster COUNT grows with n, cluster SIZE stays

@@ -192,17 +192,17 @@ object Corpus {
     * not the corpus. */
   private val bm25Cache = new SessionMemo[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[(String, Seq[String])], Long, Long), DataFrame](Memo.release)
+      Seq[(String, Seq[String])], Long, Long), DataFrame](Seq(_))
 
   private def bm25Scores(documents: DataFrame,
       queries: Seq[(String, Seq[String])], k1: Double,
       b: Double): DataFrame =
-    bm25Cache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
-      queries, java.lang.Double.doubleToLongBits(k1),
+    bm25Cache.getOrBuildElse((documents.queryExecution.analyzed
+      .canonicalized, queries, java.lang.Double.doubleToLongBits(k1),
       java.lang.Double.doubleToLongBits(b)), documents) {
       bm25ScoresUncached(documents, queries, k1, b)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    }(bm25ScoresUncached(documents, queries, k1, b))
 
   private def bm25ScoresUncached(documents: DataFrame,
       queries: Seq[(String, Seq[String])], k1: Double,

@@ -9,8 +9,8 @@ import org.apache.spark.storage.StorageLevel
 /** A session memo: the one caching discipline of the engine. Every memo
   * registers itself with [[Memo]] at construction, so
   * [[Memo.clearAll]] reaches all of them. Values may be frames, trained
-  * models, codebooks or scalars; `release` frees one value when its
-  * entry is dropped (for frames, [[Memo.release]]).
+  * models, codebooks or scalars; `frames` names the frames a value holds
+  * (none for models and scalars).
   *
   *  1. SINGLE-FLIGHT WITHOUT A GLOBAL BUILD LOCK: the map monitor is held
   *     only for map mutation; a build runs under a per-key holder lock,
@@ -19,28 +19,36 @@ import org.apache.spark.storage.StorageLevel
   *  2. STALENESS-GUARDED, BOUNDED RETENTION: each entry carries the
   *     [[Memo.filesHashOf]] of its inputs; a lookup whose hash differs
   *     (a re-read of a GROWN file-backed store canonicalizes equal)
-  *     REPLACES the entry and releases the stale value. At most one live
-  *     value per (session, key).
+  *     REPLACES the entry, unpersists the stale value's frames and runs
+  *     `onReplace`. At most one live value per (session, key).
   *  3. STOPPED-SESSION EVICTION on every lookup.
+  *
+  * An evicted value may still be in a caller's hands (the caller that
+  * was served it, or the build a replace overtook), so eviction only
+  * unpersists: an evicted checkpoint keeps its blocks until Spark's
+  * context cleaner finds it unreachable. Only [[clear]], the explicit
+  * clear path, drops the blocks of the values it holds.
   *
   * Inputs that are neither file-backed, data-in-plan nor checkpoints
   * never memoize: [[getOrBuild]] builds afresh for them. */
 private[graft] final class SessionMemo[K, V](
-    release: V => Unit = (_: V) => ()) extends Memo.Registered {
+    frames: V => Seq[DataFrame] = (_: V) => Nil,
+    onReplace: () => Unit = () => ()) extends Memo.Registered {
   /** One entry. `value` is written under both the holder lock and the
     * map monitor, `evicted` under the map monitor: an entry dropped from
     * the map (stale replace, stopped session, clear) is marked evicted
-    * there, and a build that completes afterwards releases its own value
-    * instead of parking it on a holder nobody can reach. */
+    * there, and a build that completes afterwards unpersists its own
+    * value instead of parking it on a holder nobody can reach. */
   private final class Holder(val filesHash: Int) {
     var value: Option[V] = None
     var evicted = false
   }
-  /** Drop `h` from service, releasing its value if it has one (call
+  /** Drop `h` from service, freeing its value's frames with `free` (call
     * under the map monitor). */
-  private def evict(h: Holder): Unit = {
+  private def evict(h: Holder,
+      free: DataFrame => Unit = Memo.unpersist): Unit = {
     h.evicted = true
-    h.value.foreach(release)
+    h.value.foreach(frames(_).foreach(free))
   }
   private val m = scala.collection.mutable.Map[(SparkSession, K), Holder]()
   Memo.register(this)
@@ -48,11 +56,18 @@ private[graft] final class SessionMemo[K, V](
   /** Get-or-build for `key` over `inputs` (at least one frame; the first
     * one's session scopes the entry). A build that THROWS leaves no entry
     * behind (the next caller retries). A build whose entry was replaced
-    * while it ran returns its value to its caller already released. */
+    * while it ran returns its value to its caller unpersisted. */
   def getOrBuild(key: K, inputs: DataFrame*)(build: => V): V =
+    getOrBuildElse(key, inputs: _*)(build)(build)
+
+  /** [[getOrBuild]] that runs `unmemoized` instead of `build` when the
+    * inputs cannot memoize: for builds that materialize (checkpoint,
+    * persist) only so that the memo can hold the value. */
+  def getOrBuildElse(key: K, inputs: DataFrame*)(build: => V)(
+      unmemoized: => V): V =
     Memo.filesHashOf(inputs: _*) match {
       case Some(h) => memoized(inputs.head.sparkSession, key, h, build)
-      case None => build
+      case None => unmemoized
     }
 
   private def memoized(session: SparkSession, key: K, filesHash: Int,
@@ -66,7 +81,7 @@ private[graft] final class SessionMemo[K, V](
       m.get((session, key)) match {
         case Some(h) if h.filesHash == filesHash => h
         case stale =>
-          stale.foreach(evict)
+          stale.foreach { h => evict(h); onReplace() }
           val h = new Holder(filesHash)
           m((session, key)) = h
           h
@@ -84,15 +99,24 @@ private[graft] final class SessionMemo[K, V](
             throw t
         }
         m.synchronized {
-          if (holder.evicted) release(v) else holder.value = Some(v)
+          if (holder.evicted) frames(v).foreach(Memo.unpersist)
+          else holder.value = Some(v)
         }
         v
       }
     }
   }
 
-  def clear(): Unit = m.synchronized {
-    m.values.foreach(evict)
+  /** Drop every entry and release its frames, checkpoint blocks
+    * included (the [[Memo.clearAll]] path). */
+  def clear(): Unit = clearWith(Memo.release)
+
+  /** Drop every entry, only unpersisting its frames (a frame derived
+    * from one stays usable). */
+  def evictAll(): Unit = clearWith(Memo.unpersist)
+
+  private def clearWith(free: DataFrame => Unit): Unit = m.synchronized {
+    m.values.foreach(evict(_, free))
     m.clear()
   }
 
@@ -219,9 +243,14 @@ object Memo {
     }
   }
 
-  /** Free a frame's storage: its CacheManager entry and, for a
-    * checkpoint, the checkpointed RDD's blocks. A frame whose session
-    * has stopped is skipped (its storage went with the context). */
+  /** Drop a frame's CacheManager entry. A frame whose session has
+    * stopped is skipped (its storage went with the context). */
+  private[graft] def unpersist(df: DataFrame): Unit =
+    if (!df.sparkSession.sparkContext.isStopped) df.unpersist(false)
+
+  /** [[unpersist]], and for a checkpoint also drop the checkpointed
+    * RDD's blocks: every frame derived from it stops working, so only
+    * owners that know no such frame is still in use call this. */
   private[graft] def release(df: DataFrame): Unit =
     if (!df.sparkSession.sparkContext.isStopped) {
       df.unpersist(false)

@@ -111,7 +111,7 @@ object Pipeline {
     * accreting hash-in-key entries would leak one pinned frame per
     * batch). */
   private val survivorIdCache = new SessionMemo[
-    (Plan, Long, Int, Long, Option[Plan]), DataFrame](Memo.release)
+    (Plan, Long, Int, Long, Option[Plan]), DataFrame](Seq(_))
 
   /** The live survivor-memo frames (spec probe: the VERDICT #2
     * retention bound — memoized survivor frames carry ONLY doc_id,
@@ -346,26 +346,31 @@ object Pipeline {
     * (the streamed compositions re-read growing flag stores — a files
     * change replaces the entry instead of serving stale islands or
     * accreting one per batch). */
-  private val islandsCache = new SessionMemo[Plan, DataFrame](
+  private val islandsCache = new SessionMemo[Plan, DataFrame](Seq(_),
     // a files change invalidates every manifest/delta derived from the
     // old islands checkpoint — their keys carry its RDD identity and
     // would never be looked up again, so drop them rather than pinning
     // orphans for the session
-    df => { Memo.release(df); manifestCache.clear(); deltaCache.clear() })
+    () => { manifestCache.evictAll(); deltaCache.evictAll() })
 
-  /** [[unionTokenSpans]] through the islands memo. */
-  private[graft] def sharedIslands(spanPlan: DataFrame): DataFrame =
-    islandsCache.getOrBuild(spanPlan.queryExecution.analyzed.canonicalized,
-      spanPlan) {
+  /** [[unionTokenSpans]] through the islands memo. `checkpointFallback`
+    * keeps the e16/e19 seams' materialization barrier when the span plan
+    * is unmemoizable: those seams fan the islands into manifest AND
+    * splice, and Catalyst does not dedup common subplans. */
+  private[graft] def sharedIslands(spanPlan: DataFrame,
+      checkpointFallback: Boolean = false): DataFrame =
+    islandsCache.getOrBuildElse(
+      spanPlan.queryExecution.analyzed.canonicalized, spanPlan) {
       // checkpoint, not persist: consumers (and the manifest/delta memo
       // keys) see a three-line ExistingRDD scan instead of the full
       // span-derivation body re-printed and re-canonicalized at every
-      // leg (the audit5 plan-size pathology, guide §3.3); the e16/e19
-      // seams fan the islands into manifest AND splice, and Catalyst
-      // does not dedup common subplans
+      // leg (the audit5 plan-size pathology, guide §3.3)
       MemoLedger.timed("span_islands") {
         unionTokenSpans(spanPlan).localCheckpoint()
       }
+    } {
+      val raw = unionTokenSpans(spanPlan)
+      if (checkpointFallback) raw.localCheckpoint() else raw
     }
 
   /** Session memo for the PACKED RELEASE MANIFESTS (optimization round
@@ -378,7 +383,7 @@ object Pipeline {
     * drop publishes. Key: (docs plan, islands plan, drops plan, params);
     * staleness/bound via [[SessionMemo]] like every memo here. */
   private val manifestCache = new SessionMemo[
-    (Plan, Plan, Option[Plan], Long, Int, Long, Int), DataFrame](Memo.release)
+    (Plan, Plan, Option[Plan], Long, Int, Long, Int), DataFrame](Seq(_))
 
   private def packedManifestCompute(documents: DataFrame,
       islands: DataFrame, extraDrops: Option[DataFrame],
@@ -400,8 +405,8 @@ object Pipeline {
       islands: DataFrame, extraDrops: Option[DataFrame],
       benchmarkMaxId: Long, minChars: Int, sampleFrac: Double,
       seqLen: Int): DataFrame = {
-    manifestCache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
-      islands.queryExecution.analyzed.canonicalized,
+    manifestCache.getOrBuildElse((documents.queryExecution.analyzed
+      .canonicalized, islands.queryExecution.analyzed.canonicalized,
       extraDrops.map(_.queryExecution.analyzed.canonicalized),
       benchmarkMaxId, minChars,
       java.lang.Double.doubleToLongBits(sampleFrac), seqLen),
@@ -416,7 +421,8 @@ object Pipeline {
         packedManifestCompute(documents, islands, extraDrops,
           benchmarkMaxId, minChars, sampleFrac, seqLen).localCheckpoint()
       }
-    }
+    }(packedManifestCompute(documents, islands, extraDrops,
+      benchmarkMaxId, minChars, sampleFrac, seqLen))
   }
 
   /** Session memo for the two MEDIA drop lists (optimization round 2,
@@ -425,16 +431,16 @@ object Pipeline {
     * signatures to re-derive identical pair-mass-bounded id lists.
     * Tiny frames; same staleness/bound discipline as every memo here. */
   private val dropListCache = new SessionMemo[
-    (String, Plan, Int, Int, Long), DataFrame](Memo.release)
+    (String, Plan, Int, Int, Long), DataFrame](Seq(_))
 
   private def memoDropList(tag: String, documents: DataFrame, a: Int,
       b: Int, benchMaxId: Long)(build: => DataFrame): DataFrame =
-    dropListCache.getOrBuild((tag, documents.queryExecution.analyzed
+    dropListCache.getOrBuildElse((tag, documents.queryExecution.analyzed
       .canonicalized, a, b, benchMaxId), documents) {
       // checkpoint, not persist — the plan-print/canonicalization
       // argument on the manifest memo applies to every funnel leg
       MemoLedger.timed(tag)(build.localCheckpoint())
-    }
+    }(build)
 
   /** E15 — the REDACTED TEXT itself: the surgical family finally
     * produces the artifact the plan exists for. d30 emits token spans,
@@ -510,19 +516,20 @@ object Pipeline {
     * fold. Tiny (flagged docs only); same staleness/bound discipline
     * as every memo here. */
   private val deltaCache =
-    new SessionMemo[(Plan, Plan), DataFrame](Memo.release)
+    new SessionMemo[(Plan, Plan), DataFrame](Seq(_))
 
   /** [[redactedTextFromSpans]] from PRECOMPUTED merged islands — the
     * island-sharing twin of [[redactPackFromIslands]] (see there),
     * memo-backed per (documents, islands). */
   private[graft] def redactedTextFromIslands(documents: DataFrame,
       merged: DataFrame): DataFrame =
-    deltaCache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
-      merged.queryExecution.analyzed.canonicalized), documents, merged) {
+    deltaCache.getOrBuildElse((documents.queryExecution.analyzed
+      .canonicalized, merged.queryExecution.analyzed.canonicalized),
+      documents, merged) {
       MemoLedger.timed("redaction_delta") {
         redactedTextFromIslandsCompute(documents, merged).localCheckpoint()
       }
-    }
+    }(redactedTextFromIslandsCompute(documents, merged))
 
   private def redactedTextFromIslandsCompute(documents: DataFrame,
       merged: DataFrame): DataFrame = {
@@ -873,7 +880,7 @@ object Pipeline {
     // ONE island derivation shared by manifest and splice — now the
     // session-memoized islands frame (persisted; the checkpoint fallback
     // keeps the barrier when the span plan is unmemoizable)
-    val islands = sharedIslands(spanPlan)
+    val islands = sharedIslands(spanPlan, checkpointFallback = true)
     splicedText(documents, islands,
       surgicalCorpusFromIslands(documents, islands, benchmarkMaxId,
           minChars, sampleFrac)
@@ -945,7 +952,7 @@ object Pipeline {
       sampleFrac: Double = 0.5): DataFrame = {
     // ONE island derivation shared by manifest and splice — the e16
     // discipline (see surgicalCorpusTextWithSpans)
-    val islands = sharedIslands(spanPlan)
+    val islands = sharedIslands(spanPlan, checkpointFallback = true)
     splicedText(documents, islands,
       fullReleaseFromIslandsAndDrops(documents, islands, drops,
           benchmarkMaxId, minChars, sampleFrac)
@@ -982,7 +989,7 @@ object Pipeline {
     }
 
   private val curatedCache =
-    new SessionMemo[(Plan, Long, Long), DataFrame](Memo.release)
+    new SessionMemo[(Plan, Long, Long), DataFrame](Seq(_))
 
   private def curatedCompute(documents: DataFrame, minScore: Double,
       maxDupFrac: Double): DataFrame = {

@@ -33,7 +33,7 @@ object Similarity {
     * construction). Staleness-guarded and bounded via [[SessionMemo]];
     * k > [[edgeCacheK]] computes directly (no memo). */
   private val edgeCache =
-    new SessionMemo[(Plan, Int, Int), DataFrame](Memo.release)
+    new SessionMemo[(Plan, Int, Int), DataFrame](Seq(_))
   private val edgeCacheK = 3
 
   /** Session memo for the IVFADC RESIDUAL frame (optimization round 2,
@@ -47,7 +47,7 @@ object Similarity {
     * the persisted residual frame a real IVFADC deployment encodes from
     * (the scaladoc note on [[portableIvfAdcTopK]]). */
   private val residCache =
-    new SessionMemo[(Plan, Int, Int), DataFrame](Memo.release)
+    new SessionMemo[(Plan, Int, Int), DataFrame](Seq(_))
 
   /** Session memo for the PORTABLE sign-LSH signature frame
     * (optimization round 2): `portableSigCol` is an interpreted
@@ -58,25 +58,25 @@ object Similarity {
     * checkpoint per (corpus, bits, dims) per session; a few bytes per
     * vector. */
   private val sigFrameCache =
-    new SessionMemo[(Plan, Int, Int), DataFrame](Memo.release)
+    new SessionMemo[(Plan, Int, Int), DataFrame](Seq(_))
 
   private[graft] def portableSigs(embeddings: DataFrame, bits: Int,
-      dims: Int): DataFrame =
-    sigFrameCache.getOrBuild(
+      dims: Int): DataFrame = {
+    def compute = embeddings
+      .select(col("vec_id"), portableSigCol(bits, dims).as("sig"))
+    sigFrameCache.getOrBuildElse(
       (embeddings.queryExecution.analyzed.canonicalized, bits, dims),
       embeddings) {
-      MemoLedger.timed("portable_sigs") {
-        embeddings.select(col("vec_id"), portableSigCol(bits, dims).as("sig"))
-          .localCheckpoint()
-      }
-    }
+      MemoLedger.timed("portable_sigs")(compute.localCheckpoint())
+    }(compute)
+  }
 
   /** Session memo for the BLOCKED kNN graph, keyed by (canonicalized
     * corpus plan, k, bits, tables, dims). knnGraph's plan-equality
     * persist cannot work here — the signature localCheckpoint mints a
     * fresh plan per call — so sim7/gr2 share through an explicit memo. */
   private val blockedCache =
-    new SessionMemo[(Plan, Int, Int, Int, Int), DataFrame](Memo.release)
+    new SessionMemo[(Plan, Int, Int, Int, Int), DataFrame](Seq(_))
 
   /** Session memo for the IVF coarse quantizer, keyed by (canonicalized
     * corpus plan, nCells) — the `Clustering.assignCache` pattern: sim3
@@ -1006,10 +1006,9 @@ object Similarity {
       dims: Int = 64, k: Int = 1): DataFrame = {
     // gr3/gr4 share one substrate: serve any k <= edgeCacheK by
     // filtering the memoized ranked top-edgeCacheK frame (see edgeCache)
-    if (k > edgeCacheK)
-      portableKnnEdgesRanked(embeddings, bits, dims, k)
-        .select(col("qid"), col("nid"))
-    else edgeCache.getOrBuild(
+    def direct = portableKnnEdgesRanked(embeddings, bits, dims, k)
+    if (k > edgeCacheK) direct.select(col("qid"), col("nid"))
+    else edgeCache.getOrBuildElse(
       (embeddings.queryExecution.analyzed.canonicalized, bits, dims),
       embeddings) {
       MemoLedger.timed("portable_knn_edges") {
@@ -1018,7 +1017,7 @@ object Similarity {
         portableKnnEdgesRanked(embeddings, bits, dims, edgeCacheK)
           .localCheckpoint()
       }
-    }.where(col("rn") <= k).select(col("qid"), col("nid"))
+    }(direct).where(col("rn") <= k).select(col("qid"), col("nid"))
   }
 
   /** The ranked (qid, rn, nid) form of [[portableKnnEdges]] — the frame

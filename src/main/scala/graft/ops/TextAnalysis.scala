@@ -549,15 +549,16 @@ object TextAnalysis {
     // cur3/boot1/e5/e6/audit1), and it is |docs|·3 narrow columns — the
     // first caller pays the explode+vocab build, everyone after reads the
     // persisted frame.
-    scoreCache.getOrBuild((documents.queryExecution.analyzed.canonicalized,
-      vocabSize, java.lang.Double.doubleToLongBits(bias)), documents) {
+    scoreCache.getOrBuildElse((documents.queryExecution.analyzed
+      .canonicalized, vocabSize, java.lang.Double.doubleToLongBits(bias)),
+      documents) {
       modelQualityScoreUncached(documents, vocabSize, bias)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    }(modelQualityScoreUncached(documents, vocabSize, bias))
 
   private val scoreCache = new SessionMemo[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Long),
-    DataFrame](Memo.release)
+    DataFrame](Seq(_))
 
   private def modelQualityScoreUncached(documents: DataFrame,
       vocabSize: Int, bias: Double): DataFrame = {

@@ -30,27 +30,47 @@ class MemoSpec extends GraftSuite {
 
   private def tag(df: DataFrame) = df.collect().head.getString(0)
 
+  /** A memo value of both frame kinds tagged `tag`: a persisted frame
+    * (its storage level shows whether the memo unpersisted it) and a
+    * checkpoint (its blocks show whether the memo released them). */
+  private def frames(tag: String): (DataFrame, DataFrame) =
+    (Seq(tag).toDF("v").persist(), Seq(tag).toDF("v").localCheckpoint())
+
+  private def isPinned(df: DataFrame) =
+    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+
+  private def hasBlocks(df: DataFrame) = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      spark.sparkContext.getPersistentRDDs.contains(r.rdd.id)
+    case _ => false
+  }
+
+  private def pairMemo() = new SessionMemo[String, (DataFrame, DataFrame)](
+    v => Seq(v._1, v._2))
+
   test("SessionMemo: plan-equal lookups hit; a files change replaces " +
       "and releases the stale frame; clear releases everything") {
-    val released = scala.collection.mutable.ArrayBuffer.empty[String]
-    val memo = new SessionMemo[String, DataFrame](df => released += tag(df))
+    val memo = pairMemo()
     var builds = 0
     def build(tag: String) = {
       builds += 1
-      Seq(tag).toDF("v")
+      frames(tag)
     }
     val (v1, v2) = grownReads()
     val a1 = memo.getOrBuild("k", v1)(build("a"))
     val a2 = memo.getOrBuild("k", v1)(build("never"))
     assert(a2 eq a1) // same filesHash: memo hit, no rebuild
-    assert(builds == 1 && released.isEmpty)
+    assert(builds == 1 && isPinned(a1._1))
     val b = memo.getOrBuild("k", v2)(build("b"))
-    assert(tag(b) == "b")
+    assert(tag(b._1) == "b")
     assert(builds == 2)
-    assert(released == Seq("a")) // stale frame replaced AND released
+    // stale frame replaced AND unpersisted
+    assert(!isPinned(a1._1) && isPinned(b._1))
+    // a caller that was served the stale value can still use it
+    assert(hasBlocks(a1._2) && tag(a1._2) == "a")
     assert(memo.size == 1) // bounded: one live entry per key
     memo.clear()
-    assert(released == Seq("a", "b") && memo.size == 0)
+    assert(!isPinned(b._1) && !hasBlocks(b._2) && memo.size == 0)
   }
 
   test("SessionMemo: a build that throws leaves no entry (next caller " +
@@ -67,33 +87,33 @@ class MemoSpec extends GraftSuite {
 
   test("SessionMemo: a build overtaken by a stale replace releases its " +
       "own frame, so no frame is orphaned") {
-    val released = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val memo = new SessionMemo[String, DataFrame](df => {
-      released.add(tag(df)); ()
-    })
+    val memo = pairMemo()
     val (v1, v2) = grownReads()
     val entered = new java.util.concurrent.CountDownLatch(1)
     val proceed = new java.util.concurrent.CountDownLatch(1)
-    @volatile var slow: DataFrame = null
+    @volatile var slow: (DataFrame, DataFrame) = null
     val builder = new Thread(() => {
       slow = memo.getOrBuild("k", v1) {
         entered.countDown()
         proceed.await()
-        Seq("old").toDF("v")
+        frames("old")
       }
     })
     builder.start()
     entered.await()
     // the files changed while the first build ran: replace the entry
-    val fresh = memo.getOrBuild("k", v2)(Seq("new").toDF("v"))
+    val fresh = memo.getOrBuild("k", v2)(frames("new"))
     proceed.countDown()
     builder.join()
-    assert(tag(slow) == "old", "the overtaken caller still gets its frame")
-    assert(released.toArray.toSeq == Seq("old"),
-      "the overtaken build must release its own frame")
-    assert(memo.values.map(tag) == Seq("new") && (memo.values.head eq fresh))
+    assert(tag(slow._1) == "old", "the overtaken caller still gets its frame")
+    assert(!isPinned(slow._1),
+      "the overtaken build must unpersist its own frame")
+    assert(hasBlocks(slow._2) && tag(slow._2) == "old",
+      "the overtaken caller's checkpoint must keep its blocks")
+    assert(memo.values.map(v => tag(v._1)) == Seq("new") &&
+      (memo.values.head eq fresh) && isPinned(fresh._1))
     memo.clear()
-    assert(released.toArray.toSeq == Seq("old", "new"))
+    assert(!isPinned(fresh._1) && !hasBlocks(fresh._2))
   }
 
   test("Memo.filesHashOf: file-backed, data-in-plan, and checkpoint " +
