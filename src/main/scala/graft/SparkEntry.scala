@@ -493,34 +493,37 @@ object SparkEntry {
         .select("qid", "nid")),
     "sim2_lsh_topk" -> ((s, d) =>
       Similarity.lshTopK(t(s, d, "embeddings"), 100, 5, 5, 12)),
+    // sim3–sim5 are the scale forms of the one PQ/IVF kernel family over
+    // query ids 0..99 (rows-only); sim8–sim12 are its hash-gated forms
+    // over three queries at the default geometry
     "sim3_ivf_topk" -> ((s, d) =>
-      Similarity.ivfTopK(t(s, d, "embeddings"), 100, 5)),
+      Similarity.portableIvfTopK(t(s, d, "embeddings"), 0L until 100L,
+        k = 5, cells = 16, nprobe = 2)),
     "sim4_pq_topk" -> ((s, d) =>
-      Similarity.pqTopK(t(s, d, "embeddings"), 100, 5, m = 16, k = 32)),
+      Similarity.portablePqTopK(t(s, d, "embeddings"), 0L until 100L,
+        topK = 5, m = 16, k = 32)),
     "sim5_ivfpq_topk" -> ((s, d) =>
-      Similarity.ivfPqTopK(t(s, d, "embeddings"), 100, 5,
-        nCells = 16, nprobe = 4, m = 16, k = 32)),
-    // the HASH-GATED IVF twin: coarse quantizer = the oracle-able Lloyd
+      Similarity.portableIvfAdcTopK(t(s, d, "embeddings"), 0L until 100L,
+        topK = 5, cells = 16, nprobe = 4, m = 16, k = 32)),
+    // the HASH-GATED IVF form: coarse quantizer = the oracle-able Lloyd
     // loop (kmeansAssign contract), so cells, probe order, and rerank all
-    // reproduce in DuckDB — sim3 stays the MLlib-quantizer scale form
+    // reproduce in DuckDB
     "sim8_ivf_portable" -> ((s, d) =>
       Similarity.portableIvfTopK(t(s, d, "embeddings"), Seq(0L, 1L, 2L))),
-    // the HASH-GATED PQ/ADC twin: per-subspace codebooks from the same
-    // oracle-able Lloyd loop, encode = final assignment, ADC on 1e-6
-    // integer arithmetic — sim4/sim5 stay the float sampled-training
-    // scale forms
+    // the HASH-GATED PQ/ADC form: per-subspace codebooks from the same
+    // oracle-able Lloyd loop (all subspaces trained together), encode =
+    // final assignment, ADC on 1e-6 integer arithmetic
     "sim9_pq_portable" -> ((s, d) =>
       Similarity.portablePqTopK(t(s, d, "embeddings"), Seq(0L, 1L, 2L))),
-    // the composed ANN twin: sim8's oracle-able coarse probe restricting
-    // sim9's integer ADC — IVF+PQ hash-gated end to end (sim5 stays the
-    // float scale form)
+    // the composed ANN form: sim8's oracle-able coarse probe restricting
+    // sim9's integer ADC — IVF+PQ hash-gated end to end
     "sim10_ivfpq_portable" -> ((s, d) =>
       Similarity.portableIvfPqTopK(t(s, d, "embeddings"), Seq(0L, 1L, 2L))),
     // IVFADC hash-gated: sim10's composition with the corpus side
     // RESIDUAL-encoded (codes trained on v − c_cell, queries raw, the
     // exact-integer dot(q, c_cell) offset fused into the ADC score) —
-    // the portable twin of ivfPqTopK's residualEncode=true default;
-    // sim10 stays the raw-encode control at identical code size
+    // sim5's kernel at the default geometry; sim10 stays the raw-encode
+    // control at identical code size
     "sim12_ivfadc_portable" -> ((s, d) =>
       Similarity.portableIvfAdcTopK(t(s, d, "embeddings"), Seq(0L, 1L, 2L))),
     // greedy k-center seeds (farthest-point-first): 4 maximally-spread

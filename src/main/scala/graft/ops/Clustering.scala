@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Embedding clustering for corpus curation — the grouping primitive under
@@ -34,27 +34,18 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  private def centroidFrame(emb: DataFrame,
-      cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    cents.flatMap { case (cid, cen) =>
-      cen.zipWithIndex.map { case (m, i) => (cid, i, m) }
-    }.toDF("cid", "i", "m")
-  }
-
   private type Plan = org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-  /** Memoized Lloyd runs, keyed by (canonicalized input plan, k, iters) —
-    * ml1/d15/smp7 all consume the same clustering of the same corpus, so
-    * the Lloyd loop runs once per session per (corpus, k, iters). The
-    * value is the localCheckpoint'ed assignment together with the
-    * final-round centroids it used, so coarse-quantizer consumers
-    * (`Similarity.portableIvfTopK`) rank query-to-cell distances against
-    * EXACTLY those centroids. */
-  private val assignCache =
-    new SessionMemo[(Plan, Int, Int), (DataFrame, Seq[(Int, Seq[Double])])](
-      v => Seq(v._1))
+  /** Memoized Lloyd runs, keyed by (canonicalized input plan, k, iters,
+    * m, dims) — ml1/d15/smp7 all consume the same clustering of the same
+    * corpus, so the Lloyd loop runs once per session per (corpus, k,
+    * iters); the PQ kernels key their m-subspace runs the same way. The
+    * value is the localCheckpoint'ed (s, vec_id, cluster) assignment
+    * together with the final-round centroids per subspace, so
+    * coarse-quantizer and ADC consumers rank against EXACTLY those
+    * centroids. */
+  private val assignCache = new SessionMemo[(Plan, Int, Int, Int, Int),
+    (DataFrame, Seq[Seq[(Int, Seq[Double])]])](v => Seq(v._1))
 
   /** Pair-frame memo for the SemDeDup family: d15 (pairs) and d16
     * (keepers) share the quadratic within-cluster dot-product stage —
@@ -62,13 +53,17 @@ object Clustering {
   private val pairCache =
     new SessionMemo[(Plan, Int, Int, Long), DataFrame](Seq(_))
 
-  private def lloydModel(embeddings: DataFrame, k: Int,
-      iters: Int): (DataFrame, Seq[(Int, Seq[Double])]) = {
+  private def lloydModel(embeddings: DataFrame, k: Int, iters: Int,
+      m: Int = 1, dims: Int = 0)
+      : (DataFrame, Seq[Seq[(Int, Seq[Double])]]) = {
     require(k >= 1 && iters >= 0, "k must be >= 1 and iters >= 0")
+    require(if (dims == 0) m == 1 else m >= 1 && dims % m == 0,
+      s"dims=$dims not divisible into m=$m subspaces")
     assignCache.getOrBuild(
-      (embeddings.queryExecution.analyzed.canonicalized, k, iters),
+      (embeddings.queryExecution.analyzed.canonicalized, k, iters, m, dims),
       embeddings) {
-      MemoLedger.timed("kmeans_assign")(lloydAssign(embeddings, k, iters))
+      MemoLedger.timed("kmeans_assign")(lloydAssign(embeddings, k, iters,
+        m, dims))
     }
   }
 
@@ -76,7 +71,8 @@ object Clustering {
     * assignment against the last (rounded) centroids: (vec_id, cluster).
     */
   def kmeansAssign(embeddings: DataFrame, k: Int = 8,
-      iters: Int = 2): DataFrame = lloydModel(embeddings, k, iters)._1
+      iters: Int = 2): DataFrame =
+    lloydModel(embeddings, k, iters)._1.select(col("vec_id"), col("cluster"))
 
   /** The final-round coarse-quantizer model as a (cid, i, m) frame — the
     * same (rounded) centroids `kmeansAssign`'s last assignment used, so a
@@ -84,11 +80,31 @@ object Clustering {
     * consistent with the corpus assignment (and with the oracle's `c2`
     * CTE). */
   def kmeansCentroids(embeddings: DataFrame, k: Int = 8,
-      iters: Int = 2): DataFrame = {
-    val emb = embeddings
-      .select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("v"))
-    centroidFrame(emb, lloydModel(embeddings, k, iters)._2)
+      iters: Int = 2): DataFrame =
+    centroidFrame(embeddings, lloydModel(embeddings, k, iters)._2)
+      .drop("s")
+
+  /** Product-quantizer training: [[kmeansAssign]]'s Lloyd contract run
+    * independently on each of the `m` consecutive dims/m slices of the
+    * embedding, all subspaces in ONE scan and one collect per round.
+    * Returns the codes as (s, vec_id, cluster) and the final-round
+    * centroids as (s, cid, i, m) — per subspace exactly what
+    * `kmeansAssign`/`kmeansCentroids` return on that slice alone. */
+  def pqModel(embeddings: DataFrame, m: Int, k: Int, iters: Int,
+      dims: Int): (DataFrame, DataFrame) = {
+    val (codes, cents) = lloydModel(embeddings, k, iters, m, dims)
+    (codes, centroidFrame(embeddings, cents))
+  }
+
+  private def centroidFrame(emb: DataFrame,
+      cents: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    cents.zipWithIndex.flatMap { case (sub, s) =>
+      sub.flatMap { case (cid, cen) =>
+        cen.zipWithIndex.map { case (x, i) => (s, cid, i, x) }
+      }
+    }.toDF("s", "cid", "i", "m")
   }
 
   // round(6) as BigDecimal.valueOf/HALF_UP — bit-identical to the SQL
@@ -96,69 +112,95 @@ object Clustering {
   private def rnd6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Flat assignment: one codegen pass (graft.functions.NearestCentroid)
-    * per row against a literal centroid table — same ascending-dim
-    * summation order and smallest-cid tie-break the `min(struct(d,
-    * cid))` oracle contract pins. The RAW column (not a
-    * transform-to-double projection) keeps it inside whole-stage
-    * codegen. */
-  private def assignFlat(embeddings: DataFrame,
-      cents: Seq[(Int, Seq[Double])]): DataFrame = embeddings
-    .select(col("vec_id"),
-      graft.functions.VecExpressions.nearestCentroid(col("embedding"), cents)
-        .as("cluster"))
+  /** Subspace `s` of the embedding: the whole vector at dims = 0 (the
+    * plain k-means form), else its s-th slice of dims/m. */
+  private def subspace(s: Int, m: Int, dims: Int): Column =
+    if (dims == 0) col("embedding")
+    else slice(col("embedding"), s * (dims / m) + 1, dims / m)
+
+  /** One row per (vector, subspace) with `cols(s)` as its columns — a
+    * plain projection at m = 1, an explode of m structs above it. */
+  private def perSubspace(df: DataFrame, m: Int)(
+      cols: Int => Seq[Column]): DataFrame =
+    if (m == 1) df.select(cols(0): _*)
+    else df.select(explode(array((0 until m).map(s =>
+      struct(cols(s): _*)): _*)).as("e")).select(col("e.*"))
 
   /** `iters` Lloyd training rounds from the deterministic smallest-vec_id
-    * init, each round ONE scan: assign expression + VecSum partial
-    * aggregation, k·dims doubles of state per task, k rows to the
-    * driver. (The earlier explode-join shape materialized n·k·dims
-    * rows — the sf1 bench point measured it dominating at corpus-scaled
-    * k.) Rounding each round snaps both engines to the same decimals;
-    * clusters that receive no points drop out. */
-  private def lloydTrain(embeddings: DataFrame, k: Int,
-      iters: Int): Seq[(Int, Seq[Double])] = {
-    var cents: Seq[(Int, Seq[Double])] = embeddings
+    * init, each round ONE scan for all `m` subspaces: per row the
+    * assign expression on every slice, exploded to (s, cluster, slice),
+    * then a (s, cluster)-keyed VecSum partial aggregation — k·dims
+    * doubles of state per task, m·k rows to the driver. (The earlier
+    * explode-join shape materialized n·k·dims rows — the sf1 bench
+    * point measured it dominating at corpus-scaled k.) Rounding each
+    * round snaps both engines to the same decimals; clusters that
+    * receive no points drop out of their subspace. */
+  private def lloydTrain(embeddings: DataFrame, k: Int, iters: Int,
+      m: Int = 1, dims: Int = 0): Seq[Seq[(Int, Seq[Double])]] = {
+    import graft.functions.VecExpressions.nearestCentroid
+    val init = embeddings
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))
       .orderBy(col("vec_id")).limit(k).collect().toSeq
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }
+      .map(_.getSeq[Double](1))
+    var cents: Seq[Seq[(Int, Seq[Double])]] = (0 until m).map { s =>
+      init.zipWithIndex.map { case (v, i) =>
+        (i, if (dims == 0) v else v.slice(s * (dims / m), (s + 1) * (dims / m)))
+      }
+    }
     // input may be float (the parquet tables) or double (synthetic
     // frames) — both sum in double either way
     val sumCol = embeddings.schema("embedding").dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _) =>
-        graft.functions.VecSumAgg.vecSum(col("embedding"))
-      case _ => graft.functions.VecSumAgg.vecSumD(col("embedding"))
+        graft.functions.VecSumAgg.vecSum(col("v"))
+      case _ => graft.functions.VecSumAgg.vecSumD(col("v"))
     }
     for (_ <- 1 to iters) {
-      cents = embeddings
-        .select(graft.functions.VecExpressions
-            .nearestCentroid(col("embedding"), cents).as("cluster"),
-          col("embedding"))
-        .groupBy(col("cluster"))
-        .agg(sumCol.as("s"), count(lit(1)).as("n"))
-        .collect()
-        .map { r =>
-          val n = r.getLong(2).toDouble
-          (r.getInt(0), r.getSeq[Double](1).map(s => rnd6(s / n)))
+      val sums = perSubspace(embeddings, m) { s =>
+          Seq(lit(s).as("s"),
+            nearestCentroid(subspace(s, m, dims), cents(s)).as("cluster"),
+            subspace(s, m, dims).as("v"))
         }
-        .toSeq.sortBy(_._1)
+        .groupBy(col("s"), col("cluster"))
+        .agg(sumCol.as("sum"), count(lit(1)).as("n"))
+        .collect()
+      cents = (0 until m).map { s =>
+        sums.toSeq.filter(_.getInt(0) == s).map { r =>
+          val n = r.getLong(3).toDouble
+          (r.getInt(1), r.getSeq[Double](2).map(x => rnd6(x / n)))
+        }.sortBy(_._1)
+      }
     }
     cents
   }
 
-  private def lloydAssign(embeddings0: DataFrame, k: Int,
-      iters: Int): (DataFrame, Seq[(Int, Seq[Double])]) = {
+  private def lloydAssign(embeddings0: DataFrame, k: Int, iters: Int,
+      m: Int, dims: Int): (DataFrame, Seq[Seq[(Int, Seq[Double])]]) = {
     // NearestCentroid is null-safe (null in -> null out), so a null
     // embedding row would land in a NULL cluster group and crash the
     // M-step's driver-side getInt; drop such rows up front — the same
     // silent-skip the old posexplode form applied (explode of null emits
     // nothing)
     val embeddings = embeddings0.where(col("embedding").isNotNull)
-    val cents = lloydTrain(embeddings, k, iters)
-    (assignFlat(embeddings, cents).localCheckpoint(), cents)
+    val cents = lloydTrain(embeddings, k, iters, m, dims)
+    (assign(embeddings, cents, dims).localCheckpoint(), cents)
   }
+
+  /** Flat assignment, (s, vec_id, cluster): per subspace one codegen
+    * pass (graft.functions.NearestCentroid) per row against a literal
+    * centroid table — same ascending-dim summation order and
+    * smallest-cid tie-break the `min(struct(d, cid))` oracle contract
+    * pins. The RAW column (not a transform-to-double projection) keeps
+    * it inside whole-stage codegen. */
+  private def assign(embeddings: DataFrame,
+      cents: Seq[Seq[(Int, Seq[Double])]], dims: Int): DataFrame =
+    perSubspace(embeddings, cents.length) { s =>
+      Seq(lit(s).as("s"), col("vec_id"),
+        graft.functions.VecExpressions
+          .nearestCentroid(subspace(s, cents.length, dims), cents(s))
+          .as("cluster"))
+    }
 
   // ------------------------------------------------------------------
   // Corpus-independent training + two-level assignment — the 100 TB
@@ -310,9 +352,10 @@ object Clustering {
         if (n <= trainCap) embNN
         else Sampling.deterministicSample(embNN, "vec_id",
           trainCap.toDouble / n)
-      val cents = lloydTrain(sample, k, iters)
+      val cents = lloydTrain(sample, k, iters).head
       val asg =
-        if (cents.length <= maxModelCentroids) assignFlat(embNN, cents)
+        if (cents.length <= maxModelCentroids)
+          assign(embNN, Seq(cents), 0).select(col("vec_id"), col("cluster"))
         else twoLevelAssignFrame(embNN, cents,
           if (coarseCentroids > 0) coarseCentroids
           else math.ceil(math.sqrt(cents.length.toDouble)).toInt)

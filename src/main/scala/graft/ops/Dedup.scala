@@ -651,7 +651,7 @@ object Dedup {
     * names — tokenize-with-offsets ONLY those docs (left-semi before
     * the UDF), localCheckpointed: the frame feeds multiple element_at
     * probes and an interpreted UDF re-inlined through a join would
-    * re-tokenize per span row (the pqTopK CollapseProject pathology).
+    * re-tokenize per span row (the CollapseProject pathology).
     * Shared by [[withCharSpans]] (d33) and the e15 splice lift
     * (`Pipeline.redactedTextFromSpans`). */
   private[graft] def tokenOffsetsFor(documents: DataFrame,
@@ -1652,7 +1652,7 @@ object Dedup {
     // without it CollapseProject inlines the per-word hash aggregate into
     // the sign lambda THROUGH the join, re-evaluating the O(len²)
     // interpreted poly-hash 60x per token row (measured: 73 s at sf0.1;
-    // 1.5 s with the barrier). Same pathology the pqTopK UDF chain hit.
+    // 1.5 s with the barrier). Same pathology a chained UDF hits.
     val whSigns = wh.select(col("word"),
       transform(sequence(lit(0), lit(bits - 1)), p =>
         when(graft.ops.Similarity.portableWeight(

@@ -168,15 +168,13 @@ object Memo {
           => () // data-in-plan
         case _: org.apache.spark.sql.execution.LogicalRDD
           => () // checkpoint: immutable, identity-keyed via the plan
+        // the analyzed plan's V2 leaf is the relation; the scan relation
+        // appears only after optimization
         case r: org.apache.spark.sql.execution.datasources.v2
-            .DataSourceV2ScanRelation =>
-          r.relation.table match {
-            case ft: org.apache.spark.sql.connector.catalog.Table
-              if ft.isInstanceOf[
-                org.apache.spark.sql.execution.datasources.v2.FileTable] =>
-              files ++= ft.asInstanceOf[
-                org.apache.spark.sql.execution.datasources.v2.FileTable]
-                .fileIndex.inputFiles
+            .DataSourceV2Relation =>
+          r.table match {
+            case ft: org.apache.spark.sql.execution.datasources.v2.FileTable =>
+              files ++= ft.fileIndex.inputFiles
             case _ => ok = false
           }
         case l => if (l.maxRows.isEmpty) ok = false

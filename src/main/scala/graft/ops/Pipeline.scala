@@ -556,7 +556,7 @@ object Pipeline {
         count(lit(1)).as("n_spans"),
         sum((col("e") - col("s")).cast("long")).as("n_chars_cut"))
       // barrier: the interpreted fold below must not re-inline through
-      // the text join per output row (the pqTopK discipline)
+      // the text join per output row (the CollapseProject barrier)
       .localCheckpoint()
     // token-constituent char class — the tokenizer's own contract
     // constant, shared so the splice joint-separator rule can never

@@ -10,12 +10,14 @@ import graft.functions.Vectors
   * column.
   *
   * Baseline: brute-force cosine top-k — exact, O(|Q| x |N|), the oracle for
-  * recall. Scale paths: hyperplane-LSH bucketed search (no training) and an
-  * IVF search with a k-means coarse quantizer. Both cut the candidate set
-  * from |N| to a bucket, trading recall for a scan reduction that grows
-  * with corpus size.
+  * recall. Scale paths: hyperplane-LSH bucketed search (no training), and
+  * one IVF/PQ kernel family trained by `Clustering`'s deterministic Lloyd
+  * loop — IVF (coarse cells), PQ (per-subspace codes scored by integer
+  * ADC), and their IVF-PQ / IVFADC compositions. Each cuts the candidate
+  * set or the per-candidate cost, trading recall for a scan reduction that
+  * grows with corpus size.
   *
-  * Plan shape shared by all three: per-vector norms are computed ONCE
+  * Plan shape shared by the rankers: per-vector norms are computed ONCE
   * before pairing (never per pair), the tiny query side is broadcast, and
   * only ids travel through dedup shuffles — embeddings are re-attached
   * after. */
@@ -39,9 +41,9 @@ object Similarity {
   /** Session memo for the IVFADC RESIDUAL frame (optimization round 2,
     * VERDICT #1): the exact-dyadic residual checkpoint is the corpus-side
     * substrate every sim12 invocation re-materialized — and because a
-    * localCheckpoint mints a fresh plan per call, the per-subspace Lloyd
-    * memos (`Clustering.assignCache`) keyed on slices of it could never
-    * hit across calls either. Memoizing the checkpoint restores both:
+    * localCheckpoint mints a fresh plan per call, the PQ Lloyd memo
+    * (`Clustering.assignCache`) keyed on it could never hit across calls
+    * either. Memoizing the checkpoint restores both:
     * one residual materialization per (corpus, cells, iters) per session,
     * and stable downstream assign/centroid memo keys. At 100 TB this IS
     * the persisted residual frame a real IVFADC deployment encodes from
@@ -78,44 +80,6 @@ object Similarity {
   private val blockedCache =
     new SessionMemo[(Plan, Int, Int, Int, Int), DataFrame](Seq(_))
 
-  /** Session memo for the IVF coarse quantizer, keyed by (canonicalized
-    * corpus plan, nCells) — the `Clustering.assignCache` pattern: sim3
-    * and sim5 search the same corpus with the same cell count, so MLlib
-    * KMeans trains once per session per (corpus, nCells) instead of per
-    * call. */
-  private val quantCache = new SessionMemo[(Plan, Int),
-    org.apache.spark.ml.clustering.KMeansModel]()
-
-  /** Session memo for PQ codebooks, keyed by (canonicalized corpus plan,
-    * m, k, dims, sampleN) — the `quantCache` discipline applied to the
-    * OTHER trained artifact: sim4 and sim5 encode the same corpus with
-    * the same PQ geometry, so the sample + driver Lloyd loop runs once
-    * per session per key instead of per call. */
-  private val pqCbCache = new SessionMemo[(Plan, Int, Int, Int, Int),
-    Array[Array[Array[Float]]]]()
-
-  private val toVecUdf = udf((a: Seq[Float]) =>
-    org.apache.spark.ml.linalg.Vectors.dense(a.map(_.toDouble).toArray))
-
-  /** `embeddings` + an MLlib vector column `fv` — the quantizer's
-    * training/assignment representation. */
-  private def withFeatureVec(embeddings: DataFrame): DataFrame =
-    embeddings.withColumn("fv", toVecUdf(col("embedding")))
-
-  private def coarseQuantizer(embeddings: DataFrame,
-      nCells: Int): org.apache.spark.ml.clustering.KMeansModel =
-    quantCache.getOrBuild(
-      (embeddings.queryExecution.analyzed.canonicalized, nCells),
-      embeddings) {
-      MemoLedger.timed("ivf_quantizer") {
-        new org.apache.spark.ml.clustering.KMeans()
-          .setK(nCells).setSeed(42L)
-          .setMaxIter(8).setInitMode("random") // coarse cells only — full
-          .setFeaturesCol("fv").setPredictionCol("cell") // convergence buys
-          .fit(withFeatureVec(embeddings)) // no recall at nprobe<<nCells
-      }
-    }
-
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", Vectors.normFast(col("embedding")))
 
@@ -141,13 +105,26 @@ object Similarity {
       .select(col("qid"), (col("rn0") + 1).cast("int").as("rn"),
         col("e.id").as("nid"), col("e.value").as("cos"))
 
+  /** Exact-cosine top-k over candidate (qid, nid) pairs: both sides'
+    * embeddings and precomputed norms re-attach to the candidate set
+    * (never to the full pair space), then [[rankTopK]] ranks. */
+  private def cosineRerank(cand: DataFrame, embeddings: DataFrame,
+      k: Int): DataFrame = {
+    val base = withNorm(embeddings)
+    rankTopK(cand
+      .join(base.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
+        col("nrm").as("q_nrm")), "qid")
+      .join(base.select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
+        col("nrm").as("n_nrm")), "nid"), k)
+  }
+
   /** Exact brute-force cosine top-k for queries `vec_id < numQueries`.
     * Degenerate (zero-norm) vectors produce NaN cosines and are EXCLUDED
     * from ranking — a query that is itself zero, or whose every
     * neighbor is zero, returns fewer than k rows (possibly none) rather
     * than arbitrarily-ranked NaN neighbors. Spec-pinned in
     * PipelineSpec; the same rule applies to every ranker below
-    * (`knnGraph`, `knnGraphBlocked`, `lshTopK`, `ivfTopK`). */
+    * (`knnGraph`, `knnGraphBlocked`, `lshTopK`, `portableIvfTopK`). */
   def bruteForceTopK(embeddings: DataFrame, numQueries: Int, k: Int): DataFrame =
     bruteForceTopKWhere(embeddings, col("vec_id") < numQueries, k)
 
@@ -875,13 +852,8 @@ object Similarity {
         col("tbl") === col("tbl2") && col("sig") === col("sig2") &&
           col("qid") =!= col("nid"))
       .select(col("qid"), col("nid")).distinct()
-    val base = withNorm(embeddings)
-    val pairs = candIds
-      .join(base.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm")), "nid")
-    rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"), col("cos"))
+    cosineRerank(candIds, embeddings, k)
+      .select(col("qid"), col("rn"), col("nid"), col("cos"))
   }
 
   /** Hyperplane-LSH ANN: candidates share a bucket with the query in any of
@@ -901,13 +873,8 @@ object Similarity {
       .join(broadcast(q), Seq("tbl", "sig"))
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid")).distinct()
-    val base = withNorm(embeddings)
-    val pairs = candIds
-      .join(base.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm")), "nid")
-    rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"), col("cos"))
+    cosineRerank(candIds, embeddings, k)
+      .select(col("qid"), col("rn"), col("nid"), col("cos"))
   }
 
   /** ENGINE-PORTABLE hyperplane-LSH top-1 — the oracle-checkable twin of
@@ -981,13 +948,7 @@ object Similarity {
       .join(broadcast(q), Seq("sig"))
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"))
-    val base = withNorm(embeddings)
-    val pairs = cand
-      .join(base.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm")), "nid")
-    rankTopK(pairs, 1).select(col("qid"), col("nid"))
+    cosineRerank(cand, embeddings, 1).select(col("qid"), col("nid"))
   }
 
   /** ENGINE-PORTABLE blocked kNN edges — each vector's exact-cosine top-1
@@ -1029,13 +990,7 @@ object Similarity {
       .join(sigs.toDF("nid", "sig2"),
         col("sig") === col("sig2") && col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"))
-    val base = withNorm(embeddings)
-    val pairs = cand
-      .join(base.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm")), "nid")
-    rankTopK(pairs, k)
+    cosineRerank(cand, embeddings, k)
   }
 
   /** ENGINE-PORTABLE embedding near-duplicate pairs — the oracle-checkable
@@ -1141,13 +1096,13 @@ object Similarity {
     out.toSeq.toDF("rk", "vec_id", "dmin")
   }
 
-  /** ENGINE-PORTABLE IVF top-k — the oracle-checkable twin of [[ivfTopK]],
+  /** ENGINE-PORTABLE IVF top-k (`sim3` at 16 cells, `sim8` hash-gated),
     * completing the pattern [[portableLshTop1]] set for LSH: the coarse
     * quantizer is `Clustering.kmeansAssign`'s deterministic Lloyd loop
     * (smallest-vec_id init, (d, cid) argmin tie-break, round-6 centroid
-    * snapping — the ml1/d15-proven oracle-able contract) instead of MLlib
-    * KMeans, so the DuckDB oracle rebuilds cells, probe order, and rerank
-    * bit-for-bit from the shared `kmeansCtes`.
+    * snapping — the ml1/d15-proven oracle-able contract), so the DuckDB
+    * oracle rebuilds cells, probe order, and rerank bit-for-bit from the
+    * shared `kmeansCtes`.
     *
     * Search shape is real IVF: rank cells by squared-L2 of query vs the
     * FINAL-round centroids (the same model the corpus assignment used —
@@ -1159,19 +1114,14 @@ object Similarity {
     *
     * Scale: the quantizer is k×dim driver rows broadcast back; cell
     * ranking is |Q|·cells tiny rows; the candidate join touches only the
-    * probed cells' assignment lists — same shape as `ivfTopK`. */
+    * probed cells' assignment lists. */
   def portableIvfTopK(embeddings: DataFrame, queryIds: Seq[Long],
       k: Int = 5, cells: Int = 8, iters: Int = 2,
       nprobe: Int = 2): DataFrame = {
     val cand = portableIvfCandidates(embeddings, queryIds, cells, iters,
       nprobe)
-    val base = withNorm(embeddings)
-    val pairs = cand
-      .join(base.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm")), "nid")
-    rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"))
+    cosineRerank(cand, embeddings, k)
+      .select(col("qid"), col("rn"), col("nid"))
   }
 
   /** Persist the IVF coarse structure as a DURABLE artifact — the sibling
@@ -1298,13 +1248,8 @@ object Similarity {
         .select(col("vec_id").as("nid"), col("cid")),
       spark.read.parquet(s"$indexDir/centroids"),
       embeddings, queryIds, nprobe)
-    val base = withNorm(embeddings)
-    val pairs = cand
-      .join(base.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm")), "qid")
-      .join(base.select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
-        col("nrm").as("n_nrm")), "nid")
-    rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"))
+    cosineRerank(cand, embeddings, k)
+      .select(col("qid"), col("rn"), col("nid"))
   }
 
   /** The coarse front end of [[portableIvfTopK]]/[[portableIvfPqTopK]]/
@@ -1355,16 +1300,14 @@ object Similarity {
       .select(col("qid"), col("nid"), col("cid"))
   }
 
-  /** ENGINE-PORTABLE PQ/ADC top-k — the oracle-checkable twin of
-    * [[pqTopK]] (`sim4`), completing external verification of the last
-    * ANN family without one. Three choices make every stage reproducible
-    * in DuckDB:
+  /** ENGINE-PORTABLE PQ/ADC top-k (`sim4` at 16×32 codes, `sim9`
+    * hash-gated). Three choices make every stage reproducible in DuckDB:
     *
     *  1. Codebooks come from the oracle-able Lloyd loop
     *     (`Clustering.kmeansAssign`'s smallest-vec_id init, (d, cid)
     *     argmin tie-break, round-6 centroid snapping) run independently
-    *     per subspace slice — the sim8 trick applied m times — instead of
-    *     the driver-sampled float Lloyd of [[pqCodebooks]];
+    *     per subspace slice — the sim8 trick applied m times, trained
+    *     together by `Clustering.pqModel`;
     *  2. the PQ code of a vector IS the final-round assignment of its
     *     subvector, so encode needs no new machinery or contract;
     *  3. ADC runs on 1e-6-QUANTIZED integers: the round-6-snapped
@@ -1379,12 +1322,11 @@ object Similarity {
     * centroids (tiny, broadcast), then every corpus code scores in m
     * table lookups — here expressed as a broadcast-join + (qid, nid)
     * partial agg over the (s, nid, cid) code table, the full-scan PQ
-    * form sim4 also uses (IVF-PQ restricts the scan to probed cells).
-    * `sim4`/`sim5` stay the float, sampled-training scale forms; recall
-    * remains their spec'd gate — this twin hash-gates the ALGORITHM.
+    * form (IVF-PQ restricts the scan to probed cells).
     *
-    * Scale: training is m Lloyd loops over (N, dims/m) slices (each
-    * memoized via `Clustering.assignCache`); the code table is m rows
+    * Scale: training is ONE grouped Lloyd loop over all m (N, dims/m)
+    * slices — one scan and one collect per round whatever m is
+    * (memoized via `Clustering.assignCache`); the code table is m rows
     * per vector (the persisted PQ index shape); the ADC join broadcasts
     * only |Q|·m·k table rows. */
   def portablePqTopK(embeddings: DataFrame, queryIds: Seq[Long],
@@ -1393,12 +1335,12 @@ object Similarity {
     rankAdc(portablePqScores(embeddings, queryIds, m, k, iters, dims, None),
       topK)
 
-  /** ENGINE-PORTABLE IVF+PQ top-k — the composed twin of [[ivfPqTopK]]
-    * (`sim5`), closing the ANN stack: sim8's oracle-able coarse quantizer
-    * restricts candidates to the `nprobe` probed Lloyd cells, and sim9's
-    * integer ADC scores exactly those candidates (the semi-join lands
-    * BEFORE the per-pair aggregation, so the fine stage's cost is
-    * proportional to the probed lists, the whole point of IVF). Both
+  /** ENGINE-PORTABLE IVF+PQ top-k (`sim10`, the raw-encode control of
+    * [[portableIvfAdcTopK]]), closing the ANN stack: sim8's oracle-able
+    * coarse quantizer restricts candidates to the `nprobe` probed Lloyd
+    * cells, and sim9's integer ADC scores exactly those candidates (the
+    * semi-join lands BEFORE the per-pair aggregation, so the fine stage's
+    * cost is proportional to the probed lists, the whole point of IVF). Both
     * stages are the already-hash-gated contracts, so the composition is
     * hash-gated end to end. */
   def portableIvfPqTopK(embeddings: DataFrame, queryIds: Seq[Long],
@@ -1411,11 +1353,12 @@ object Similarity {
       topK)
   }
 
-  /** ENGINE-PORTABLE IVFADC top-k — [[portableIvfPqTopK]] with the
-    * RESIDUAL encoding [[ivfPqTopK]]'s float scale form uses (classic
-    * IVFADC: codes are trained on v − c_cell, spending the per-subspace
-    * levels on a much tighter range), completing the portable-oracle
-    * program for the last spec-gated-only ANN path. The whole extension
+  /** ENGINE-PORTABLE IVFADC top-k (`sim5` at 16 cells and 16×32 codes,
+    * `sim12` hash-gated) — [[portableIvfPqTopK]] with the RESIDUAL
+    * encoding (classic IVFADC: codes are trained on v − c_cell, spending
+    * the per-subspace levels on a much tighter range; on a corpus with
+    * real cluster structure that wins recall at identical code size,
+    * which PipelineSpec pins on a planted-cluster fixture). The whole extension
     * stays on one exact integer grid — DYADIC (2^-20), not the usual
     * 1e-6, and the choice is load-bearing:
     *
@@ -1455,11 +1398,11 @@ object Similarity {
         e => e.getField("m")).as("cen"))
     // exact-dyadic residuals (see scaladoc), materialized once — the
     // stand-in for the persisted residual frame a real IVFADC deployment
-    // encodes from (8+ downstream scans across subspace training/encode
-    // would otherwise re-run the assign join per scan). SESSION-MEMOIZED
-    // (residCache): the checkpoint mints a fresh plan per call, so
-    // without the memo every invocation re-built the residual frame AND
-    // invalidated the per-subspace Lloyd memos keyed on its slices.
+    // encodes from (every Lloyd round and the encode pass would
+    // otherwise re-run the assign join). SESSION-MEMOIZED (residCache):
+    // the checkpoint mints a fresh plan per call, so without the memo
+    // every invocation re-built the residual frame AND invalidated the
+    // PQ Lloyd memo keyed on it.
     def residCompute: DataFrame = MemoLedger.timed("ivfadc_residuals") {
       embeddings
         .join(assign, "vec_id")
@@ -1536,24 +1479,15 @@ object Similarity {
       cand: Option[DataFrame], scale: Double = 1e6): DataFrame = {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val subDim = dims / m
-    val subs = (0 until m).map { s =>
-      corpus.select(col("vec_id"),
-        slice(col("embedding"), s * subDim + 1, subDim).as("embedding"))
-    }
-    // codes: (s, nid, cid) — the final-round assignment per subspace
-    val codes = subs.zipWithIndex.map { case (df, s) =>
-      Clustering.kmeansAssign(df, k, iters)
-        .select(lit(s).as("s"), col("vec_id").as("nid"),
-          col("cluster").as("cid"))
-    }.reduce(_ unionByName _)
-    // centroids on the exact integer grid (1e-6 for the raw path; the
-    // IVFADC caller passes the dyadic 2^-20 — see its scaladoc):
-    // (s, cid, i, mi)
-    val cents = subs.zipWithIndex.map { case (df, s) =>
-      Clustering.kmeansCentroids(df, k, iters)
-        .select(lit(s).as("s"), col("cid"), col("i"),
-          round(col("m") * scale).cast("long").as("mi"))
-    }.reduce(_ unionByName _)
+    // one grouped Lloyd run trains every subspace: codes (s, nid, cid) —
+    // the final-round assignment per subspace — and centroids on the
+    // exact integer grid (1e-6 for the raw path; the IVFADC caller
+    // passes the dyadic 2^-20 — see its scaladoc): (s, cid, i, mi)
+    val (asg, model) = Clustering.pqModel(corpus, m, k, iters, dims)
+    val codes = asg.select(col("s"), col("vec_id").as("nid"),
+      col("cluster").as("cid"))
+    val cents = model.select(col("s"), col("cid"), col("i"),
+      round(col("m") * scale).cast("long").as("mi"))
     // query subvector components on the same grid: (qid, s, i, qi)
     val qSub = queryVecs
       .where(col("vec_id").isin(queryIds.map(x => x: Any): _*))
@@ -1581,338 +1515,6 @@ object Similarity {
       .agg(sum(col("t")).as("adc"), count(lit(1)).as("nsub"))
       .where(col("nsub") === m)
       .select(col("qid"), col("nid"), col("adc"))
-  }
-
-  /** Product-quantization codebooks: split the embedding into `m`
-    * subspaces and k-means each on a bounded driver-side sample (the same
-    * sample-then-broadcast shape a 100 TB run uses — training never scans
-    * the corpus). The sample is a content-stable hash sample (threshold
-    * sized to ~1.3x sampleN, capped by taking the lowest hashes): unbiased
-    * across partitions — a bare `limit` would train on the first file's
-    * vectors only — and deterministic, since row selection depends only on
-    * vec_id. Returns [m][k][subDim] centroids. */
-  def pqCodebooks(embeddings: DataFrame, m: Int = 8, k: Int = 16,
-      dims: Int = 64, sampleN: Int = 2048): Array[Array[Array[Float]]] =
-    pqCbCache.getOrBuild((embeddings.queryExecution.analyzed.canonicalized,
-      m, k, dims, sampleN), embeddings) {
-      MemoLedger.timed("pq_codebooks") {
-        trainPqCodebooks(embeddings, m, k, dims, sampleN)
-      }
-    }
-
-  private def trainPqCodebooks(embeddings: DataFrame, m: Int, k: Int,
-      dims: Int, sampleN: Int): Array[Array[Array[Float]]] = {
-    val subDim = dims / m
-    val total = embeddings.count()
-    val frac = math.min(1.0, sampleN * 1.3 / math.max(total, 1L).toDouble)
-    val sample = embeddings
-      .select(col("embedding"), col("vec_id"),
-        Sampling.contentHash("vec_id").as("h"))
-      .where(col("h") < lit(Sampling.fractionThreshold(frac)))
-      .orderBy(col("h"), col("vec_id")) // TakeOrdered: distributed top-N cap
-      .limit(sampleN)
-      .select(col("embedding"))
-      .collect().map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
-    Array.tabulate(m) { s =>
-      val subs = sample.map(v => v.slice(s * subDim, (s + 1) * subDim))
-      // Lloyd's with deterministic FARTHEST-FIRST (maximin) seeding:
-      // seed 0 is the first sample subvector, each next seed the point
-      // farthest from its nearest existing seed (ties to the lowest
-      // index). Index-strided seeding drew near-duplicate seeds on
-      // clustered data, and a duplicate centroid never splits (Lloyd
-      // here has no empty-cluster escape) — maximin covers every
-      // distinct mode first, which is exactly what the per-subspace
-      // codebook needs (measured: resolves the planted-style palette
-      // the strided seeds collapsed; see PipelineSpec's IVFADC spec).
-      var centers = {
-        val seeds = new Array[Array[Float]](math.min(k, subs.length))
-        seeds(0) = subs(0).clone()
-        // d2(p) = squared distance from subs(p) to its nearest seed
-        val d2 = subs.map { v =>
-          var d = 0.0; var i = 0
-          while (i < subDim) {
-            val t = v(i) - seeds(0)(i); d += t * t; i += 1
-          }
-          d
-        }
-        var c = 1
-        while (c < seeds.length) {
-          var best = 0; var bd = -1.0
-          var p = 0
-          while (p < subs.length) {
-            if (d2(p) > bd) { bd = d2(p); best = p }
-            p += 1
-          }
-          seeds(c) = subs(best).clone()
-          p = 0
-          while (p < subs.length) {
-            var d = 0.0; var i = 0
-            while (i < subDim) {
-              val t = subs(p)(i) - seeds(c)(i); d += t * t; i += 1
-            }
-            if (d < d2(p)) d2(p) = d
-            p += 1
-          }
-          c += 1
-        }
-        // fewer sample rows than k: pad with repeats (harmless)
-        Array.tabulate(k)(i => seeds(i % seeds.length).clone())
-      }
-      for (_ <- 0 until 10) {
-        val sums = Array.fill(k)(new Array[Double](subDim))
-        val cnts = new Array[Int](k)
-        subs.foreach { v =>
-          var best = 0; var bd = Double.MaxValue
-          var c = 0
-          while (c < k) {
-            var d = 0.0; var i = 0
-            while (i < subDim) {
-              val t = v(i) - centers(c)(i); d += t * t; i += 1
-            }
-            if (d < bd) { bd = d; best = c }
-            c += 1
-          }
-          var i = 0
-          while (i < subDim) { sums(best)(i) += v(i); i += 1 }
-          cnts(best) += 1
-        }
-        centers = Array.tabulate(k)(c =>
-          if (cnts(c) == 0) centers(c)
-          else Array.tabulate(subDim)(i => (sums(c)(i) / cnts(c)).toFloat))
-      }
-      centers
-    }
-  }
-
-  /** PQ-encode the corpus: each vector becomes `m` one-byte centroid ids —
-    * 64 float dims compress to 8 bytes (32x). Narrow UDF, no shuffle. */
-  def pqEncode(embeddings: DataFrame,
-      codebooks: Array[Array[Array[Float]]]): DataFrame = {
-    val spark = embeddings.sparkSession
-    val bc = spark.sparkContext.broadcast(codebooks)
-    val enc = udf { (v: Seq[Float]) =>
-      val cbs = bc.value
-      val m = cbs.length
-      val subDim = cbs(0)(0).length
-      Array.tabulate(m) { s =>
-        var best = 0; var bd = Double.MaxValue
-        var c = 0
-        while (c < cbs(s).length) {
-          var d = 0.0; var i = 0
-          while (i < subDim) {
-            val t = v(s * subDim + i) - cbs(s)(c)(i); d += t * t; i += 1
-          }
-          if (d < bd) { bd = d; best = c }
-          c += 1
-        }
-        best.toByte
-      }
-    }
-    embeddings.select(col("vec_id"), enc(col("embedding")).as("code"))
-  }
-
-  /** Driver-side ADC preparation shared by the PQ search variants: per
-    * collected query row, an m x k table of subspace dot products against
-    * the codebooks — scoring a code is then m table lookups. */
-  private def adcTables(qRows: Array[org.apache.spark.sql.Row],
-      cbs: Array[Array[Array[Float]]], m: Int, k: Int,
-      subDim: Int): Map[Long, Array[Float]] =
-    qRows.map { r =>
-      val qid = r.getLong(0)
-      val q = r.getSeq[Float](1)
-      qid -> Array.tabulate(m * k) { idx =>
-        val sub = idx / k; val cc = idx % k
-        var s = 0.0f; var i = 0
-        while (i < subDim) { s += q(sub * subDim + i) * cbs(sub)(cc)(i); i += 1 }
-        s
-      }
-    }.toMap
-
-  /** The per-pair ADC scorer: only a long qid and the m-byte code cross
-    * the UDF boundary (no float array conversion per row). */
-  private def adcScoreUdf(spark: org.apache.spark.sql.SparkSession,
-      tables: Map[Long, Array[Float]], m: Int, k: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val tbc = spark.sparkContext.broadcast(tables)
-    udf { (qid: Long, code: Array[Byte]) =>
-      val adc = tbc.value(qid)
-      var s = 0.0; var sub = 0
-      while (sub < m) { s += adc(sub * k + (code(sub) & 0xff)); sub += 1 }
-      s
-    }
-  }
-
-  /** PQ ANN (asymmetric distance): queries stay exact; each query
-    * precomputes an m x k table of subspace dot products against the
-    * codebooks, and every corpus code scores in O(m) table lookups.
-    * Here the code scan is the whole corpus (PQ's memory win: codes are
-    * 32x smaller than vectors, so the scan is bandwidth-cheap); at 100 TB
-    * the same scoring runs inside IVF cells (IVF-PQ). Top-k per query via
-    * the window rank. */
-  def pqTopK(embeddings: DataFrame, numQueries: Int, topK: Int,
-      m: Int = 8, k: Int = 16, dims: Int = 64): DataFrame = {
-    val spark = embeddings.sparkSession
-    val cbs = pqCodebooks(embeddings, m, k, dims)
-    val subDim = dims / m
-    val (mL, kL) = (m, k)
-    // materialize the code table: without the barrier CollapseProject
-    // inlines the encode UDF into the scoring projection ABOVE the join
-    // and re-encodes every (query x code) pair (measured 60x slowdown).
-    // At scale the codes ARE the persisted PQ index, so this matches the
-    // real deployment anyway.
-    val codes = pqEncode(embeddings, cbs).localCheckpoint()
-    // ADC tables computed driver-side for the (small by definition) query
-    // set and broadcast as a map — the per-pair scorer receives only a
-    // long qid and the m-byte code, so NO float array crosses the UDF
-    // boundary per row (array-column conversion costs ~100x the lookups)
-    val qRows = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-    val tables = adcTables(qRows, cbs, mL, kL, subDim)
-    import spark.implicits._
-    val queries = tables.keys.toSeq.toDF("qid")
-    val score = adcScoreUdf(spark, tables, mL, kL)
-    codes.toDF("nid", "code")
-      .crossJoin(broadcast(queries))
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        score(col("qid"), col("code")).as("approx_dot"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("approx_dot").desc, col("nid"))))
-      .where(col("rn") <= topK)
-      .select(col("qid"), col("rn"), col("nid"))
-  }
-
-  /** IVF-PQ ANN — the composition a production-scale vector index runs:
-    * the IVF coarse quantizer restricts each query to `nprobe` cells, and
-    * inside the probed cells distance is approximated by PQ asymmetric
-    * distance over m-byte codes instead of exact cosine over raw vectors.
-    * The index is (cell, code) per vector — at 100 TB both are persisted
-    * artifacts ~32x smaller than the embeddings, and a query touches
-    * nprobe/nCells of the code table and zero raw corpus vectors.
-    *
-    * Codes are trained and encoded on CELL RESIDUALS (v − its cell
-    * centroid) — classic IVFADC: residual magnitudes are a fraction of
-    * raw-vector magnitudes, so the same m-byte code spends its k levels
-    * per subspace on a much tighter range, buying recall at identical
-    * code size. The dot product decomposes exactly:
-    * dot(q, v) ≈ dot(q, c_cell) + dot(q, r̂) — the first term is ONE
-    * driver-computed scalar per (query, probed cell) riding the
-    * broadcast probe frame, and the second is the usual m-lookup ADC
-    * over RESIDUAL codebooks, so per-(query, cell) tables cost nothing
-    * extra. The query side stays driver-built and broadcast exactly
-    * like `pqTopK`: no float array ever crosses the UDF boundary.
-    *
-    * `residualEncode = false` keeps the raw-vector encoding as a
-    * measurable CONTROL: on a corpus with real cluster structure the
-    * residual codes win recall at identical code size (PipelineSpec
-    * pins the differential on a planted-cluster fixture); on
-    * near-uniform data — this repo's synthetic embeddings — the two are
-    * statistically indistinguishable. */
-  def ivfPqTopK(embeddings: DataFrame, numQueries: Int, topK: Int,
-      nCells: Int = 16, nprobe: Int = 4, m: Int = 8, k: Int = 16,
-      dims: Int = 64, residualEncode: Boolean = true): DataFrame = {
-    val spark = embeddings.sparkSession
-    val subDim = dims / m
-    val (mL, kL) = (m, k)
-    val withVec = withFeatureVec(embeddings)
-    val model = coarseQuantizer(embeddings, nCells)
-    val centers = model.clusterCenters
-    // one quantizer pass feeds BOTH the residual computation and the
-    // index cells (localCheckpoint: the stand-in for the persisted
-    // assignment table a real deployment reads)
-    val assigned = model.transform(withVec)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-      .localCheckpoint()
-    val bcCenters = spark.sparkContext.broadcast(
-      centers.map(_.toArray.map(_.toFloat)))
-    val residUdf = udf { (v: Seq[Float], cell: Int) =>
-      val c = bcCenters.value(cell)
-      Array.tabulate(v.length)(i => v(i) - c(i))
-    }
-    val codeInput =
-      if (residualEncode)
-        assigned.select(col("vec_id"),
-          residUdf(col("embedding"), col("cell")).as("embedding"))
-      else assigned.select(col("vec_id"), col("embedding"))
-    // RESIDUAL codebooks + codes: same trainer/encoder, tighter range.
-    // Trained directly (not through the pqCodebooks memo): the code
-    // input's plan embeds a per-call UDF/checkpoint instance, so
-    // plan-keyed entries would never hit and only accumulate
-    val cbs = trainPqCodebooks(codeInput, m, k, dims, sampleN = 2048)
-    // the persisted index: (nid, cell, code) — localCheckpoint is both the
-    // CollapseProject barrier (see pqTopK) and the stand-in for reading a
-    // written index table
-    val index = assigned.select(col("vec_id").as("nid"), col("cell"))
-      .join(pqEncode(codeInput, cbs).toDF("nid", "code"), "nid")
-      .localCheckpoint()
-    // driver-side query prep (queries are small by definition): residual
-    // ADC table per query, plus per probed cell the exact dot(q, c_cell)
-    // offset the decomposition needs
-    val qRows = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-    val tables = adcTables(qRows, cbs, mL, kL, subDim)
-    val probes: Seq[(Long, Int, Double)] = qRows.toSeq.flatMap { r =>
-      val qid = r.getLong(0)
-      val q = r.getSeq[Float](1)
-      centers.indices.map { c =>
-        val ca = centers(c).toArray
-        var d2 = 0.0; var dot = 0.0; var i = 0
-        while (i < ca.length) {
-          val t = ca(i) - q(i); d2 += t * t; dot += q(i) * ca(i); i += 1
-        }
-        (c, d2, dot)
-      }.sortBy { case (c, d2, _) => (d2, c) }
-        .take(nprobe).map { case (c, _, dot) =>
-          // raw encoding approximates dot(q, v) directly: no offset
-          (qid, c.toInt, if (residualEncode) dot else 0.0) }
-    }
-    import spark.implicits._
-    val probeDf = probes.toDF("qid", "cell", "cdot")
-    val score = adcScoreUdf(spark, tables, mL, kL)
-    index.join(broadcast(probeDf), Seq("cell"))
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (col("cdot") + score(col("qid"), col("code"))).as("approx_dot"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("approx_dot").desc, col("nid"))))
-      .where(col("rn") <= topK)
-      .select(col("qid"), col("rn"), col("nid"))
-  }
-
-  /** IVF ANN: k-means coarse quantizer (MLlib, fixed seed) partitions the
-    * corpus into cells; each query probes the `nprobe` cells whose
-    * centroids are nearest, then exact cosine ranks candidates. At 100 TB
-    * the centroids are trained on a sample and the corpus is written
-    * bucketed by cell, so a query touches nprobe/nCells of the data. */
-  def ivfTopK(embeddings: DataFrame, numQueries: Int, k: Int,
-      nCells: Int = 16, nprobe: Int = 2): DataFrame = {
-    val withVec = withFeatureVec(embeddings)
-    val model = coarseQuantizer(embeddings, nCells)
-    val base = withNorm(model.transform(withVec))
-    val corpus = base.select(col("vec_id").as("nid"),
-      col("embedding").as("n_emb"), col("nrm").as("n_nrm"), col("cell"))
-    val centersLit = array(model.clusterCenters.zipWithIndex.map {
-      case (c, i) => struct(lit(i).as("cell"),
-        array(c.toArray.map(lit(_)): _*).as("ctr"))
-    }: _*)
-    val sqDist = aggregate(
-      zip_with(transform(col("q_emb"), x => x.cast("double")),
-        col("c.ctr"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-    val q = base.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-      .withColumn("c", explode(centersLit))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(sqDist, col("c.cell"))))
-      .where(col("rk") <= nprobe)
-      .select(col("qid"), col("q_emb"), col("q_nrm"), col("c.cell").as("cell"))
-    val pairs = corpus.join(broadcast(q), Seq("cell"))
-      .where(col("qid") =!= col("nid"))
-    rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"), col("cos"))
   }
 
   /** Per-dimension int8 (256-level min-max) quantization error report —

@@ -133,6 +133,36 @@ class MemoSpec extends GraftSuite {
     } finally cached.unpersist()
   }
 
+  test("Memo.filesHashOf keys a V2 file source by its files, and the " +
+      "key changes after an append") {
+    val key = "spark.sql.sources.useV1SourceList"
+    val dir = java.nio.file.Files.createTempDirectory("graft_v2")
+      .resolve("documents").toString
+    val docs = Tables.load(spark, sf, "documents")
+    docs.write.parquet(dir)
+    // a plain parquet read through the V2 file source
+    def v2Hash(): Option[Int] = {
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, "")
+      try {
+        val df = spark.read.parquet(dir)
+        assert(df.queryExecution.analyzed.collectLeaves().exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2Relation]), "the read must resolve to a V2 relation")
+        Memo.filesHashOf(df)
+      } finally old match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+    val before = v2Hash()
+    assert(before.isDefined, "a V2 parquet read must be keyed by its files")
+    docs.limit(5).write.mode("append").parquet(dir)
+    val after = v2Hash()
+    assert(after.isDefined && after != before,
+      s"the append must change the key: $before -> $after")
+  }
+
   test("survivor memo retention bound: memoized frames carry only " +
       "doc_id — never text (VERDICT #2)") {
     Memo.clearAll()

@@ -200,7 +200,8 @@ class PipelineSpec extends GraftSuite {
   test("sim3 IVF ANN recall@5 vs brute force") {
     val truth = Similarity.bruteForceTopK(emb, 50, 1)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val got = Similarity.ivfTopK(emb, 50, 5)
+    val got = Similarity.portableIvfTopK(emb, 0L until 50L, k = 5,
+        cells = 16, nprobe = 2)
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(2)).toSet).toMap
     val recall = truth.count { case (q, n) =>
@@ -213,7 +214,8 @@ class PipelineSpec extends GraftSuite {
   test("sim4 PQ ANN: compressed codes, recall@5 vs brute force") {
     val truth = Similarity.bruteForceTopK(emb, 50, 1)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val got = Similarity.pqTopK(emb, 50, 5, m = 16, k = 32)
+    val got = Similarity.portablePqTopK(emb, 0L until 50L, topK = 5,
+        m = 16, k = 32)
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(2)).toSet).toMap
     val recall = truth.count { case (q, n) =>
@@ -221,11 +223,34 @@ class PipelineSpec extends GraftSuite {
     }.toDouble / truth.size
     info(s"PQ (16x32, 16x compression) ANN recall@5: $recall")
     assert(recall >= 0.3)
-    // codes really are m bytes
-    val code = Similarity.pqEncode(emb,
-      Similarity.pqCodebooks(emb)).select("code").head
-      .getAs[Array[Byte]](0)
-    assert(code.length == 8)
+    // every vector carries m codes, each a centroid id in [0, k)
+    val (codes, _) = Clustering.pqModel(emb, m = 16, k = 32, iters = 2,
+      dims = 64)
+    val perVec = codes.groupBy("vec_id")
+      .agg(count(lit(1)).as("n"), countDistinct("s").as("subs"),
+        min("cluster").as("lo"), max("cluster").as("hi"))
+      .collect()
+    assert(perVec.length == emb.count())
+    perVec.foreach { r =>
+      assert(r.getLong(1) == 16 && r.getLong(2) == 16,
+        s"vector ${r.getLong(0)} must carry one code per subspace: $r")
+      assert(r.getInt(3) >= 0 && r.getInt(4) < 32, s"code out of range: $r")
+    }
+  }
+
+  test("grouped PQ training: m = 16 subspaces run no more cold jobs " +
+      "than m = 4") {
+    def coldJobs(m: Int): Int = {
+      Memo.clearAll()
+      jobsOf(Similarity.portablePqTopK(emb, Seq(0L, 1L, 2L), m = m, k = 8)
+        .collect())
+    }
+    val (j4, j16) = (coldJobs(4), coldJobs(16))
+    Memo.clearAll()
+    info(s"cold jobs: m = 4 -> $j4, m = 16 -> $j16")
+    // one scan and one collect per Lloyd round for all subspaces: the
+    // job count must not grow with the subspace count
+    assert(j16 <= j4, s"m = 16 ran $j16 cold jobs against $j4 at m = 4")
   }
 
   test("sim rankers exclude NaN cosines: zero vectors get no neighbor rows") {
@@ -1386,8 +1411,8 @@ class PipelineSpec extends GraftSuite {
   test("sim5 IVF-PQ ANN: probed-cell code scan, recall@5 vs brute force") {
     val truth = Similarity.bruteForceTopK(emb, 50, 1)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val got = Similarity.ivfPqTopK(emb, 50, 5, nCells = 16, nprobe = 4,
-        m = 16, k = 32)
+    val got = Similarity.portableIvfAdcTopK(emb, 0L until 50L, topK = 5,
+        cells = 16, nprobe = 4, m = 16, k = 32)
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(2)).toSet).toMap
     val recall = truth.count { case (q, n) =>
@@ -1398,7 +1423,8 @@ class PipelineSpec extends GraftSuite {
     // recall must stay in the same band as its two components
     assert(recall >= 0.3)
     // result count respects topK per query
-    Similarity.ivfPqTopK(emb, 10, 5).groupBy("qid").count().collect()
+    Similarity.portableIvfAdcTopK(emb, 0L until 10L, topK = 5)
+      .groupBy("qid").count().collect()
       .foreach(r => assert(r.getLong(1) <= 5))
   }
 
@@ -1427,8 +1453,8 @@ class PipelineSpec extends GraftSuite {
       (i.toLong, raw)
     }
     val emb = pts.toDF("vec_id", "embedding").localCheckpoint()
-    // truth by EXACT DOT (what ivfPqTopK approximates): driver-side over
-    // the 320-vector fixture
+    // truth by EXACT DOT (what the IVF-PQ score approximates):
+    // driver-side over the 320-vector fixture
     val vecs = pts.toMap
     def dotp(a: Array[Float], b: Array[Float]): Double =
       a.zip(b).map { case (x, y) => x.toDouble * y }.sum
@@ -1438,8 +1464,12 @@ class PipelineSpec extends GraftSuite {
         .maxBy(j => (dotp(qv, vecs(j.toLong)), -j)).toLong
     }.toMap
     def recallOf(residual: Boolean): Double = {
-      val got = Similarity.ivfPqTopK(emb, 24, 5, nCells = 8, nprobe = 2,
-          m = 8, k = 16, dims = dims, residualEncode = residual)
+      val qids = 0L until 24L
+      val got = (if (residual)
+          Similarity.portableIvfAdcTopK(emb, qids, topK = 5, cells = 8,
+            nprobe = 2, m = 8, k = 16, dims = dims)
+        else Similarity.portableIvfPqTopK(emb, qids, topK = 5, cells = 8,
+            nprobe = 2, m = 8, k = 16, dims = dims))
         .collect().groupBy(_.getLong(0))
         .view.mapValues(_.map(_.getLong(2)).toSet).toMap
       truth.count { case (q, n) =>
@@ -1449,7 +1479,7 @@ class PipelineSpec extends GraftSuite {
     val (rRes, rRaw) = (recallOf(residual = true),
       recallOf(residual = false))
     info(s"clustered recall@5: residual $rRes vs raw $rRaw")
-    // the measured gap (0.54 vs 0.33 at this fixture): residual codes
+    // the measured gap (0.708 vs 0.25 at this fixture): residual codes
     // spend their 16 levels on the 9-value style palette; raw codes
     // spread them over 8 clusters x styles and collapse within-cluster
     // structure. Everything is deterministic — these are exact floors.

@@ -96,14 +96,17 @@ class PlanSpec extends GraftSuite {
 
   test("sim12 portable IVFADC: relational all the way down — no " +
       "ScalaUDF, broadcast ADC tables, no cartesian") {
-    val df = SparkEntry.queries("sim12_ivfadc_portable")(spark, sf)
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("ScalaUDF"),
-      s"the portable path must not fall back to a black-box UDF:\n" +
-        p.take(1500))
-    assert(p.contains("BroadcastHashJoin"),
-      "per-query ADC tables / centroid frames must broadcast")
-    assert(!p.contains("CartesianProduct"))
+    for (q <- Seq("sim12_ivfadc_portable", "sim3_ivf_topk", "sim4_pq_topk",
+        "sim5_ivfpq_topk")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("ScalaUDF"),
+        s"$q: the portable path must not fall back to a black-box UDF:\n" +
+          p.take(1500))
+      assert(p.contains("BroadcastHashJoin"),
+        s"$q: per-query ADC tables / centroid frames must broadcast")
+      assert(!p.contains("CartesianProduct"), q)
+    }
     graft.ops.Memo.clearAll()
   }
 
