@@ -16,51 +16,41 @@ import org.apache.spark.sql.functions._
   * blowup of a naive inverted-index self-join on Zipfian text — land at
   * the end of the document-frequency order and drop out of the prefixes.
   *
-  * Caching discipline: the (doc_id, shingle) frame is the shared substrate
-  * of the whole dedup family (Jaccard, MinHash, edit-distance, clusters,
-  * corpus dedup) — it is `persist()`ed so Spark's CacheManager serves every
-  * later query on the same corpus from one materialization (plan-equality
-  * reuse; storage is MEMORY_AND_DISK and evictable under pressure, so the
-  * one cached frame per (corpus, n) cannot OOM a long session; call
-  * `unpersistShingles` to drop it eagerly). Small per-doc aggregates
-  * derived per query use `localCheckpoint()` instead: lineage truncated,
-  * blocks released by the ContextCleaner once the query's plan is GC'd.
+  * Caching discipline: the frames the dedup family shares across queries
+  * (hashed shingles, token arrays, positional shingles, shingle sets,
+  * verified Jaccard pairs, quote flags and redaction spans) are
+  * `Memo.substrate` values: one checkpoint per (corpus, parameters) per
+  * session, replaced when a store the corpus reads has grown, and
+  * released by `Memo.clearAll()`. Small per-doc aggregates derived per
+  * query use `localCheckpoint()` directly: lineage truncated, blocks
+  * released by the ContextCleaner once the query's plan is GC'd.
   */
 object Dedup {
 
   /** Memoized dedup substrate: distinct (doc_id, shingle) pairs with the
-    * shingle xxhash64-HASHED to a long, persisted for cross-query reuse
-    * (see class doc). Hashing at the substrate cuts shuffle/cache bytes
-    * ~3x vs n-gram strings and keeps every downstream comparison a cheap
-    * long compare; set semantics are exact modulo 64-bit collisions
-    * (P[any] ≈ |shingles|²/2⁶⁵ — ~1e-7 even at 10⁹ distinct shingles,
-    * standard for shingle-based dedup at scale). Safe to call repeatedly —
-    * an already-cached plan is served from the existing entry. */
-  private[ops] def shingleCache(documents: DataFrame, n: Int): DataFrame = {
-    val sh = shingles(documents, n)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-    Memo.persist(sh)
-  }
+    * shingle xxhash64-HASHED to a long (see class doc). Hashing at the
+    * substrate cuts shuffle/cache bytes ~3x vs n-gram strings and keeps
+    * every downstream comparison a cheap long compare; set semantics are
+    * exact modulo 64-bit collisions (P[any] ≈ |shingles|²/2⁶⁵ — ~1e-7
+    * even at 10⁹ distinct shingles, standard for shingle-based dedup at
+    * scale). */
+  private[ops] def shingleCache(documents: DataFrame, n: Int): DataFrame =
+    Memo.substrate(("shingles", n), documents) {
+      shingles(documents, n)
+        .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
+    }
 
   /** Memoized token-array substrate: (doc_id, toks) under the standard
-    * tokenizer, persisted with the same plan-equality reuse as the
-    * shingle substrate — the segment-op family (d11 boilerplate, d12
-    * repeated n-grams, t10 boilerplate stats, d14 dup spans) all start
-    * from this frame, so a session tokenizes each corpus ONCE for the
-    * whole family instead of once per query. */
-  private[ops] def tokenCache(documents: DataFrame): DataFrame = {
-    val tok = documents.select(col("doc_id"),
-      graft.functions.Text.tokenizeUdf(col("text")).as("toks"))
-    Memo.persist(tok)
-  }
+    * tokenizer — the segment-op family (d11 boilerplate, d12 repeated
+    * n-grams, t10 boilerplate stats, d14 dup spans) and the positional
+    * shingles all start from this frame, so a session tokenizes each
+    * corpus ONCE for the whole family instead of once per query. */
+  private[graft] def tokenCache(documents: DataFrame): DataFrame =
+    Memo.substrate("tokens", documents)(tokens(documents))
 
-  /** Drop the persisted shingle substrate for a corpus (library users
-    * running one-shot dedup jobs who want storage back immediately;
-    * `Memo.clearAll()` drops everything at once). */
-  def unpersistShingles(documents: DataFrame, n: Int): Unit =
-    shingles(documents, n)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-      .unpersist()
+  private def tokens(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"),
+      graft.functions.Text.tokenizeUdf(col("text")).as("toks"))
 
   private[ops] def normText = trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))
 
@@ -76,8 +66,10 @@ object Dedup {
     * narrow `array_distinct` BEFORE the explode — no global distinct, so
     * the substrate costs zero shuffles. */
   def shingles(documents: DataFrame, n: Int): DataFrame = {
-    val toks = graft.functions.Text.tokenizeUdf(col("text"))
-    documents.select(col("doc_id"),
+    // the tokens are a projected column, not the UDF inlined into the
+    // lambda: there it would re-tokenize the document once per position
+    val toks = col("toks")
+    tokens(documents).select(col("doc_id"),
       explode(array_distinct(transform(
         sequence(lit(0), greatest(size(toks) - n, lit(0))),
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))).as("shingle"))
@@ -123,16 +115,16 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select(col("doc1"), col("doc2"), col("jaccard"))
 
-  /** The persisted per-doc shingle-set frame (sets + sizes + PPJoin
+  /** The memoized per-doc shingle-set frame (sets + sizes + PPJoin
     * prefixes) for a (corpus, n, threshold) triple — the substrate every
-    * set-based dedup query reuses via CacheManager plan-equality. The
-    * count() is a materialization barrier — without it the multiple scans
-    * inside one action would each compute the uncached plan concurrently. */
+    * set-based dedup query reuses. Checkpointed even when it cannot
+    * memoize: a materialization barrier, without which the multiple scans
+    * inside one action would each compute the plan. */
   private[ops] def cachedSets(documents: DataFrame, n: Int,
-      threshold: Double): DataFrame = {
-    val sets = shingleSets(shingleCache(documents, n), threshold)
-    Memo.persist(sets, materialize = true)
-  }
+      threshold: Double): DataFrame =
+    Memo.substrate(("sets", n, threshold), documents, materialize = true) {
+      shingleSets(shingleCache(documents, n), threshold)
+    }
 
   /** Materialize the dedup substrate (hashed shingles + per-doc shingle
     * sets with PPJoin prefixes) for a corpus ahead of query time. At scale
@@ -194,16 +186,13 @@ object Dedup {
     * doc1 < doc2 canonical order. Identical result set to
     * `jaccardPairsDirect` (spec-enforced) at a fraction of the candidate
     * join size on Zipfian corpora. */
-  def jaccardPairs(documents: DataFrame, n: Int, threshold: Double): DataFrame = {
-    // persist (not localCheckpoint): the per-doc set frame is shared by the
-    // three consumers below AND by every other query on the same corpus +
-    // threshold (d2/d6/d7 in the bench suite) via plan-equality cache reuse.
-    val sets = cachedSets(documents, n, threshold)
+  def jaccardPairs(documents: DataFrame, n: Int, threshold: Double): DataFrame =
     // the verified pair set is tiny (near-dups only) and is re-consumed by
-    // dedupedCorpus / dupClusters — persist it once, same barrier pattern.
-    val out = pairsFromSets(sets, threshold)
-    Memo.persist(out, materialize = true)
-  }
+    // dedupedCorpus / dupClusters and every query on the same corpus +
+    // threshold (d2/d6/d7 in the bench suite) — memoized, same barrier
+    Memo.substrate(("jaccard", n, threshold), documents, materialize = true) {
+      pairsFromSets(cachedSets(documents, n, threshold), threshold)
+    }
 
   /** PPJoin candidate generation + exact-Jaccard verification over a
     * prepared shingle-set frame (`shingleSets` output) — the core of
@@ -261,8 +250,8 @@ object Dedup {
     * dedup (gmall-realtime-dws/.../split analytics), generalized. */
   /** The SHIFT-CONSISTENT containment rollup shared by d24 (video
     * frames), d27 (text shingle positions) and d28 (quote probe): given
-    * matched POSITION pairs `cross(doc1, doc2, k1, k2)` and per-doc
-    * position counts `nf(doc_id, n)`, emit (doc1, doc2, containment,
+    * matched POSITION pairs `cross(doc1, doc2, k1, k2, na, nb)`, each
+    * carrying both docs' position counts, emit (doc1, doc2, containment,
     * containment_any, shift) where `shift` is the pair's dominant offset
     * (most frequent k2−k1, ties to the smallest), `containment` counts
     * only DISTINCT positions matched within ±`tol` of it (a true
@@ -274,28 +263,27 @@ object Dedup {
     * groups by (doc1, doc2, shift) into a count and the distinct k1 and
     * k2 sets; the second groups by pair, takes the dominant shift as
     * `min(struct(-cnt, shift))` and keeps the per-shift sets, whose
-    * flattened distinct sizes are the four match counts. No window, no
-    * re-join of `cross`, no multi-distinct Expand.
+    * flattened distinct sizes are the four match counts. The counts ride
+    * along as grouping keys (each is a function of its doc). No window,
+    * no join, no multi-distinct Expand.
     *
     * `countBound` drops, before any set is flattened, every pair whose
     * total match count m = Σcnt is below t·min(na, nb) (less 1e-9 of fp
     * slack). Distinct matches never exceed m, so the bound is exact: it
     * only saves work, and the output is the same either way. */
-  private[graft] def shiftConsistentRollup(cross: DataFrame, nf: DataFrame,
+  private[graft] def shiftConsistentRollup(cross: DataFrame,
       threshold: Double, tol: Int, countBound: Boolean = false): DataFrame = {
     require(tol >= 0, "tol must be non-negative")
+    val pair = Seq(col("doc1"), col("doc2"), col("na"), col("nb"))
     val pairs = cross
-      .groupBy(col("doc1"), col("doc2"),
-        (col("k2") - col("k1")).as("shift"))
+      .groupBy(pair :+ (col("k2") - col("k1")).as("shift"): _*)
       .agg(count(lit(1)).as("cnt"), collect_set(col("k1")).as("s1"),
         collect_set(col("k2")).as("s2"))
-      .groupBy(col("doc1"), col("doc2"))
+      .groupBy(pair: _*)
       .agg(min(struct((-col("cnt")).as("neg_cnt"), col("shift")))
           .getField("shift").as("shift"),
         sum(col("cnt")).as("m"),
         collect_list(struct(col("shift"), col("s1"), col("s2"))).as("by"))
-      .join(nf.select(col("doc_id").as("doc1"), col("n").as("na")), "doc1")
-      .join(nf.select(col("doc_id").as("doc2"), col("n").as("nb")), "doc2")
     val bounded = if (!countBound) pairs else pairs.where(col("m") >=
       lit(threshold) * least(col("na"), col("nb")) - lit(1e-9))
     // distinct positions of one side over a list of per-shift sets
@@ -351,8 +339,8 @@ object Dedup {
       "threshold must sit in (0, 1]")
     val pos = positionalShingles(documents, n)
     val np = pos.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    def leg(d: String, k: String) = pos.select(col("doc_id").as(d),
-      col("i").as(k), col("shingle"))
+    def leg(d: String, k: String, nn: String) = pos.select(
+      col("doc_id").as(d), col("i").as(k), col("shingle"), col("np").as(nn))
     // a supplied candidate frame (doc1, doc2) RESTRICTS the output to
     // those pairs and skips the Σ df² join entirely — the web-scale
     // composition (LSH/minhash candidates feed this), with recall owned
@@ -362,7 +350,7 @@ object Dedup {
       case Some(c) => c.select(col("doc1"), col("doc2"))
       case None if !prefilter => null
       case None =>
-        leg("doc1", "k1").join(leg("doc2", "k2"), "shingle")
+        leg("doc1", "k1", "na").join(leg("doc2", "k2", "nb"), "shingle")
           .where(col("doc1") < col("doc2"))
           .groupBy(col("doc1"), col("doc2"))
           .agg(count(lit(1)).as("m"))
@@ -380,12 +368,13 @@ object Dedup {
     // probed into the (doc_id, shingle) index) — never a second pass
     // over the Σ df² join
     val cross = (if (surv != null)
-        surv.join(leg("doc1", "k1"), "doc1")
-          .join(leg("doc2", "k2"), Seq("doc2", "shingle"))
-      else leg("doc1", "k1").join(leg("doc2", "k2"), "shingle")
+        surv.join(leg("doc1", "k1", "na"), "doc1")
+          .join(leg("doc2", "k2", "nb"), Seq("doc2", "shingle"))
+      else leg("doc1", "k1", "na").join(leg("doc2", "k2", "nb"), "shingle")
         .where(col("doc1") < col("doc2")))
-      .select(col("doc1"), col("doc2"), col("k1"), col("k2"))
-    shiftConsistentRollup(cross, np, threshold, tol)
+      .select(col("doc1"), col("doc2"), col("k1"), col("k2"), col("na"),
+        col("nb"))
+    shiftConsistentRollup(cross, threshold, tol)
   }
 
   /** D28 — QUOTE-LEVEL train/eval decontamination: the d9 shape at d27's
@@ -406,27 +395,28 @@ object Dedup {
       prefilter: Boolean = true): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       "threshold must sit in (0, 1]")
-    val pos = positionalShingles(documents, n)
-    val np = pos.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val train = pos.where(col("doc_id") >= benchMaxId)
-      .select(col("doc_id").as("doc1"), col("i").as("k1"), col("shingle"))
-    val bench = pos.where(col("doc_id") < benchMaxId)
-      .select(col("doc_id").as("doc2"), col("i").as("k2"), col("shingle"))
-    val flags = quoteProbeCore(train, bench, np, threshold, tol, prefilter)
-    // memoized like the substrates (plan-equality reuse): FIVE consumers
-    // share this frame in a release session (d28 audit, d29 burn, d30
-    // plan, e11 drop, e12 redact), and at scale flags are computed once
-    // per corpus release, not once per downstream job. The frame is
-    // contamination-mass-proportional — persisting it is config-scale
+    // memoized like the substrates: FIVE consumers share this frame in
+    // a release session (d28 audit, d29 burn, d30 plan, e11 drop, e12
+    // redact), and at scale flags are computed once per corpus release,
+    // not once per downstream job. The frame is
+    // contamination-mass-proportional — holding it is config-scale
     // storage however large the corpus.
-    Memo.persist(flags)
+    Memo.substrate(("quote_flags", benchMaxId, n, threshold, tol, prefilter),
+        documents) {
+      val pos = positionalShingles(documents, n)
+      val train = pos.where(col("doc_id") >= benchMaxId)
+        .select(col("doc_id").as("doc1"), col("i").as("k1"), col("shingle"),
+          col("np").as("na"))
+      quoteProbeCore(train, benchPositions(pos.where(col("doc_id") <
+        benchMaxId)), threshold, tol, prefilter)
+    }
   }
 
   /** Shared alignment core of [[quoteContaminationSplitCheck]] and the
     * ONLINE probe [[quoteContaminationProbe]]: bipartite aligned
-    * containment of train positions (doc1, k1, shingle) against a
-    * BROADCAST benchmark position frame (doc2, k2, shingle). `nf` must
-    * carry (doc_id, n) for every id on either side.
+    * containment of train positions (doc1, k1, shingle, na) against a
+    * BROADCAST benchmark position frame (doc2, k2, shingle, nb), where
+    * na and nb are the position counts of the row's document.
     *
     * The broadcast probe's matches feed [[shiftConsistentRollup]]
     * directly, with the exact count bound applied inside the rollup, so
@@ -434,23 +424,26 @@ object Dedup {
     * doc. `prefilter = false` drops that bound (brute force) — the
     * Sf1Check identity, same contract as alignedContainmentPairs. */
   private def quoteProbeCore(train: DataFrame, bench: DataFrame,
-      nf: DataFrame, threshold: Double, tol: Int,
-      prefilter: Boolean): DataFrame = {
+      threshold: Double, tol: Int, prefilter: Boolean): DataFrame = {
     val cross = train.join(broadcast(bench), "shingle")
-      .select(col("doc1"), col("doc2"), col("k1"), col("k2"))
-    shiftConsistentRollup(cross, nf, threshold, tol, countBound = prefilter)
+      .select(col("doc1"), col("doc2"), col("k1"), col("k2"), col("na"),
+        col("nb"))
+    shiftConsistentRollup(cross, threshold, tol, countBound = prefilter)
       .select(col("doc1").as("doc_id"), col("doc2").as("bench_id"),
         col("containment"), col("containment_any"), col("shift"))
   }
 
   /** Benchmark positional-shingle frame for the ONLINE d28 probe: one
-    * (doc2 = bench_id, k2, shingle) row per n-gram position of the eval
-    * holdout. Compute ONCE per stream (eval sets are small by
-    * definition; the probe broadcasts this frame into every
-    * micro-batch), then feed [[quoteContaminationProbe]]. */
+    * (doc2 = bench_id, k2, shingle, nb) row per n-gram position of the
+    * eval holdout, nb its doc's position count. Compute ONCE per stream
+    * (eval sets are small by definition; the probe broadcasts this frame
+    * into every micro-batch), then feed [[quoteContaminationProbe]]. */
   def benchmarkQuotePositions(benchDocs: DataFrame, n: Int = 3): DataFrame =
-    positionsOf(benchDocs, n, memo = false)
-      .select(col("doc_id").as("doc2"), col("i").as("k2"), col("shingle"))
+    benchPositions(positionsOf(benchDocs, n, memo = false))
+
+  private def benchPositions(pos: DataFrame): DataFrame =
+    pos.select(col("doc_id").as("doc2"), col("i").as("k2"), col("shingle"),
+      col("np").as("nb"))
 
   /** The ONLINE d28 leg: aligned quote contamination of `trainDocs` (one
     * micro-batch of arriving text) against a precomputed
@@ -467,19 +460,14 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       "threshold must sit in (0, 1]")
     // bench members are excluded HERE, not by the caller: an id on both
-    // sides would duplicate its nf row and corrupt every join through
-    // it (inflated prefilter counts, twin flag rows with two different
-    // denominators) — and anti-joining the raw docs also skips
-    // tokenizing them
+    // sides would match itself at every position and flag as its own
+    // quote — and anti-joining the raw docs also skips tokenizing them
     val tpos = positionsOf(trainDocs.join(
       benchPos.select(col("doc2").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti"), n, memo = false)
     val train = tpos.select(col("doc_id").as("doc1"), col("i").as("k1"),
-      col("shingle"))
-    val nf = tpos.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .unionByName(benchPos.groupBy(col("doc2").as("doc_id"))
-        .agg(count(lit(1)).as("n")))
-    quoteProbeCore(train, benchPos, nf, threshold, tol, prefilter = true)
+      col("shingle"), col("np").as("na"))
+    quoteProbeCore(train, benchPos, threshold, tol, prefilter = true)
   }
 
   /** D29 — the QUOTE burn report: [[quoteContaminationSplitCheck]]'s
@@ -534,26 +522,27 @@ object Dedup {
     * (pair, shift), never unpartitioned. */
   def quoteRedactionSpans(documents: DataFrame, benchMaxId: Long,
       n: Int = 3, threshold: Double = 0.8, tol: Int = 1,
-      minPositions: Int = 3): DataFrame = {
-    val flagged = quoteContaminationSplitCheck(documents, benchMaxId, n,
-      threshold, tol)
-      .select(col("doc_id").as("doc1"), col("bench_id").as("doc2"))
-    val pos = positionalShingles(documents, n)
-    val train = pos.select(col("doc_id").as("doc1"), col("i").as("k1"),
-      col("shingle"))
-    val bench = pos.where(col("doc_id") < benchMaxId)
-      .select(col("doc_id").as("doc2"), col("i").as("k2"), col("shingle"))
-    val spans = redactionSpansCore(flagged, train, bench, n, minPositions)
-    // memoized like the d28 flags one stage upstream (plan-equality
-    // reuse; optimization round): NINE consumers share this frame in a
-    // release session (d30 plan, d33 char lift, e12/e13 packs, e15
-    // splice, e16/e17/e18/e19 compositions, audit5's funnel), and at
-    // scale the span plan is derived once per corpus release, not once
-    // per downstream artifact. The frame is flag-bounded (pairs x
-    // shifts x islands) — persisting it is contamination-mass-scale
-    // storage however large the corpus.
-    Memo.persist(spans)
-  }
+      minPositions: Int = 3): DataFrame =
+    // memoized like the d28 flags one stage upstream: NINE consumers
+    // share this frame in a release session (d30 plan, d33 char lift,
+    // e12/e13 packs, e15 splice, e16/e17/e18/e19 compositions, audit5's
+    // funnel), and at scale the span plan is derived once per corpus
+    // release, not once per downstream artifact. The frame is
+    // flag-bounded (pairs x shifts x islands) — holding it is
+    // contamination-mass-scale storage however large the corpus.
+    Memo.substrate(
+        ("quote_spans", benchMaxId, n, threshold, tol, minPositions),
+        documents) {
+      val flagged = quoteContaminationSplitCheck(documents, benchMaxId, n,
+        threshold, tol)
+        .select(col("doc_id").as("doc1"), col("bench_id").as("doc2"))
+      val pos = positionalShingles(documents, n)
+      val train = pos.select(col("doc_id").as("doc1"), col("i").as("k1"),
+        col("shingle"))
+      redactionSpansCore(flagged, train,
+        benchPositions(pos.where(col("doc_id") < benchMaxId)), n,
+        minPositions)
+    }
 
   /** Shared span-rebuild core of [[quoteRedactionSpans]] and the
     * streamed variant (`Streams.quoteRedactionFromIngest`): flagged
@@ -685,17 +674,19 @@ object Dedup {
   }
 
   /** The memoized positional-shingle substrate of d27/d28:
-    * (doc_id, i, shingle-hash) over FULL n-windows only (docs shorter
-    * than n tokens have no positions and never pair) — persisted, so a
-    * session running both aligned ops (or one op twice) builds it once
-    * (Spark's CacheManager matches the canonical plan). The
-    * empty-window guard must not hit sequence(1, 0) — that DESCENDS to
-    * [1, 0] instead of emitting nothing. */
+    * (doc_id, i, shingle-hash, np) over FULL n-windows only (docs shorter
+    * than n tokens have no positions and never pair), np the doc's
+    * position count — memoized, so a session running both aligned ops
+    * (or one op twice) builds it once. The empty-window guard must not
+    * hit sequence(1, 0) — that DESCENDS to [1, 0] instead of emitting
+    * nothing. */
   private def positionalShingles(documents: DataFrame, n: Int): DataFrame =
-    positionsOf(documents, n, memo = true)
+    Memo.substrate(("positions", n), documents) {
+      positionsOf(documents, n, memo = true)
+    }
 
-  /** [[positionalShingles]] body with the memo switchable: `memo = false`
-    * tokenizes inline and skips the persist — the per-micro-batch form
+  /** [[positionalShingles]] body, over the token memo or (`memo = false`)
+    * tokenizing inline — the per-micro-batch form
     * ([[quoteContaminationProbe]]) and the once-per-stream benchmark
     * frame (which the caller checkpoints itself). */
   private def positionsOf(documents: DataFrame, n: Int,
@@ -703,15 +694,12 @@ object Dedup {
     val empty = slice(array(lit(1)), 1, 0)
     val wins = when(size(col("toks")) >= n,
       sequence(lit(1), size(col("toks")) - (n - 1))).otherwise(empty)
-    val base = if (memo) tokenCache(documents)
-      else documents.select(col("doc_id"),
-        graft.functions.Text.tokenizeUdf(col("text")).as("toks"))
-    val pos = base
+    (if (memo) tokenCache(documents) else tokens(documents))
       .select(col("doc_id"), col("toks"), explode(wins).as("i"))
       .select(col("doc_id"), col("i"),
         xxhash64(concat_ws(" ", slice(col("toks"), col("i"), lit(n))))
-          .as("shingle"))
-    if (memo) Memo.persist(pos) else pos
+          .as("shingle"),
+        (size(col("toks")) - (n - 1)).as("np"))
   }
 
   def containmentPairs(documents: DataFrame, n: Int,
@@ -945,9 +933,13 @@ object Dedup {
     * artifact, or a streaming sink's accumulated index. */
   def incrementalDedupAgainst(corpusFp: DataFrame, corpusSh: DataFrame,
       newDocs: DataFrame, n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val bSets = cachedSets(newDocs, n, threshold)
+    // the batch side is computed inline, never memoized: a streaming
+    // sink's micro-batch frames would each pin a memo entry
+    val bSets = shingleSets(shingles(newDocs, n)
+      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle")),
+      threshold)
     incrementalCore(corpusFp, newDocs, corpusSh, bSets,
-      jaccardPairs(newDocs, n, threshold), threshold)
+      pairsFromSets(bSets, threshold), threshold)
   }
 
   /** Append one batch's slice to the durable index. Each batch writes
@@ -968,7 +960,7 @@ object Dedup {
 
   /** `incrementalDedup` where the batch is the `doc_id < batchMaxId` slice
     * of one parent corpus frame: every shingle frame — corpus index, batch
-    * sets, batch prefixes — is an id-range FILTER of the parent's persisted
+    * sets, batch prefixes — is an id-range FILTER of the parent's memoized
     * shingle substrate, so a pre-warmed substrate (or any earlier dedup
     * query on the parent) means no text is ever re-shingled. Results are
     * identical to `incrementalDedup(parent slices)`: prefix-filter
@@ -1076,7 +1068,7 @@ object Dedup {
 
   /** `contaminationCheck` where the benchmark is the `doc_id < benchMaxId`
     * slice of one parent corpus (the common eval-holdout layout): both
-    * shingle frames are id-range filters of the parent's persisted shingle
+    * shingle frames are id-range filters of the parent's memoized shingle
     * substrate, so nothing is shingled twice and a pre-warmed substrate
     * (warmSubstrate / an earlier dedup query) serves both sides. */
   def contaminationSplitCheck(documents: DataFrame, benchMaxId: Long,
@@ -1091,7 +1083,7 @@ object Dedup {
 
   /** `contaminationCheck` with both shingle frames supplied by the caller —
     * the substrate-sharing form. When corpus and benchmark are id-ranges of
-    * one parent corpus, both sides are FILTERS of the parent's persisted
+    * one parent corpus, both sides are FILTERS of the parent's memoized
     * shingle substrate ((doc_id, xxhash64 shingle) rows), so the pipeline
     * never shingles the same text twice (see Pipeline.trainingCorpus). */
   def contaminationFromShingles(corpusSh: DataFrame, benchSh: DataFrame,
@@ -1134,7 +1126,7 @@ object Dedup {
     * document: what fraction of the doc's distinct n-gram shingles never
     * occur in the reference corpus. The split is the content-stable md5
     * hash of `doc_id` (`Sampling.fractionThreshold` semantics), so
-    * reference membership is a scan-level predicate on the persisted
+    * reference membership is a scan-level predicate on the memoized
     * shingle substrate — proportional at every corpus size, no id-range
     * assumptions, zero extra joins to tag rows.
     *
@@ -1325,7 +1317,7 @@ object Dedup {
       minDocs: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE tokenizer pass, shared with the whole segment family via the
-    // persisted token substrate (1x the corpus, vs segWords-fold for
+    // memoized token substrate (1x the corpus, vs segWords-fold for
     // materialized windows): the window explode below derives from it
     // twice (repeated-set agg + hit join) and the n_words lens frame
     // reads it too — the narrow explode/slice recompute is cheap next to

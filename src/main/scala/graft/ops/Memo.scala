@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** A session memo: the one caching discipline of the engine. Every memo
   * registers itself with [[Memo]] at construction, so
@@ -127,9 +127,11 @@ private[graft] final class SessionMemo[K, V](
 }
 
 /** The process-level memo registry and its one clear path, plus the
-  * plan-equality persists: a shared substrate that Spark's CacheManager
-  * serves to every plan-equal query (and re-caches on in-session writes)
-  * is persisted through [[persist]], which records it here. */
+  * shared-substrate memo ([[substrate]]). A frame shared across queries
+  * is held only by a [[SessionMemo]], never by a bare persist: Spark's
+  * CacheManager matches plans without a staleness guard, so a frame
+  * read before an append but first cached after it would serve its old
+  * rows to every later plan-equal read of the grown store. */
 object Memo {
   /** The memoizability + staleness key of a set of input frames: the
     * combined sorted-inputFiles hash when EVERY frame is composed of
@@ -141,17 +143,16 @@ object Memo {
     *    covers content), or
     *  - checkpoint/RDD leaves (LogicalRDD — an RDD is immutable and two
     *    distinct checkpoints never canonicalize equal, so plan equality
-    *    implies identical data; this is how the substrate-derived span
-    *    and flag frames enter: their lineages bottom out in the
-    *    session-memoized shingle/signature checkpoints).
+    *    implies identical data; this is how frames derived from memo
+    *    checkpoints enter).
     *
     * None for anything else (JDBC, custom V2): those never memoize.
     *
     * Files are collected from the ANALYZED plan, not `df.inputFiles`:
     * inputFiles walks the OPTIMIZED plan, where the CacheManager has
     * already substituted InMemoryRelation for any persisted subtree —
-    * the persisted span/flag substrates would hide their file sources
-    * and with them the staleness signal. */
+    * a persisted memo value (BM25, quality scores, media tables) would
+    * hide its file sources and with them the staleness signal. */
   private[graft] def filesHashOf(dfs: DataFrame*): Option[Int] = {
     var h = 1
     var ok = true
@@ -202,43 +203,34 @@ object Memo {
   private[graft] def registered: Seq[Registered] =
     registry.asScala.toSeq
 
-  /** Frames [[persist]] pinned outside any [[scoped]] body. */
-  private val persisted = ArrayBuffer[DataFrame]()
+  /** The shared substrates of the dedup, decontamination, kNN-graph and
+    * trigram families, keyed by (substrate and its parameters,
+    * canonicalized input plan). */
+  private val substrates = new SessionMemo[(Any, LogicalPlan), DataFrame](
+    Seq(_))
 
-  /** The persist owner of the current thread's innermost [[scoped]]
-    * body, or null. */
-  private val scope = new ThreadLocal[ArrayBuffer[DataFrame]]
+  /** `df`, a substrate of `input` named by `key` (its kind and every
+    * parameter that shapes it), checkpointed once per session and input
+    * file set: a read of a grown store replaces the entry instead of
+    * being served the old rows. For an input [[filesHashOf]] cannot key,
+    * `df` is returned lazily, or checkpointed when `materialize` asks
+    * for a barrier (a frame its consumers scan several times in one
+    * action). A frame derived from a micro-batch must not come here:
+    * each batch would pin one entry. */
+  private[graft] def substrate(key: Any, input: DataFrame,
+      materialize: Boolean = false)(df: => DataFrame): DataFrame =
+    substrates.getOrBuildElse(
+      (key, input.queryExecution.analyzed.canonicalized), input)(
+      df.localCheckpoint())(
+      if (materialize) df.localCheckpoint() else df)
 
-  /** Persist `df` MEMORY_AND_DISK unless a plan-equal frame is already
-    * cached, and record it for [[clearAll]] (or for the enclosing
-    * [[scoped]] body). `materialize` runs a count as a barrier, so the
-    * scans inside one later action do not each compute the uncached
-    * plan. */
-  private[graft] def persist(df: DataFrame,
-      materialize: Boolean = false): DataFrame = {
-    if (df.storageLevel == StorageLevel.NONE) {
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-      val owner = Option(scope.get).getOrElse(persisted)
-      owner.synchronized(owner += df)
-      if (materialize) df.count()
-    }
-    df
-  }
-
-  /** Run `body` owning its persists: frames [[persist]] pins inside it on
-    * this thread, and frames it passes to the `own` argument (e.g. its
-    * checkpoints), are released when it exits and never reach the
-    * registry. For per-micro-batch work whose frames no later batch
-    * reads. */
+  /** Run `body`, releasing the frames it passes to the `own` argument
+    * (e.g. its checkpoints) when it exits. For per-micro-batch work whose
+    * frames no later batch reads. */
   private[graft] def scoped[T](body: (DataFrame => DataFrame) => T): T = {
-    val outer = scope.get
     val owned = ArrayBuffer[DataFrame]()
-    scope.set(owned)
     try body(df => owned.synchronized { owned += df; df })
-    finally {
-      scope.set(outer)
-      owned.foreach(release)
-    }
+    finally owned.foreach(release)
   }
 
   /** Drop a frame's CacheManager entry. A frame whose session has
@@ -259,20 +251,12 @@ object Memo {
       }
     }
 
-  /** Empty every registered memo and release every registry persist —
-    * the one clear path (tests, scale sweeps, and long sessions that
-    * rewrite a corpus in place). Checkpointed memo values lose their
-    * blocks, so a frame derived from one before the clear must be
-    * materialized before it is used after it. */
-  def clearAll(): Unit = {
-    registry.forEach(_.clear())
-    val frames = persisted.synchronized {
-      val out = persisted.toList
-      persisted.clear()
-      out
-    }
-    frames.foreach(release)
-  }
+  /** Empty every registered memo and release its frames — the one clear
+    * path (tests, scale sweeps, and long sessions that rewrite a corpus
+    * in place). Checkpointed memo values lose their blocks, so a frame
+    * derived from one before the clear must be materialized before it is
+    * used after it. */
+  def clearAll(): Unit = registry.forEach(_.clear())
 }
 
 /** Ledger of time spent BUILDING session-memoized substrates — the

@@ -982,7 +982,10 @@ object Multimodal {
     val nf = fh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // dominant temporal offset + shift-consistent fractions: the rollup
     // shared with d27's text alignment (Dedup.shiftConsistentRollup)
-    Dedup.shiftConsistentRollup(cross, nf, threshold, tol = 1)
+    Dedup.shiftConsistentRollup(cross
+      .join(nf.select(col("doc_id").as("doc1"), col("n").as("na")), "doc1")
+      .join(nf.select(col("doc_id").as("doc2"), col("n").as("nb")), "doc2"),
+      threshold, tol = 1)
   }
 
   /** Media TRAIN/EVAL contamination check — the d9 decontamination shape

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Every stage is one of the already-verified operators, so the whole
   * pipeline stays a single Catalyst plan: the dedup/contamination stages
-  * reuse the persisted shingle substrate, the drop-list anti-joins are
+  * reuse the memoized shingle substrate, the drop-list anti-joins are
   * planner-chosen (AQE broadcasts them while small; they scale with the
   * corpus, so no forced hint), and the final packing is the two-phase
   * prefix sum. Nothing collects to the driver.
@@ -188,7 +188,7 @@ object Pipeline {
     val nearDups = nearDupDropIds(documents)
     val exactDups = exactDupDropIds(documents)
     // contamination shares the FULL-corpus shingle substrate that
-    // jaccardPairs above already persisted: both the corpus and benchmark
+    // jaccardPairs above already memoized: both the corpus and benchmark
     // shingle frames are id-range filters of it, so the pipeline shingles
     // each document exactly once
     val contaminated = contamDropIds(documents, benchmarkMaxId)
@@ -337,7 +337,7 @@ object Pipeline {
   }
 
   /** Session memo for the merged-islands frame (optimization round 2):
-    * NINE batch queries interval-union the SAME persisted d30 span plan
+    * NINE batch queries interval-union the SAME memoized d30 span plan
     * (e12/e13/e15/e16/e17, the e18 family, audit5) — each paid the
     * distinct + window + groupBy chain again (~0.5–1 s at sf0.1, one
     * full pass over the flag-bounded spans at scale). The frame is tiny
@@ -1303,7 +1303,7 @@ object Pipeline {
     * release ships (and the input the mixing weights of
     * `Sampling.mixWithWeights` are tuned against). All measures are exact
     * integer sums (no float aggregation, no hash-compare flakiness); the
-    * near-dup flag reuses the persisted pair frame, so on a warmed session
+    * near-dup flag reuses the memoized pair frame, so on a warmed session
     * the report costs one scan plus a tiny rollup shuffle. */
   def corpusReport(documents: DataFrame, n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
@@ -1633,7 +1633,7 @@ object Pipeline {
     *
     * Scale shape: the three drop-lists are the same frames
     * trainingCorpus builds (near/exact/contamination share the one
-    * persisted shingle substrate); attribution is three left joins on
+    * memoized shingle substrate); attribution is three left joins on
     * doc_id feeding one CASE, then a tiny stage-keyed groupBy — no new
     * shuffle family beyond the pipeline's own. */
   def filterFunnel(documents: DataFrame, benchmarkMaxId: Long = 25L,

@@ -74,9 +74,7 @@ object Similarity {
   }
 
   /** Session memo for the BLOCKED kNN graph, keyed by (canonicalized
-    * corpus plan, k, bits, tables, dims). knnGraph's plan-equality
-    * persist cannot work here — the signature localCheckpoint mints a
-    * fresh plan per call — so sim7/gr2 share through an explicit memo. */
+    * corpus plan, k, bits, tables, dims): sim7/gr2 share one build. */
   private val blockedCache =
     new SessionMemo[(Plan, Int, Int, Int, Int), DataFrame](Seq(_))
 
@@ -286,15 +284,15 @@ object Similarity {
     // ([[embeddingContaminationIndexed]]), whose per-query work is
     // nprobe cells instead of the whole corpus
     requireBenchUnderCap(bench, maxBenchRows)
-    val flags = embeddingContaminationProbe(
-      base.where(col("vec_id") >= benchMaxId), bench, threshold)
-    // memoized like the d28 quote flags (plan-equality persist;
-    // optimization round): TEN-plus consumers share this frame in a
-    // release session (d31/d32 reports, audit3/audit6 health, e14's
-    // drop, e17/e18/e19/e20 compositions, audit4/audit5 funnels, r7),
-    // and at scale the flags are computed once per corpus release. The
-    // frame is contamination-mass-proportional — config-scale storage.
-    Memo.persist(flags)
+    // memoized like the d28 quote flags: TEN-plus consumers share this
+    // frame in a release session (d31/d32 reports, audit3/audit6 health,
+    // e14's drop, e17/e18/e19/e20 compositions, audit4/audit5 funnels,
+    // r7), and at scale the flags are computed once per corpus release.
+    // The frame is contamination-mass-proportional — config-scale storage.
+    Memo.substrate(("embedding_flags", benchMaxId, threshold), embeddings) {
+      embeddingContaminationProbe(
+        base.where(col("vec_id") >= benchMaxId), bench, threshold)
+    }
   }
 
   /** Bounded over-cap check: counts AT MOST cap+1 rows (a limit-count,
@@ -778,11 +776,12 @@ object Similarity {
       .select(col("vec_id").as("nid"), col("embedding").as("n_emb"),
         col("nrm").as("n_nrm"))
       .join(broadcast(q), col("qid") =!= col("nid"))
-    // plan-equality persist: the exact graph is the shared substrate of
-    // sim6 (the graph itself) and gr1 (PageRank over it) — the O(N^2)
-    // cosine pass runs once per session per (corpus, k)
-    val g = rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"))
-    Memo.persist(g)
+    // memoized: the exact graph is the shared substrate of sim6 (the
+    // graph itself) and gr1/gr5 (PageRank over it) — the O(N^2) cosine
+    // pass runs once per session per (corpus, k)
+    Memo.substrate(("knn_graph", k), embeddings) {
+      rankTopK(pairs, k).select(col("qid"), col("rn"), col("nid"))
+    }
   }
 
   /** The blocked family's "knob grows with the corpus" rule as code —

@@ -243,10 +243,11 @@ object TextAnalysis {
   /** Shared substrate of the trigram family (t6 LM score, t8 repetition):
     * per-doc char-trigram counts computed IN ROW — one UDF pass builds the
     * (trigram, count) pairs as two parallel arrays, because per-doc counts
-    * are a per-row property and never needed a shuffle. Persisted so
-    * plan-equality cache reuse serves every trigram query from one pass
-    * (same discipline as the dedup shingle substrate). Docs shorter than
-    * one trigram drop out, matching the old explode-based substrate. */
+    * are a per-row property and never needed a shuffle. Memoized so every
+    * trigram query reads one pass (same discipline as the dedup shingle
+    * substrate), and checkpointed as a barrier when it cannot memoize.
+    * Docs shorter than one trigram drop out, matching the old
+    * explode-based substrate. */
   private def docTriArrays(documents: DataFrame): DataFrame = {
     val cnt = udf { (text: String) =>
       val s = Option(text).getOrElse("")
@@ -266,11 +267,12 @@ object TextAnalysis {
       }
       (ts, cs)
     }
-    val df = documents
-      .select(col("doc_id"), cnt(col("text")).as("tc"))
-      .select(col("doc_id"), col("tc._1").as("ts"), col("tc._2").as("cs"))
-      .where(size(col("ts")) > 0)
-    Memo.persist(df, materialize = true)
+    Memo.substrate("trigrams", documents, materialize = true) {
+      documents
+        .select(col("doc_id"), cnt(col("text")).as("tc"))
+        .select(col("doc_id"), col("tc._1").as("ts"), col("tc._2").as("cs"))
+        .where(size(col("ts")) > 0)
+    }
   }
 
   /** Shared scoring pass of the trigram-LM family: mean add-one-smoothed
@@ -353,7 +355,7 @@ object TextAnalysis {
     * under that reference model. Unlike `trigramLmScore` (self-scored), the
     * stats side is a filtered subset — the standard quality-filter setup
     * where Wikipedia-like text defines "good" and the whole crawl is ranked
-    * against it. Shares the persisted per-doc trigram substrate with
+    * against it. Shares the memoized per-doc trigram substrate with
     * t6/t8 (one pass builds it, every trigram query reuses it); the
     * reference stats stay bounded by |alphabet|^3 so they collect and
     * broadcast, leaving scoring a narrow pass with no join and no final

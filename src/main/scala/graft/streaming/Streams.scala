@@ -171,7 +171,10 @@ object Streams {
 
   /** Read a swap-managed state dir, recovering from the `_old` backup if
     * a crash landed between the two renames of `swapIntoPlace` (target
-    * absent, backup present) — state history survives the swap window. */
+    * absent, backup present) — state history survives the swap window.
+    * The schema comes from one part file's footer on the driver
+    * (`Tables.footerSchema`): schema inference would run a Spark job on
+    * every read, and a swapped dir is flat, one write, one schema. */
   private def readStateWithRecovery(
       spark: org.apache.spark.sql.SparkSession,
       stateDir: String): Option[DataFrame] = {
@@ -179,7 +182,9 @@ object Streams {
     val bak = new org.apache.hadoop.fs.Path(stateDir + "_old")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(target) && fs.exists(bak)) fs.rename(bak, target)
-    if (fs.exists(target)) Some(spark.read.parquet(stateDir)) else None
+    if (!fs.exists(target)) None
+    else Some(spark.read.schema(graft.Tables.footerSchema(spark, stateDir))
+      .parquet(stateDir))
   }
 
   /** Streaming heavy hitters with BOUNDED state — the one-pass stream
@@ -802,9 +807,9 @@ object Streams {
     }
     val docCols = Seq("doc_id", "text")
     val batchDocs = batch.select(docCols.map(col): _*)
-    // the batch owns its substrates and checkpoints: released when it
-    // ends, so nothing of one batch stays pinned, and no other memo or
-    // concurrent session's substrate is touched
+    // the batch owns its checkpoints: released when it ends, so nothing
+    // of one batch stays pinned, and no memo or concurrent session's
+    // substrate is touched
     graft.ops.Memo.scoped { own =>
       // index slices at the COMMITTED frontier: orphan partitions from a
       // crash after the index write carry bid > lastBid and are pruned

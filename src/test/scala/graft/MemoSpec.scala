@@ -7,13 +7,13 @@ import graft.ops.{Memo, Pipeline, SessionMemo, Similarity}
 
 /** The memo registry and its invariants: the SessionMemo discipline
   * (single-flight, staleness replace, bounded retention), grown-store
-  * freshness of the converted memos, the one clear path
-  * (`Memo.clearAll`), the streaming sink's batch-owned persists, the
-  * ledger's exclusive billing of nested builds, the survivor memo's
-  * no-text bound (VERDICT #2), the TopKLong exact-int64 ranking (the
-  * rankAdc rewrite) and its int64 extremes, the shared portable-kNN edge
-  * substrate (VERDICT #4), and the emb3 mean-denominator null-element
-  * semantics (ADVICE). */
+  * freshness of the converted memos and the token substrate, the one
+  * clear path (`Memo.clearAll`), the streaming sink's batch-owned
+  * frames, the ledger's exclusive billing of nested builds, the
+  * survivor memo's no-text bound (VERDICT #2), the TopKLong exact-int64
+  * ranking (the rankAdc rewrite) and its int64 extremes, the shared
+  * portable-kNN edge substrate (VERDICT #4), and the emb3
+  * mean-denominator null-element semantics (ADVICE). */
 class MemoSpec extends GraftSuite {
   import spark.implicits._
 
@@ -318,27 +318,58 @@ class MemoSpec extends GraftSuite {
     Memo.clearAll()
   }
 
+  test("grown store: a frame read before an append but first used after " +
+      "it leaves no stale token substrate for a fresh read") {
+    Memo.clearAll()
+    val dir = java.nio.file.Files.createTempDirectory("graft_tokens")
+      .resolve("docs").toString
+    Seq((1L, "alpha bravo charlie"), (2L, "delta echo foxtrot"))
+      .toDF("doc_id", "text").write.parquet(dir)
+    val old = spark.read.parquet(dir)
+    Seq((3L, "golf hotel india")).toDF("doc_id", "text")
+      .write.mode("append").parquet(dir)
+    // the old frame's file index predates the append: its substrate is
+    // built (and first cached) only now, over the two original rows
+    assert(ops.Dedup.tokenCache(old).count() == 2)
+    val fresh = spark.read.parquet(dir)
+    assert(fresh.count() == 3)
+    val got = ops.Dedup.tokenCache(fresh).count()
+    assert(got == 3, s"tokenCache served $got rows for a fresh read of " +
+      "the grown dir, which holds 3")
+    Memo.clearAll()
+  }
+
   test("streaming dedup sink releases only its own batch's frames: a " +
       "static substrate stays persisted, and persisted RDDs do not grow") {
     Memo.clearAll()
     val docs = Tables.load(spark, sf, "documents")
+    // a memo checkpoint: its RDD stays persisted while the memo holds it
     val static = ops.Dedup.jaccardPairs(docs, 3, 0.5)
-    assert(static.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    val staticRdd = static.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case other => fail(s"jaccardPairs is not a checkpoint: $other")
+    }
+    val staticRows = static.collect().map(_.toString).sorted.toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
     val batches = docs.select(col("doc_id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1))).grouped(20).toSeq
     val sc = spark.sparkContext
     val pinned0 = sc.getPersistentRDDs.size
+    val entries0 = Memo.registered.map(_.size).sum
     val pinned = batches.take(3).zipWithIndex.map { case (b, bid) =>
       streaming.Streams.mergeDedupIngest(b.toSeq.toDF("doc_id", "text"),
         bid.toLong, s"$dir/state", s"$dir/out", 3, 0.5)
-      assert(static.storageLevel !=
-        org.apache.spark.storage.StorageLevel.NONE,
-        s"batch $bid unpersisted a frame it did not persist")
+      assert(sc.getPersistentRDDs.contains(staticRdd),
+        s"batch $bid released a frame it did not build")
+      assert(Memo.registered.map(_.size).sum == entries0,
+        s"batch $bid left a memo entry behind")
       sc.getPersistentRDDs.size
     }
     assert(pinned.forall(_ <= pinned0),
       s"persisted RDDs grew across batches: $pinned0 -> $pinned")
+    assert(ops.Dedup.jaccardPairs(docs, 3, 0.5) eq static,
+      "the static substrate must still be served from its memo")
+    assert(static.collect().map(_.toString).sorted.toSeq == staticRows)
     assert(spark.read.parquet(s"$dir/out").count() == 60)
     Memo.clearAll()
   }

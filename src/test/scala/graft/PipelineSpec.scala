@@ -1839,14 +1839,28 @@ class PipelineSpec extends GraftSuite {
       "Spark jobs") {
     import graft.ops.Dedup
     Memo.clearAll()
-    // measured 13 jobs (the positional substrate, its count and
-    // broadcast stages, the two rollup shuffles, the persisted flags);
-    // the window + self-join rollup behind a separate count prefilter
-    // ran 38
+    // measured 7 jobs, the token, position and flag checkpoints
+    // included; re-joining a per-document position count aggregate into
+    // the rollup ran 13, and the window + self-join rollup behind a
+    // separate count prefilter 38
     val jobs = jobsOf(Dedup.quoteContaminationSplitCheck(quoteHand, 25L)
       .collect())
     info(s"d28 cold flags: $jobs jobs")
-    assert(jobs <= 16, s"d28 flags ran $jobs jobs")
+    assert(jobs <= 7, s"d28 flags ran $jobs jobs")
+    Memo.clearAll()
+  }
+
+  test("e11 cold job budget: the quote-decontaminated release builds its " +
+      "substrates and runs in a bounded number of Spark jobs") {
+    Memo.clearAll()
+    // the memo builds run while the query frame is built, so the count
+    // covers construction. Measured 39; with plan-equality persists for
+    // the token, position and flag substrates, and the per-document
+    // position counts re-joined into the alignment rollup, it was 50
+    val jobs = jobsOf(SparkEntry.queries("e11_quote_decontaminated")(
+      spark, sf).collect())
+    info(s"e11 cold: $jobs jobs")
+    assert(jobs <= 39, s"e11 cold ran $jobs jobs")
     Memo.clearAll()
   }
 
@@ -2431,34 +2445,42 @@ class PipelineSpec extends GraftSuite {
     Memo.clearAll()
   }
 
+  /** The id of the RDD behind a memo checkpoint. */
+  private def checkpointRdd(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case other => fail(s"not a checkpoint: ${other.nodeName}")
+    }
+
   test("dedup substrate registry: Memo.clearAll reclaims persisted frames") {
     val before = Dedup.jaccardPairs(docs, 3, 0.5)
     val pairsBefore = pairSet(before)
-    assert(before.storageLevel.useMemory || before.storageLevel.useDisk,
-      "pair frame should be persisted")
+    val rdd = checkpointRdd(before)
+    val sc = spark.sparkContext
+    assert(sc.getPersistentRDDs.contains(rdd),
+      "pair frame should be a held checkpoint")
     Memo.clearAll()
-    assert(before.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE,
-      "Memo.clearAll must unpersist the pair frame")
+    assert(!sc.getPersistentRDDs.contains(rdd),
+      "Memo.clearAll must release the pair frame")
     // rebuild works and matches (registry refills on the way)
     assert(pairSet(Dedup.jaccardPairs(docs, 3, 0.5)) == pairsBefore)
   }
 
   test("d28 flags memoize: the five-consumer release session computes " +
       "the probe once (plan-equality cache reuse)") {
+    Memo.clearAll()
     val flags = Dedup.quoteContaminationSplitCheck(docs, 25L)
-    flags.count() // first consumer materializes the memo
-    assert(flags.storageLevel.useMemory || flags.storageLevel.useDisk,
-      "the flag frame must be persisted (five consumers share it)")
+    assert(spark.sparkContext.getPersistentRDDs
+      .contains(checkpointRdd(flags)),
+      "the flag frame must be a held checkpoint (five consumers share it)")
     // a second consumer with the same parameters (what d29/d30/e11/e12
-    // build internally) reads the cached frame, not a fresh Σ-join
-    // (string match: AQE wraps the scan until execution, hiding it from
-    // a plan collect)
-    val again = Dedup.quoteContaminationSplitCheck(docs, 25L)
-      .groupBy(col("bench_id")).count()
-    val p = again.queryExecution.executedPlan.toString
-    assert(p.contains("InMemoryTableScan"),
-      s"the second consumer must hit the memo:\n${p.take(800)}")
+    // build internally) is served the memo's frame, not a fresh Σ-join
+    var again: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      again = Dedup.quoteContaminationSplitCheck(docs, 25L)
+    }
+    assert((again eq flags) && jobs == 0,
+      s"the second consumer must hit the memo ($jobs jobs)")
     Memo.clearAll()
   }
 

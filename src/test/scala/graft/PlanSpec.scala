@@ -11,6 +11,16 @@ class PlanSpec extends GraftSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** `body`'s plan under a cold memo, followed by the executed plans of
+    * the memo builds it runs: a memoized substrate is a checkpoint, and
+    * its scan hides the plan that computed it. */
+  private def builtPlan(body: => String): String = {
+    graft.ops.Memo.clearAll()
+    var p = ""
+    val builds = actionPlans { p = body }
+    (p +: builds).mkString("\n")
+  }
+
   test("j7 star join: fixed dims broadcast by hint, scaling dims by AQE") {
     // 100 TB regime first: with auto-broadcast disabled, ONLY the
     // fixed-cardinality dims (nation 25, region 5) stay broadcast via
@@ -126,7 +136,7 @@ class PlanSpec extends GraftSuite {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     for (q <- Seq("audit6_benchmark_retirement",
         "r7_pruned_benchmark_mrr")) {
-      val p = plan(q)
+      val p = builtPlan(plan(q))
       assert(!p.contains("CartesianProduct"),
         s"$q must never cartesian corpus frames:\n${p.take(1200)}")
       // the bench universe / qrels joins are eval-item-sized — they
@@ -338,10 +348,41 @@ class PlanSpec extends GraftSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("Dedup.shingles tokenizes once per document: no ScalaUDF inside a " +
+      "lambda, rows equal to the inlined-UDF expression") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction,
+      ScalaUDF}
+    import org.apache.spark.sql.DataFrame
+    def udfInLambda(df: DataFrame) =
+      df.queryExecution.optimizedPlan.exists(_.expressions.exists(
+        _.exists {
+          case l: LambdaFunction => l.function.exists(_.isInstanceOf[ScalaUDF])
+          case _ => false
+        }))
+    val docs = Tables.load(spark, sf, "documents")
+    // the tokenizer used as a Column inside the transform lambda: every
+    // shingle position re-tokenizes its document
+    val toks = graft.functions.Text.tokenizeUdf(col("text"))
+    val inlined = docs.select(col("doc_id"),
+      explode(array_distinct(transform(
+        sequence(lit(0), greatest(size(toks) - 3, lit(0))),
+        i => concat_ws(" ", slice(toks, i + 1, lit(3)))))).as("shingle"))
+      .where(col("shingle") =!= "")
+    assert(udfInLambda(inlined), "the check must see the inlined UDF")
+    val sh = ops.Dedup.shingles(docs, 3)
+    assert(!udfInLambda(sh),
+      s"shingles re-tokenizes per position:\n${sh.queryExecution.optimizedPlan}")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val got = rows(sh)
+    assert(got.nonEmpty && got == rows(inlined))
+  }
+
   test("d2 jaccard plan: no cartesian product, candidate joins on hashed longs") {
     val docs = Tables.load(spark, sf, "documents")
-    val df = ops.Dedup.jaccardPairs(docs, 3, 0.5)
-    val p = df.queryExecution.executedPlan.toString
+    val p = builtPlan(ops.Dedup.jaccardPairs(docs, 3, 0.5)
+      .queryExecution.executedPlan.toString)
+    assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin"),
+      s"the pair build must be visible:\n${p.take(1500)}")
     assert(!p.contains("CartesianProduct"))
     assert(!p.contains("BroadcastNestedLoopJoin"))
   }
@@ -620,7 +661,7 @@ class PlanSpec extends GraftSuite {
   // composition semantically instead)
 
   test("d29 burn rollup: bench side broadcast, rollup partial-aggregates") {
-    val p = plan("d29_quote_burn")
+    val p = builtPlan(plan("d29_quote_burn"))
     assert(p.contains("BroadcastHashJoin"),
       s"the benchmark position frame must broadcast:\n${p.take(1200)}")
     assert("HashAggregate".r.findAllIn(p).size >= 2,
@@ -646,7 +687,7 @@ class PlanSpec extends GraftSuite {
 
   test("d31 embedding contamination: eval side broadcast, one codegen " +
       "cosine pass, no shuffle anywhere") {
-    val p = plan("d31_embedding_contamination")
+    val p = builtPlan(plan("d31_embedding_contamination"))
     assert(p.contains("BroadcastNestedLoopJoin"),
       s"the eval holdout must broadcast into the cosine pass:\n" +
         p.take(1200))

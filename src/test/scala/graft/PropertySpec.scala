@@ -47,11 +47,12 @@ class PropertySpec extends GraftSuite {
           1 + (ka - 1) % counts(d1), 1 + (kb - 1) % counts(d2))
       }.distinct
       if (cross.nonEmpty) {
-        val nf = counts.zipWithIndex
-          .map { case (n, d) => (d.toLong, n.toLong) }
+        val withCounts = cross.map { case (d1, d2, k1, k2) =>
+          (d1, d2, k1, k2, counts(d1.toInt).toLong, counts(d2.toInt).toLong)
+        }
         val got = graft.ops.Dedup.shiftConsistentRollup(
-            cross.toDF("doc1", "doc2", "k1", "k2"),
-            nf.toDF("doc_id", "n"), thr, tol)
+            withCounts.toDF("doc1", "doc2", "k1", "k2", "na", "nb"),
+            thr, tol)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1)) ->
             ((r.getDouble(2), r.getDouble(3), r.getInt(4)))).toMap
