@@ -61,6 +61,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional comma-separated filter for local iteration on a query subset.
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -111,13 +113,6 @@ object Bench {
     catch { case e: Throwable =>
       warmup = if (warmup == "ok") "substrate_failed" else "both_failed"
       System.err.println(s"[bench] substrate warm-up failed: ${e.getMessage}")
-    }
-    // Optional comma-separated filter for local iteration on a query subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names(q._1))
-      case None        => SparkEntry.queries
     }
     // Noise protocol (round-11 postmortem: two full-suite runs differed
     // 16% with UNIFORM per-query inflation — box load, not plans — and
@@ -171,11 +166,12 @@ object Bench {
       .empty[String, Seq[(String, Double)]]
     val warmBuilds = ops.MemoLedger.drain()
     if (warmBuilds.nonEmpty) substrateBuilds("warmup") = warmBuilds
-    val results = selected.toSeq.zipWithIndex.map { case ((name, fn), i) =>
+    val results = selected.zipWithIndex.map { case (q, i) =>
+      val name = q.name
       queryLoad += name -> loadAvg
       val best = (0 until reps).map { r =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }

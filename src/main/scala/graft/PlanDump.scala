@@ -15,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names =
-      if (args.length > 1) args(1).split(",").toSeq
-      else SparkEntry.queries.keys.toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown queries: ${unknown.mkString(", ")} — names must match " +
-        "SparkEntry.queries keys")
+    val selected = SparkEntry.select(args.lift(1))
     val b = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
@@ -32,9 +26,9 @@ object PlanDump {
       b.config("spark.sql.autoBroadcastJoinThreshold", -1)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      println(s"\n===== $n =====")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    selected.foreach { q =>
+      println(s"\n===== ${q.name} =====")
+      q.build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -1,11 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.registry result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional subset for fast local iteration (tools/check.py passes the
+    // env through); filters BOTH the dump and the oracle json so the
+    // compare stays consistent. Gate runs leave it unset -> full dump.
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,12 +19,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional subset for fast local iteration (tools/check.py passes the
-    // env through); filters BOTH the dump and the oracle json so the
-    // compare stays consistent. Driver runs leave it unset -> full dump.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def keep(name: String) = only.forall(_.contains(name))
     // Failures are collected into errors.json beside the dump: stderr is
     // never captured by the driver, so without a durable marker a failed
     // query is indistinguishable from one that never existed (round 6 lost
@@ -30,13 +28,12 @@ object Verify {
     // any query — the byte-identity harness for oracle-SQL refactors
     // (factor a CTE constant, dump, diff against the previous dump)
     val oracleOnly = sys.env.get("SPARK_GRAFT_ORACLE_ONLY").contains("1")
-    SparkEntry.queries.filter(q => !oracleOnly && keep(q._1)).foreach {
-      case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    if (!oracleOnly) selected.foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -51,8 +48,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(o => keep(o._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .collect { case SparkEntry.QuerySpec(k, _, SparkEntry.Oracle(v)) =>
+        s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }.mkString("{", ",", "}")

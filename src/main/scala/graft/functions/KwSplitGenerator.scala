@@ -12,8 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ROW<keyword STRING, kw_len INT> (KwSplit.java:11-21). Shares the
   * CJK-aware tokenizer core with `Text.tokenize` (Latin words + CJK
   * character bigrams; per-row dedup like the reference's HashSet), usable
-  * in SQL via LATERAL VIEW after registration
-  * (GraftFunctions.register / GraftExtensions).
+  * in SQL via LATERAL VIEW after `GraftFunctions.register`.
   */
 case class KwSplitGenerator(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {

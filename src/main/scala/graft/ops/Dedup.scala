@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for training-data pipelines: exact, n-gram Jaccard,
@@ -1221,18 +1221,20 @@ object Dedup {
       // graph node, so the lookup is a self-join on the label frame);
       // labels are monotone non-increasing and bounded below by the
       // component minimum, so the shortcut halves remaining diameter
+      val round = Observation()
       val next = stepped
         .join(labels.select(col("doc_id").as("mid"),
           col("cluster_id").as("mid_lab")), Seq("mid"), "left")
         .select(col("doc_id"), col("cluster_id").as("old_lab"),
           least(col("mid"), coalesce(col("mid_lab"), col("mid")))
             .as("cluster_id"))
-        .withColumn("changed", col("cluster_id") =!= col("old_lab"))
+        .observe(round,
+          count_if(col("cluster_id") =!= col("old_lab")).as("changed"))
         .localCheckpoint()
       it += 1
-      // the changed flag was computed inside the propagation job — the
-      // convergence check is a narrow scan of checkpointed blocks
-      converged = next.where(col("changed")).isEmpty
+      // the changed count is observed on the checkpoint job itself, so
+      // the convergence check runs no job of its own
+      converged = round.get("changed").asInstanceOf[Long] == 0L
       labels = next.select(col("doc_id"), col("cluster_id"))
     }
     docIds.select(col("doc_id"))

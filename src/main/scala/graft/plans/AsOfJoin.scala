@@ -149,7 +149,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
 }
 
 /** DataFrame-level entry point. Registers the strategy on first use
-  * (idempotent); also injectable at builder time via GraftExtensions. */
+  * (idempotent). */
 object AsOf {
   /** `rightTie` (optional): right-side column that breaks (key, ts) ties
     * deterministically — the selected match is the MAX tie among tied

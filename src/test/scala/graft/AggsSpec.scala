@@ -75,7 +75,35 @@ class AggsSpec extends GraftSuite {
   }
 
   test("every query has either an oracle or is explicitly rows-only") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    import SparkEntry.{Oracle, QuerySpec, RowsOnly}
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct == names,
+      s"duplicate names: ${names.diff(names.distinct)}")
+    assert(names.size == 243)
+    assert(SparkEntry.queries.keys.toSeq == names)
+    val oracles = SparkEntry.registry.collect {
+      case QuerySpec(name, _, Oracle(_)) => name }
+    assert(oracles.size == 234)
+    assert(SparkEntry.oracleSql.keys.toSeq == oracles)
+    val twins = SparkEntry.registry.collect {
+      case QuerySpec(name, _, RowsOnly(twin)) => name -> twin }
+    assert(twins.map(_._1).toSet == Set("d4_simhash_pairs",
+      "d5_embedding_neardup", "t12_bpe_subwords", "sim2_lsh_topk",
+      "sim3_ivf_topk", "sim4_pq_topk", "sim5_ivfpq_topk",
+      "sim7_blocked_knn", "gr2_blocked_pagerank"))
+    twins.foreach { case (name, twin) =>
+      assert(SparkEntry.oracleSql.contains(twin),
+        s"$name's twin $twin is not a hash-gated query")
+    }
+  }
+
+  test("select keeps registry order and rejects unknown names") {
+    assert(SparkEntry.select(None) == SparkEntry.registry)
+    assert(SparkEntry.select(Some("sim2_lsh_topk, p1_parse_validate,"))
+      .map(_.name) == Seq("p1_parse_validate", "sim2_lsh_topk"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("p1_parse_validate,p1_parse_valid,zz")))
+    assert(e.getMessage.contains("p1_parse_valid, zz"), e.getMessage)
   }
 
   test("a15 merged daily HLL sketches estimate within 5% of exact distinct") {

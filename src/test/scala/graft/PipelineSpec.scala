@@ -1357,6 +1357,27 @@ class PipelineSpec extends GraftSuite {
     (0L to 79L).foreach(i => assert(got(i) == 0L, s"chain node $i"))
   }
 
+  test("d7 propagation over an empty pair frame keeps every doc its own " +
+      "cluster") {
+    import spark.implicits._
+    val got = Dedup.clustersFromPairs(Seq(3L, 1L).toDF("doc_id"),
+        Seq.empty[(Long, Long)].toDF("doc1", "doc2"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 1L, 3L -> 3L))
+  }
+
+  test("d7 cold job budget: each propagation round's convergence count " +
+      "rides on that round's checkpoint job") {
+    Memo.clearAll()
+    // Measured 35 (2 propagation rounds on this fixture). A separate
+    // isEmpty check per round ran 37
+    val jobs = jobsOf(SparkEntry.queries("d7_dup_clusters")(spark, sf)
+      .collect())
+    info(s"d7 cold: $jobs jobs")
+    assert(jobs <= 35, s"d7 cold ran $jobs jobs")
+    Memo.clearAll()
+  }
+
   test("split-form contamination and incremental dedup equal the two-frame forms") {
     import org.apache.spark.sql.functions.col
     val corpus = docs.where(col("doc_id") >= 100)
